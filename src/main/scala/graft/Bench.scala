@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main — runs the query catalog on SPARK_GRAFT_SF_DIR and prints
   * one JSON line `{"metric":"total","value":N,"unit":"sec","queries":{...},
   * "failed":[...],"sf":...}`.
@@ -81,10 +83,35 @@ package graft
 object Bench {
   private val excluded = Set("q_dedup_ngram_jaccard")
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.size
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+  }
+
+  /** Unmeasured JVM warm-up (codegen compiler, parquet readers, shuffle
+    * machinery) so the first timed run doesn't absorb ~10 s of one-time
+    * cost: a trivial aggregate, then one `noop` write of `mk`. */
+  private[graft] def warmUp(spark: SparkSession, label: String)(mk: => DataFrame): Unit =
+    try {
+      spark.range(1000000).selectExpr("sum(id)").collect()
+      mk.write.mode("overwrite").format("noop").save()
+    } catch { case e: Throwable => System.err.println(s"$label warm-up failed: $e") }
+
+  /** One timed run, shared by every Bench row and [[Dev]] subcommand:
+    * collect the previous run's garbage OUTSIDE the timed window (so a
+    * stop-the-world pause doesn't land on a random victim), then build `mk`
+    * and drive it with a `noop` write. The build is inside the window —
+    * streaming harnesses and fixture-building sources do their real work
+    * there. A failure prints "`label` FAILED" to stderr. Returns
+    * (seconds, succeeded). */
+  private[graft] def timeNoop(label: String)(mk: => DataFrame): (Double, Boolean) = {
+    System.gc()
+    val t0 = System.nanoTime()
+    val ok =
+      try { mk.write.mode("overwrite").format("noop").save(); true }
+      catch { case e: Throwable => System.err.println(s"$label FAILED: $e"); false }
+    ((System.nanoTime() - t0) / 1e9, ok)
   }
 
   /** Committed-baseline drift gate (r10 verdict #1): three straight rounds
@@ -211,13 +238,7 @@ object Bench {
     val runsN = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3)
     val spark = Sessions.get()
-    // Warm up the JVM (codegen compiler, parquet readers, shuffle machinery)
-    // so the first measured query doesn't absorb ~10 s of one-time cost.
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries("q_agg_pricing")(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-    } catch { case _: Throwable => () }
+    warmUp(spark, "[bench]")(SparkEntry.queries("q_agg_pricing")(spark, sfDir))
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => excluded(name) }
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -232,16 +253,7 @@ object Bench {
     val runTotals = (1 to runsN).map { _ =>
       loadPerRun += osBean.getSystemLoadAverage
       catalog.map { case (name, fn) =>
-        // collect the previous query's garbage OUTSIDE the timed window so
-        // a stop-the-world pause doesn't land on a random victim query
-        System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: $e"); false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val (dt, ok) = timeNoop(s"[bench] $name")(fn(spark, sfDir))
         // failed runs are recorded as the -1.0 sentinel (r12 ADVICE): the
         // drift rows' "runs" array promises index alignment with
         // load_avg_per_run, which only holds if every sweep contributes a
@@ -263,17 +275,8 @@ object Bench {
     // only — folding a time-to-failure into the median would fabricate a
     // floor (r9 review). All runs failed → floor 0.0 (the all-failed-query
     // convention) + a nonzero *_failed_runs field the driver can see.
-    def floorOf(tag: String)(mk: => org.apache.spark.sql.DataFrame): (Double, Int, Seq[Double]) = {
-      val rs = (1 to runsN).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try { mk.write.mode("overwrite").format("noop").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $tag FAILED: $e"); false
-          }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
+    def floorOf(tag: String)(mk: => DataFrame): (Double, Int, Seq[Double]) = {
+      val rs = (1 to runsN).map(_ => timeNoop(s"[bench] $tag")(mk))
       val okTimes = rs.collect { case (t, true) => t }
       (if (okTimes.isEmpty) 0.0 else median(okTimes), runsN - okTimes.size,
         rs.map { case (t, ok) => if (ok) t else -1.0 })
@@ -347,15 +350,8 @@ object Bench {
     // retest itself failed.
     val catalogFns = catalog.toMap
     val retests: Map[String, Double] = driftedRows.map { case (k, _, _, _) =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok =
-        try { catalogFns(k)(spark, sfDir).write.mode("overwrite")
-          .format("noop").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] retest $k FAILED: $e"); false
-        }
-      k -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      val (dt, ok) = timeNoop(s"[bench] retest $k")(catalogFns(k)(spark, sfDir))
+      k -> (if (ok) dt else -1.0)
     }.toMap
     // self-adjudicating drift rows (r11 verdict #1): raw sweep-order runs,
     // best-run-over-baseline, the end-of-sweep retest, and the
@@ -372,16 +368,9 @@ object Bench {
     // harness itself.
     val floorDriftRow: Option[String] = baselineOpt.flatMap { case (_, bf, _) =>
       if (joinFloorS > 0.0 && bf > 0.0 && floorDrifted(joinFloorS, bf)) {
-        System.gc()
-        val t0 = System.nanoTime()
-        val retest =
-          try {
-            graft.queries.StreamingQ.harnessJoinFloor(spark, sfDir)
-              .write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] retest stream_join_floor FAILED: $e"); -1.0
-          }
+        val (dt, ok) = timeNoop("[bench] retest stream_join_floor")(
+          graft.queries.StreamingQ.harnessJoinFloor(spark, sfDir))
+        val retest = if (ok) dt else -1.0
         val mob = minOverBase(joinFloorRuns, bf, isJoin = false, 0.0)
         val retestOB = if (retest >= 0.0) Some(retest / bf) else None
         Some("\"stream_join_floor\":{\"base\":" + sec(bf) +

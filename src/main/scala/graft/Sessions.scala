@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *
   *  - UTC session timezone (timestamp determinism vs the DuckDB oracle);
   *  - AQE on (runtime coalescing / skew-join splitting — the 100 TB posture);
-  *  - shuffle partitions sized for the local[32] harness, NOT the 200
+  *  - shuffle partitions sized to the local core count, NOT the 200
   *    default (on a real cluster this is set per-job to ~2-3x total cores);
   *  - `nanosAsLong` so parquet TIMESTAMP(NANOS) columns load as epoch-nano
   *    longs instead of throwing (Spark has no nanos timestamp); TsNorm then
@@ -17,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   *    other encodings fixtures arrive in — at the loader boundary.
   */
 object Sessions {
-  /** Effective local core count — `$SPARK_GRAFT_CPUS`, default 32. */
+  /** Effective local core count — `$SPARK_GRAFT_CPUS`, default the
+    * host's available processors. */
   private def envCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(32)
+      .filter(_ >= 1).getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Default shuffle partitions SCALE WITH the effective core count
     * (r17 verdict #1's wart: a pinned 32 was tuned to the 32-thread

@@ -244,9 +244,17 @@ object MetadataPipeline {
     * re-run of the same input is a no-op across ALL sinks — the A9–A11
     * invariant run(run(x)) == run(x). */
   def runBatch(spark: SparkSession, cfg: IngestionConfig,
-               ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput = {
+               ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput =
+    ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
+
+  /** The sink path both modes share: read gate state, [[process]] one
+    * poll's `zips` (by-name, so the poll is scanned after the state is
+    * read), then append raw, workflow and the dead letters not already
+    * recorded for the same (zip_name, error_code). */
+  private def ingestPoll(spark: SparkSession, cfg: IngestionConfig,
+                         ingestTs: Timestamp)(zips: => DataFrame): PipelineOutput = {
     val state = readState(spark, cfg.warehouseDir)
-    val out = process(spark, readZips(spark, cfg.inputDir), state, cfg, ingestTs)
+    val out = process(spark, zips, state, cfg, ingestTs)
     val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
     val newDl = out.deadLetter
       .join(priorDl.select("zip_name", "error_code"),
@@ -288,17 +296,8 @@ object MetadataPipeline {
       .trigger(trigger)
       .option("checkpointLocation", s"${cfg.warehouseDir}/_checkpoint")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ts = ingestTs.getOrElse(new Timestamp(System.currentTimeMillis()))
-        val state = readState(spark, cfg.warehouseDir)
-        val out = process(spark, batch, state, cfg, ts)
-        val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
-        val newDl = out.deadLetter
-          .join(priorDl.select("zip_name", "error_code"),
-            Seq("zip_name", "error_code"), "left_anti")
-        append(out.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
-        append(out.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
-          s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
-        append(newDl, s"${cfg.warehouseDir}/${Zone.DeadLetter}")
+        ingestPoll(spark, cfg,
+          ingestTs.getOrElse(new Timestamp(System.currentTimeMillis())))(batch)
         ()
       }
       .start()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * wall time and bucket statistics measured by a SparkListener — the
   * numbers every prior round argued from plan shape, now observed. The
   * rendered table lives in SCALE.md (regenerate with
-  * `sbt "runMain graft.ScaleSoakMain"`); ScaleSoakSpec asserts the
+  * `sbt "runMain graft.Dev scale base"`); ScaleSoakSpec asserts the
   * invariants on the same run:
   *
   *  - measured LSH bucket occupancy inside the envelope
@@ -1112,8 +1112,8 @@ object ScaleSoak {
     * (EmbedLshConfig.derive / IvfConfig.forCorpus / the default PqConfig) —
     * nothing re-tuned by hand for the new size. Measures planted recall,
     * bucket/cell occupancy against the derivations' own predictions, and
-    * cap behavior; returns a markdown section [[graft.VecScaleMain]]
-    * appends to SCALE.md. */
+    * cap behavior; returns the markdown section `graft.Dev scale vec`
+    * splices into SCALE.md. */
   def runVectorScale(spark: SparkSession, dir: String,
                      l: Layout = Layout(nVecs = 200000)): String = {
     import org.apache.spark.storage.StorageLevel
@@ -1836,7 +1836,7 @@ object ScaleSoak {
       s"**${r.layout.totalVecs} embeddings** (${r.layout.vecDupCount} planted " +
       s"dup pairs, one ${r.layout.vecMegaSize}-vector identical block) — " +
       "~10x the sf0.1 fixtures, deterministic (pure md5 arithmetic).\n" +
-      "Regenerate: `sbt \"runMain graft.ScaleSoakMain\"`. Invariants are\n" +
+      "Regenerate: `sbt \"runMain graft.Dev scale base\"`. Invariants are\n" +
       "asserted by `ScaleSoakSpec` (tagged `graft.Slow`).\n\n"
     sb ++= s"Derived configs: minhash ${r.minhashCfg.numHashes} hashes x " +
       s"${r.minhashCfg.bands} bands (confirm ${r.minhashCfg.jaccardConfirm}); " +

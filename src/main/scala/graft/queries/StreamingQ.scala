@@ -381,90 +381,32 @@ object StreamingQ {
     * harnessFloor: it measures the harness, not an operator. */
   def harnessJoinFloor(s0: SparkSession, d: String): DataFrame = {
     val s = mbSession(s0)
-    val clicks = mbStream(s, d).filter(col("event_type") === "__floor_none__")
-      .withWatermark("ts", DELAY)
-      .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-        col("user_id"))
-    val purchases = mbStream(s, d).filter(col("event_type") === "__floor_none__")
-      .withWatermark("ts", DELAY)
-      .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-        col("user_id").as("p_user"))
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purch_ts") >= col("click_ts") &&
-        col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"))
+    val joined = intervalJoin(s, d, "__floor_none__", "__floor_none__", "inner")
     runToTable(s, joined, "graft_stream_join_floor", "append")
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Dev diagnostic (r10 verdict #7): run one stream-stream interval join
-    * through the exact multi-batch entry machinery and return the per-batch
-    * progress JSON from the query's own handle — `stateOperators` carries
-    * rows-in-state / updates / eviction and commit times, the numbers that
-    * explain a data-bound gap between join flavors. NOT a catalog entry
-    * (progress JSON is engine telemetry, no oracle exists for it). */
-  def joinStateDiag(s0: SparkSession, d: String, joinType: String): Seq[String] = {
-    val s = mbSession(s0)
-    val clicks = mbStream(s, d).filter(col("event_type") === "click")
+  /** The two-source watermarked interval join behind the five stream-join
+    * entries and [[harnessJoinFloor]]: `clickType` events (click_id,
+    * click_ts, user_id) join `purchaseType` events (purch_id, purch_ts,
+    * p_user) of the same user whose purch_ts lies in [click_ts, click_ts +
+    * 1 day], each side read from its own file-stream source over the
+    * 3-file split and watermarked before the join. */
+  private def intervalJoin(s: SparkSession, d: String, clickType: String,
+                           purchaseType: String, joinType: String): DataFrame = {
+    val clicks = mbStream(s, d).filter(col("event_type") === clickType)
       .withWatermark("ts", DELAY)
       .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
         col("user_id"))
-    val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
+    val purchases = mbStream(s, d).filter(col("event_type") === purchaseType)
       .withWatermark("ts", DELAY)
       .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
         col("user_id").as("p_user"))
-    val joined = clicks.join(purchases,
+    clicks.join(purchases,
       col("user_id") === col("p_user") &&
         col("purch_ts") >= col("click_ts") &&
         col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"),
       joinType)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(s"graft_join_diag_$joinType").toString
-    val q = joined.writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    if (!q.awaitTermination(180000)) { q.stop(); throw new IllegalStateException("diag timeout") }
-    val out = q.recentProgress.toSeq.map(_.json)
-    graft.Fs.deleteRecursively(new java.io.File(ckpt))
-    out
-  }
-
-  /** The q_stream_join dataflow with a DELIBERATE per-output-row busy-burn
-    * in the join's output projection — a planted join-stage slowdown of a
-    * known size, used by [[graft.StreamFloorDemo]] to demonstrate that the
-    * bench's (entry − stream_join_floor_s) subtraction makes an operator
-    * regression visible that the raw entry time hides in fixed harness
-    * cost. The burn is a nanoTime spin (not Thread.sleep: sleep yields the
-    * core, so 32 task threads would overlap their sleeps and the planted
-    * wall cost would vanish) attached via UDF to the matched rows, i.e. it
-    * executes inside the stream-stream join stage, after matching, exactly
-    * where a real eviction/matching regression would burn time. NOT a
-    * catalog entry: it exists to calibrate the harness, not to compute. */
-  def plantedSlowJoin(s0: SparkSession, d: String, burnMicrosPerRow: Int): DataFrame = {
-    val s = mbSession(s0)
-    val burn = udf { (id: Long) =>
-      val until = System.nanoTime() + burnMicrosPerRow * 1000L
-      while (System.nanoTime() < until) {}
-      id >= Long.MinValue  // always true; keeps the filter from folding away
-    }
-    val clicks = mbStream(s, d).filter(col("event_type") === "click")
-      .withWatermark("ts", DELAY)
-      .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-        col("user_id"))
-    val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
-      .withWatermark("ts", DELAY)
-      .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-        col("user_id").as("p_user"))
-    val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("purch_ts") >= col("click_ts") &&
-          col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"))
-      .filter(burn(col("click_id")))
-      .select(col("user_id"), col("click_id"), col("purch_id"),
-        unix_micros(col("click_ts")).as("click_us"),
-        unix_micros(col("purch_ts")).as("purch_us"))
-    runToTable(s, joined, "graft_stream_join_planted", "append")
-      .orderBy(col("user_id"), col("click_id"), col("purch_id"))
   }
 
   val defs: Map[String, Q] = Map(
@@ -672,18 +614,7 @@ object StreamingQ {
     // — so eviction never costs a match, and the oracle is pure SQL.
     "q_stream_join" -> { (s0, d) =>
       val s = mbSession(s0)
-      val clicks = mbStream(s, d).filter(col("event_type") === "click")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-          col("user_id"))
-      val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-          col("user_id").as("p_user"))
-      val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purch_ts") >= col("click_ts") &&
-            col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"))
+      val joined = intervalJoin(s, d, "click", "purchase", "inner")
         .select(col("user_id"), col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("purch_ts")).as("purch_us"))
@@ -700,19 +631,7 @@ object StreamingQ {
     // the same final-watermark arithmetic as the windowed aggregates.
     "q_stream_join_left" -> { (s0, d) =>
       val s = mbSession(s0)
-      val clicks = mbStream(s, d).filter(col("event_type") === "click")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-          col("user_id"))
-      val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-          col("user_id").as("p_user"))
-      val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purch_ts") >= col("click_ts") &&
-            col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"),
-          "left_outer")
+      val joined = intervalJoin(s, d, "click", "purchase", "left_outer")
         .select(col("user_id"), col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("purch_ts")).as("purch_us"))
@@ -727,19 +646,7 @@ object StreamingQ {
     // holdback applies (that is the OUTER join's null-row concern).
     "q_stream_join_semi" -> { (s0, d) =>
       val s = mbSession(s0)
-      val clicks = mbStream(s, d).filter(col("event_type") === "click")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-          col("user_id"))
-      val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-          col("user_id").as("p_user"))
-      val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purch_ts") >= col("click_ts") &&
-            col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"),
-          "left_semi")
+      val joined = intervalJoin(s, d, "click", "purchase", "left_semi")
         .select(col("user_id"), col("click_id"),
           unix_micros(col("click_ts")).as("click_us"))
       runToTable(s, joined, "graft_stream_join_semi", "append")
@@ -753,19 +660,7 @@ object StreamingQ {
     // two-sided watermark arithmetic both outer oracles share).
     "q_stream_join_right" -> { (s0, d) =>
       val s = mbSession(s0)
-      val clicks = mbStream(s, d).filter(col("event_type") === "click")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-          col("user_id"))
-      val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-          col("user_id").as("p_user"))
-      val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purch_ts") >= col("click_ts") &&
-            col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"),
-          "right_outer")
+      val joined = intervalJoin(s, d, "click", "purchase", "right_outer")
         .select(coalesce(col("user_id"), col("p_user")).as("user_id"),
           col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
@@ -790,19 +685,7 @@ object StreamingQ {
     // member of the family where both id columns can be null.
     "q_stream_join_full" -> { (s0, d) =>
       val s = mbSession(s0)
-      val clicks = mbStream(s, d).filter(col("event_type") === "click")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
-          col("user_id"))
-      val purchases = mbStream(s, d).filter(col("event_type") === "purchase")
-        .withWatermark("ts", DELAY)
-        .select(col("event_id").as("purch_id"), col("ts").as("purch_ts"),
-          col("user_id").as("p_user"))
-      val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purch_ts") >= col("click_ts") &&
-            col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 DAY"),
-          "full_outer")
+      val joined = intervalJoin(s, d, "click", "purchase", "full_outer")
         .select(coalesce(col("user_id"), col("p_user")).as("user_id"),
           col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),

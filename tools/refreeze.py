@@ -1,28 +1,33 @@
 #!/usr/bin/env python3
-"""One-shot r18 baseline re-freeze (r17 verdict "next round" item 2b):
+"""Downward-only re-freeze of the bench drift baseline from two clean sweeps.
 
- 1. DOWNWARD-ONLY re-freeze of optimized entries: any entry whose median
-    improved >= 25% vs its frozen value in BOTH clean r18 end-of-round
-    sweeps gets its frozen baseline replaced by the per-entry MIN of the
-    two sweep medians (the r16/r17 convention — the gate must track the
-    optimized code, or a multi-x regression of an optimized entry passes
-    unflagged). Entries that did not clearly improve keep their frozen
-    medians.
- 2. Freeze the five drift_unbaselined entries (new in r17's build span,
-    never baselined) to the MIN of the two sweeps.
- 3. Same downward-only rule for the per-entry stream-join data-bound map
-    and the stream_join_floor_s row.
+    python3 tools/refreeze.py bench_baseline.json sweep1.json sweep2.json
 
-Both sweeps ran on THIS round's box, which measures ~20% slower than the
-r17 driver's — a refrozen value from here can only make the gate looser
-on a faster box (no false flags), never tighter.
+Each sweep is a full Bench JSON line (e.g. a copy of target/bench_last.json)
+and must have run with failed == [].
+
+ 1. Optimized entries: any entry whose median improved >= 25% vs its frozen
+    value in BOTH sweeps gets its frozen baseline replaced by the per-entry
+    MIN of the two sweep medians — the gate must track the optimized code,
+    or a multi-x regression of an optimized entry passes unflagged. Entries
+    that did not clearly improve keep their frozen medians.
+ 2. Unbaselined entries (present in both sweeps, absent from the baseline)
+    are frozen to the MIN of the two sweeps.
+ 3. The same downward-only rule applies to the per-entry stream-join
+    data-bound map and to stream_join_floor_s.
+
+A value frozen on a slower box can only make the gate looser on a faster
+one (no false flags), never tighter.
 """
-import json, sys
+import json
+import sys
 
-repo = "/root/repo"
-base = json.load(open(f"{repo}/bench_baseline.json"))
-s1 = json.load(open("/tmp/bench_r18_end1.json"))
-s2 = json.load(open("/tmp/bench_r18_end2.json"))
+if len(sys.argv) != 4:
+    sys.exit(__doc__)
+baseline_path, sweep1, sweep2 = sys.argv[1:]
+base = json.load(open(baseline_path))
+s1 = json.load(open(sweep1))
+s2 = json.load(open(sweep2))
 assert s1["failed"] == [] and s2["failed"] == [], "sweeps must be clean"
 
 changed, frozen_new = [], []
@@ -57,12 +62,11 @@ if jf_old and jfa and jfb and jfa <= 0.75 * jf_old and jfb <= 0.75 * jf_old:
     changed.append(("stream_join_floor_s", jf_old, base["stream_join_floor_s"]))
 
 base["_provenance"] = base.get("_provenance", "") + (
-    " | r18 OPTIMIZATION re-freeze: entries sped up >=25% in BOTH clean r18 "
-    "end sweeps (sf0.1, 3 runs, failed=[]) re-frozen to the per-entry MIN of "
-    "the two sweep medians; the five r17 drift_unbaselined entries frozen to "
-    "the same MIN (first baselines); downward-only — all other entries keep "
-    "their existing frozen medians.")
-json.dump(base, open(f"{repo}/bench_baseline.json", "w"), indent=1)
+    f" | re-freeze from {sweep1} + {sweep2}: entries sped up >=25% in BOTH "
+    "clean sweeps re-frozen to the per-entry MIN of the two sweep medians; "
+    "unbaselined entries frozen to the same MIN (first baselines); "
+    "downward-only — all other entries keep their existing frozen medians.")
+json.dump(base, open(baseline_path, "w"), indent=1)
 print(f"re-froze {len(changed)} entries:")
 for k, o, n in sorted(changed, key=lambda t: t[1] - t[2], reverse=True):
     print(f"  {o:8.3f} -> {n:7.3f}  {k}")
