@@ -1,8 +1,10 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding merge induction (SURVEY.md §2 B84) — the tokenizer-
   * TRAINING half of the token-counting story (q_text_tokens_bpe counts with
@@ -10,7 +12,7 @@ import org.apache.spark.sql.functions._
   * algorithm of Sennrich et al. 2016 ("Neural Machine Translation of Rare
   * Words with Subword Units").
   *
-  * Exactly the textbook loop, made relational:
+  * The textbook loop, with the merge table held on the driver:
   *  - the corpus collapses to the WORD-FREQUENCY table first (distinct
   *    words with counts — how production BPE trainers run: statistics are
   *    per word type, weighted by frequency, never per corpus occurrence);
@@ -18,27 +20,41 @@ import org.apache.spark.sql.functions._
   *    terminator (merges never cross word boundaries);
   *  - each round: count ALL adjacent symbol pairs (overlapping occurrences
   *    included — the get_stats convention), weighted by word frequency;
-  *    pick the argmax with the deterministic (count DESC, pair ASC)
-  *    tie-break; APPLY it greedily left-to-right.
+  *    collect the argmax to the driver with the deterministic (count DESC,
+  *    pair ASC) tie-break, where it joins the merge table; APPLY it to
+  *    every word with [[mergeWord]].
   *
-  * Greedy left-to-right application is the one step that looks procedural —
-  * and is exactly expressible relationally: for pair (a,b) with a ≠ b two
-  * matches can never overlap (positions i and i+1 both matching forces
-  * a = b), so every match is taken; for a = b, matches inside a run of
-  * identical symbols overlap chain-wise and greedy takes every OTHER one —
-  * the gaps-and-islands rule (group consecutive match positions, keep odd
-  * ranks). Both engines compute the same islands, so the DuckDB oracle
-  * replays every round bit-for-bit.
+  * [[mergeWord]] is the per-word kernel: one greedy left-to-right scan,
+  * `a·b` emitted where `s(i) = a` and `s(i+1) = b` (step 2), `s(i)`
+  * otherwise (step 1). Inside a run of identical symbols the matches of
+  * (a, a) overlap chain-wise and the scan takes every OTHER one — the
+  * gaps-and-islands rule the DuckDB oracle replays relationally, so both
+  * engines reach the same table bit-for-bit. A batch of pairwise-disjoint
+  * pairs ([[mergesBatched]]) is applied one pair after another on the
+  * word, which equals the simultaneous rewrite.
+  *
+  * Per round the vocabulary table is rewritten by ONE typed map
+  * ([[mergePass]]) materialized with [[Materialize.cut]] — fresh-leaf
+  * lineage, the session's durability mode, an explicit release of the
+  * previous round's blocks — and counted by [[pairCounts]]
+  * aggregate with its one-row (or batchCap+1-row) collect. The relational
+  * form of the rewrite (posexplode, two windows, two self-joins and a
+  * collect_list regroup: about 8 jobs of KB-sized stages per round) lives
+  * in the test sources as the kernel's cross-check.
   *
   * Scale posture (100 TB): the corpus is touched ONCE (the word-frequency
   * aggregate — partial+final counts); every round after that runs on the
   * VOCABULARY (word types × ~word-length symbol rows — millions of rows for
   * a web corpus, not billions), the per-round argmax collect is ONE row,
-  * and the per-word windows partition on the word (bounded ≤ word length).
-  * This is why real BPE trainers are feasible at all — and the same
-  * structure here keeps every round a small shuffle over vocab-sized data.
+  * and the rewrite is a map over that table with no shuffle. This is why
+  * real BPE trainers are feasible at all.
   */
 object Bpe {
+
+  /** Most merges [[applyMerges]] ships to the executors in one broadcast.
+    * Production tokenizers learn 32k–256k merges; a table past 2^20 is an
+    * input bug, and refusing it beats an executor OOM. */
+  val MaxLearnedMerges: Int = 1 << 20
 
   /** (word, f, s: array<string>) — initial symbol table from the corpus.
     * Empty tokens are excluded: Spark's `sequence(1, 0)` DESCENDS instead
@@ -69,39 +85,59 @@ object Bpe {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(sum(col("f")).as("cnt"))
 
-  /** Apply ONE merge (a0, b0) greedily left-to-right to every word. */
-  def applyMerge(syms: DataFrame, a0: String, b0: String): DataFrame = {
-    val byI = Window.partitionBy(col("word")).orderBy(col("i"))
-    val ex = syms.select(col("word"), col("f"),
-      posexplode(col("s")).as(Seq("i", "sym")))
-    val matches = ex
-      .withColumn("nxt", lead(col("sym"), 1).over(byI))
-      .filter(col("sym") === a0 && col("nxt") === b0)
-      .withColumn("rn", row_number().over(byI))
-      .withColumn("grp", col("i") - col("rn"))
-      .withColumn("rn2", row_number().over(
-        Window.partitionBy(col("word"), col("grp")).orderBy(col("i"))))
-      .filter(col("rn2") % 2 === 1)
-      .select(col("word"), col("i"))
-    val starts = matches.withColumn("chosen", lit(true))
-    val absorbed = matches.select(col("word"), (col("i") + 1).as("i"),
-      lit(true).as("absorbed"))
-    ex.join(starts, Seq("word", "i"), "left")
-      .join(absorbed, Seq("word", "i"), "left")
-      .filter(col("absorbed").isNull)
-      .select(col("word"), col("f"), col("i"),
-        when(col("chosen"), lit(a0 + b0)).otherwise(col("sym")).as("sym"))
-      .groupBy(col("word"), col("f"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("sym")))),
-        x => x.getField("sym")).as("s"))
+  /** The greedy left-to-right merge of (a, b) over one word's symbols:
+    * scanning i forward, `a·b` where `s(i) = a && s(i+1) = b` (then i += 2),
+    * `s(i)` otherwise (i += 1). Returns `s` itself when nothing matches. */
+  private[operators] def mergeWord(s: Array[String], a: String,
+                                   b: String): Array[String] = {
+    val n = s.length
+    var i = 0
+    while (i < n - 1 && !(s(i) == a && s(i + 1) == b)) i += 1
+    if (i >= n - 1) s
+    else {
+      val ab = a + b
+      val out = new Array[String](n - 1)
+      System.arraycopy(s, 0, out, 0, i)
+      var j = i
+      while (i < n) {
+        if (i < n - 1 && s(i) == a && s(i + 1) == b) { out(j) = ab; i += 2 }
+        else { out(j) = s(i); i += 1 }
+        j += 1
+      }
+      java.util.Arrays.copyOf(out, j)
+    }
+  }
+
+  /** One vocabulary pass: every word's symbols rewritten by `batch`, pair
+    * after pair, with [[mergeWord]]. For a pairwise-disjoint batch (the
+    * [[mergesBatched]] precondition) this equals the simultaneous rewrite.
+    * Lazy; the training loop materializes it with [[Materialize.cut]]. */
+  private[operators] def mergePass(syms: DataFrame,
+                                   batch: Seq[(String, String)]): DataFrame = {
+    val pairs = batch.toArray
+    foldPass(syms, () => pairs)
+  }
+
+  /** Every word's symbols folded through `pairs()` in order with
+    * [[mergeWord]] — one typed map, no shuffle. `pairs` is called on the
+    * executors, so it can read a broadcast. */
+  private def foldPass(syms: DataFrame,
+                       pairs: () => Array[(String, String)]): DataFrame = {
+    val spark = syms.sparkSession
+    import spark.implicits._
+    syms.select(col("word"), col("f"), col("s")).as[(String, Long, Array[String])]
+      .map { case (w, f, s) =>
+        (w, f, pairs().foldLeft(s) { case (t, (a, b)) => mergeWord(t, a, b) })
+      }
+      .toDF("word", "f", "s")
   }
 
   /** Train `rounds` merges; returns (round, sym_a, sym_b, cnt) — the merge
     * table, in induction order. Each round's argmax is a ONE-row collect
     * (the O(model) driver state); ties break (cnt DESC, a ASC, b ASC). */
   def merges(docs: DataFrame, rounds: Int): DataFrame = {
-    val (tbl, _, release) = trainLoop(docs, rounds)
-    release() // merge table is driver-side; the vocab storage goes now
+    val (tbl, _, vocab) = induce(docs, rounds, batchCap = 1, applyLast = false)
+    vocab.release() // the merge table is driver-side; the vocab goes now
     tbl
   }
 
@@ -111,49 +147,14 @@ object Bpe {
     * Re-segmenting a fresh symbol table with the returned merge list via
     * [[applyMerges]] produces the identical table (BpeSpec pins the
     * equality) — returning the training-side state just avoids paying the
-    * application twice. The returned symbol table is CHECKPOINT-BACKED
-    * ([[Materialize.cut]] — executor blocks in default mode, checkpoint
-    * files in reliable mode); its storage is freed when the ContextCleaner
-    * GCs the frame. Callers that only want the merge table use [[merges]],
-    * which frees it eagerly. */
-  def mergesWithVocab(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
-    val (tbl, syms, _) = trainLoop(docs, rounds)
-    (tbl, syms)
-  }
-
-  private def trainLoop(docs: DataFrame,
-                        rounds: Int): (DataFrame, DataFrame, () => Unit) = {
-    require(rounds >= 1, s"rounds ($rounds) must be >= 1")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var syms = symbolTable(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 0's table is persist-backed; later rounds are checkpoint-backed
-    // and need their Cut.release handle — unpersist() on the re-wrapped
-    // frame is a no-op (r15 advice)
-    var release: () => Unit = () => { syms.unpersist(blocking = false); () }
-    val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    for (r <- 1 to rounds) {
-      val best = pairCounts(syms)
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(1).collect()
-      require(best.nonEmpty, s"round $r: no pairs left to merge")
-      val (a0, b0, c0) =
-        (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-      out += ((r, a0, b0, c0))
-      // Materialize.cut, not persist: applyMerge references its input
-      // several times, so the LOGICAL plan multiplies ~4x per round and at
-      // 8+ rounds the un-truncated lineage OOMs the driver just
-      // STRINGIFYING the plan — persistence alone stops recompute, only
-      // checkpointing stops plan growth, and only the fresh-leaf re-wrap
-      // stops the size-estimate BigInt blow-up (see [[Materialize]]) — the
-      // production-32k-merge regime mergesBatched exists for makes both
-      // non-optional
-      val next = Materialize.cut(applyMerge(syms, a0, b0)) // eager
-      release() // previous round's storage, safe now next is materialized
-      syms = next.df
-      release = next.release
-    }
-    (out.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), syms, release)
+    * application twice. The symbol table comes back as a
+    * [[Materialize.Cut]]: checkpoint-backed (executor blocks in default
+    * mode, checkpoint files in reliable mode), and the caller calls its
+    * `release()` once it has read the table. Callers that only want the
+    * merge table use [[merges]]. */
+  def mergesWithVocab(docs: DataFrame, rounds: Int): (DataFrame, Materialize.Cut) = {
+    val (tbl, _, vocab) = induce(docs, rounds, batchCap = 1, applyLast = true)
+    (tbl, vocab)
   }
 
   /** Corpus token totals per training round — the COMPRESSION CURVE each
@@ -164,77 +165,35 @@ object Bpe {
     * token count of the corpus re-segmented with the merges so far).
     * Returns (round, total_tokens) for rounds 0..`rounds`. */
   def compressionCurve(docs: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    def total(s: DataFrame): Long =
-      s.agg(sum(col("f") * size(col("s")))).head().getLong(0)
-    var syms = symbolTable(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = scala.collection.mutable.ArrayBuffer((0, total(syms)))
-    for (r <- 1 to rounds) {
-      val best = pairCounts(syms)
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(1).collect()
-      require(best.nonEmpty, s"round $r: no pairs left to merge")
-      val next = applyMerge(syms, best(0).getString(0), best(0).getString(1))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out += ((r, total(next)))
-      syms.unpersist(blocking = false)
-      syms = next
-    }
-    syms.unpersist(blocking = false)
-    out.toSeq.toDF("round", "total_tokens")
+    val totals = ArrayBuffer[Long]()
+    val (_, _, vocab) = induce(docs, rounds, batchCap = 1, applyLast = true,
+      observe = s => totals += s.agg(sum(col("f") * size(col("s")))).head().getLong(0))
+    vocab.release()
+    totals.zipWithIndex.map { case (t, r) => (r, t) }.toSeq.toDF("round", "total_tokens")
   }
 
   /** Apply a LEARNED merge table (induction order) to a symbol table — the
     * tokenizer's APPLY side (Sennrich 2016): a corpus is re-segmented with
-    * the frozen merge list, no pair statistics involved. Same greedy
-    * gaps-and-islands rule per merge; on the training corpus the result
-    * equals the training-side state [[mergesWithVocab]] returns. */
-  def applyMerges(syms: DataFrame, learned: Seq[(String, String)]): DataFrame =
-    learned.foldLeft(syms) { case (t, (a, b)) => applyMerge(t, a, b) }
-
-  /** Apply a BATCH of pairwise-disjoint merges in ONE vocabulary pass —
-    * the rewrite kernel of [[mergesBatched]]. Precondition (the caller's
-    * prefix rule establishes it): no two batch pairs share a symbol and no
-    * pair contains another's concatenation. Under it, match SITES of
-    * different pairs can never overlap — positions i, i+1 matching pairs
-    * P, Q forces P's right symbol = Q's left symbol — so the simultaneous
-    * rewrite is well-defined and equals applying the batch sequentially in
-    * any order. Same gaps-and-islands greedy rule as [[applyMerge]], with
-    * the run grouping keyed per (word, pair): a same-symbol run only ever
-    * contains ONE pair's matches (a run of c's matches only (c,c)), so the
-    * per-pair islands are exactly the single-pair islands. */
-  def applyMergeBatch(syms: DataFrame, batch: Seq[(String, String)]): DataFrame = {
-    require(batch.nonEmpty, "applyMergeBatch on an empty batch")
-    val spark = syms.sparkSession
-    import spark.implicits._
-    val byI = Window.partitionBy(col("word")).orderBy(col("i"))
-    val byPair = Window.partitionBy(col("word"), col("pa"), col("pb"))
-      .orderBy(col("i"))
-    val ex = syms.select(col("word"), col("f"),
-      posexplode(col("s")).as(Seq("i", "sym")))
-    val pdf = batch.toDF("pa", "pb")
-    val matches = ex
-      .withColumn("nxt", lead(col("sym"), 1).over(byI))
-      .join(broadcast(pdf), col("sym") === col("pa") && col("nxt") === col("pb"))
-      .withColumn("rn", row_number().over(byPair))
-      .withColumn("grp", col("i") - col("rn"))
-      .withColumn("rn2", row_number().over(
-        Window.partitionBy(col("word"), col("pa"), col("pb"), col("grp"))
-          .orderBy(col("i"))))
-      .filter(col("rn2") % 2 === 1)
-      .select(col("word"), col("i"), concat(col("pa"), col("pb")).as("merged"))
-    val absorbed = matches.select(col("word"), (col("i") + 1).as("i"),
-      lit(true).as("absorbed"))
-    ex.join(matches, Seq("word", "i"), "left")
-      .join(absorbed, Seq("word", "i"), "left")
-      .filter(col("absorbed").isNull)
-      .select(col("word"), col("f"), col("i"),
-        coalesce(col("merged"), col("sym")).as("sym"))
-      .groupBy(col("word"), col("f"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("sym")))),
-        x => x.getField("sym")).as("s"))
+    * the frozen merge list, no pair statistics involved. The table is
+    * broadcast (refused past [[MaxLearnedMerges]]) and every word folds
+    * through it IN ORDER with [[mergeWord]], exactly as sequential training
+    * applied it — not the "lowest-ranked pair first" loop of GPT-2-style
+    * tokenizers, which can fire a merge after a later one re-creates its
+    * left symbol (BpeSpec keeps the counterexample). Returned materialized
+    * ([[Materialize.cutFinal]]); on the training corpus it equals the
+    * training-side state [[mergesWithVocab]] returns. */
+  def applyMerges(syms: DataFrame, learned: Seq[(String, String)]): DataFrame = {
+    require(learned.length <= MaxLearnedMerges,
+      s"learned merge table has ${learned.length} merges, over the broadcast " +
+        s"cap of $MaxLearnedMerges")
+    val bc = syms.sparkSession.sparkContext.broadcast(learned.toArray)
+    val out = Materialize.cutFinal(foldPass(syms, () => bc.value))
+    // unpersist, not destroy: with the cutFinal A/B knob on, `out` is still
+    // lazy and re-reads the broadcast (re-sent on demand)
+    bc.unpersist(blocking = false)
+    out
   }
 
   /** BATCHED merge induction (r14 verdict #2) — the scalable form of
@@ -270,7 +229,7 @@ object Bpe {
     *
     * Per round: one pair-count aggregate, ONE bounded collect (the top
     * batchCap+1 ranked rows — O(model), the [[merges]] argmax collect
-    * widened), one [[applyMergeBatch]] vocabulary pass. Recorded counts
+    * widened), one [[mergePass]] vocabulary pass. Recorded counts
     * are snapshot counts, which rule 1 proves equal the sequential
     * at-turn counts. Returns (round = INDUCTION ORDER, sym_a, sym_b, cnt)
     * — identical schema and contents to [[merges]]. */
@@ -283,18 +242,36 @@ object Bpe {
     * whole point. */
   def mergesBatchedWithRounds(docs: DataFrame, totalMerges: Int,
                               batchCap: Int): (DataFrame, Int) = {
-    require(totalMerges >= 1, s"totalMerges ($totalMerges) must be >= 1")
     require(batchCap >= 1, s"batchCap ($batchCap) must be >= 1")
+    val (tbl, rounds, vocab) = induce(docs, totalMerges, batchCap, applyLast = false)
+    vocab.release()
+    (tbl, rounds)
+  }
+
+  /** The one induction loop. Each round collects the top `batchCap + 1`
+    * ranked pairs, keeps the exact-safe prefix ([[mergesBatched]]; with
+    * `batchCap = 1` it is the single argmax, i.e. sequential training),
+    * and rewrites the vocabulary with one [[mergePass]] cut. The last
+    * round's rewrite feeds nothing unless `applyLast`. `observe` sees the
+    * round-0 table and every rewritten one. Returns the merge table, the
+    * round count and the final symbol table with its release handle. */
+  private def induce(docs: DataFrame, totalMerges: Int, batchCap: Int,
+                     applyLast: Boolean, observe: DataFrame => Unit = _ => ())
+      : (DataFrame, Int, Materialize.Cut) = {
+    require(totalMerges >= 1, s"merges ($totalMerges) must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    var syms = symbolTable(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var release: () => Unit = () => { syms.unpersist(blocking = false); () }
-    val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    val syms0 = symbolTable(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    // round 0's table is persist-backed; later rounds are checkpoint-backed
+    // and need their Cut.release handle — unpersist() on the re-wrapped
+    // frame is a no-op (r15 advice)
+    var vocab = Materialize.Cut(syms0, () => { syms0.unpersist(blocking = false); () })
+    observe(vocab.df)
+    val out = ArrayBuffer[(Int, String, String, Long)]()
     var rounds = 0
     while (out.length < totalMerges) {
       rounds += 1
-      val top = pairCounts(syms)
+      val top = pairCounts(vocab.df)
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(batchCap + 1).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -314,18 +291,16 @@ object Bpe {
       m = math.min(m, totalMerges - out.length)
       val batch = top.take(m)
       batch.foreach { case (a, b, c) => out += ((out.length + 1, a, b, c)) }
-      // Materialize.cut per round — truncates the multiplying
-      // applyMergeBatch lineage AND the compounding size estimates (see
-      // the trainLoop comment and the Materialize scaladoc), with the
-      // explicit release freeing each round's blocks once the next round
-      // is materialized
-      val next = Materialize.cut(
-        applyMergeBatch(syms, batch.map(t => (t._1, t._2)).toSeq)) // eager
-      release()
-      syms = next.df
-      release = next.release
+      if (out.length < totalMerges || applyLast) {
+        // Materialize.cut, not persist: the fresh leaf keeps every round's
+        // plan one node deep and its size estimate from compounding (see
+        // [[Materialize]]) at production merge counts
+        val next = Materialize.cut(mergePass(vocab.df, batch.map(t => (t._1, t._2)).toSeq))
+        vocab.release() // previous round's storage, safe now next is materialized
+        vocab = next
+        observe(vocab.df)
+      }
     }
-    release()
-    (out.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), rounds)
+    (out.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), rounds, vocab)
   }
 }

@@ -1359,13 +1359,15 @@ object ScaleSoak {
     var pairRows = 0L
     var best: (String, String, Long) = ("", "", 0L)
     val (_, rndM) = measure(spark, "BPE round 1 (stats + argmax + apply)",
-      "pair counts over the vocab, 1-row argmax collect, greedy apply") {
+      "pair counts over the vocab, 1-row argmax collect, typed merge pass cut") {
       val pc = Bpe.pairCounts(syms).persist(StorageLevel.MEMORY_AND_DISK)
       pairRows = pc.count()
       val b = pc.orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
         .collect()(0)
       best = (b.getString(0), b.getString(1), b.getLong(2))
-      val applied = Bpe.applyMerge(syms, best._1, best._2).count()
+      val next = Materialize.cut(Bpe.mergePass(syms, Seq(best._1 -> best._2)))
+      val applied = next.df.count()
+      next.release()
       pc.unpersist()
       applied
     }
@@ -1378,13 +1380,15 @@ object ScaleSoak {
       "2500-doc identical mega family). The CMS prefilter must change " +
       s"bytes, not results: except-diff rows both ways = **$diffs** " +
       "(ScrubPrefilterSpec pins the same equality on the fixtures). " +
-      f"Measured honestly: the prefilter cuts shuffle " +
+      f"Measured at local[${spark.sparkContext.defaultParallelism}]: the " +
+      f"prefilter cuts shuffle " +
       f"${exM.shuffleWriteMB}%.0f → ${preM.shuffleWriteMB}%.0f MB " +
       f"(${exM.shuffleWriteMB / math.max(1e-9, preM.shuffleWriteMB)}%.1fx) " +
-      f"but COSTS wall time here (${exM.seconds}%.0f → ${preM.seconds}%.0f s): " +
-      "local[32] shuffles through memory/SSD, so saved bytes buy nothing, " +
-      "while the CMS build treeAggregate-merges a 64 MB sketch per task — " +
-      "the dominant cost at 105k docs. The trade is designed for the " +
+      f"and moves wall time ${exM.seconds}%.0f → ${preM.seconds}%.0f s. " +
+      "Local shuffles go through memory/SSD, so saved bytes buy little " +
+      "here, while the CMS build treeAggregate-merges a 64 MB sketch per " +
+      "task (at local[32] that build dominated: 14 → 213 s in r12). The " +
+      "trade is designed for the " +
       "regime the HeavyHitters scaladoc names: NETWORK-bound shuffles and " +
       "a sketch persisted once per ingest batch (passes 0+1 amortized), " +
       "where the byte cut is the bottleneck cut. BPE's per-round cost at " +
@@ -1460,8 +1464,9 @@ object ScaleSoak {
     val sb = new StringBuilder
     sb ++= s"\n## Batched BPE soak (r14): $totalMerges merges, $nWords-type vocabulary\n\n"
     sb ++= s"Corpus: $nRows occurrence rows over $nWords deterministic word " +
-      "types (Zipf-ish frequencies). Sequential training pays one argmax " +
-      "collect + one vocabulary rewrite PER MERGE; the batched form " +
+      "types (Zipf-ish frequencies), measured at " +
+      s"local[${spark.sparkContext.defaultParallelism}]. Sequential training " +
+      "pays one argmax collect + one vocabulary rewrite PER MERGE; the batched form " +
       "(exact-safe disjoint prefixes — proof on Bpe.mergesBatched, " +
       "theorem pinned in BpeSpec and on this soak corpus below) pays " +
       "them per ROUND.\n\n"

@@ -43,6 +43,21 @@ import org.apache.spark.sql.functions._
   */
 object UnigramLm {
 
+  /** Most pieces a trained model may hold: the weight map is collected to
+    * the driver and broadcast every EM round and to [[viterbiSegment]].
+    * 2^20 is SentencePiece's default seed-vocabulary size (1M); a
+    * candidate set past it means minCount is too low for the corpus. */
+  val MaxModelPieces: Int = 1 << 20
+
+  /** The collected (piece, w) rows as the driver-side weight map, refused
+    * past [[MaxModelPieces]]. */
+  private def modelMap(rows: Array[org.apache.spark.sql.Row]): Map[String, Long] = {
+    require(rows.length <= MaxModelPieces,
+      s"UnigramLm model has ${rows.length} pieces, over the broadcast cap of " +
+        s"$MaxModelPieces")
+    rows.iterator.map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
   /** (word, f) — word types with frequencies, the one corpus pass.
     * Words longer than `maxWordLen` are excluded (fan-out refusal). */
   def wordFreq(docs: DataFrame, maxWordLen: Int): DataFrame =
@@ -94,7 +109,8 @@ object UnigramLm {
     * rounds, ONE distributed pass per round): the piece-weight table `w`
     * is O(model) — the candidate vocabulary (substrings with mass ≥
     * minCount, plus single chars), the exact table SentencePiece holds in
-    * memory — so each EM round collects it to the driver and runs as ONE
+    * memory — so each EM round collects it to the driver (refused past
+    * [[MaxModelPieces]]), broadcasts it, and runs as ONE
     * typed flatMap over the persisted WORD-TYPE table (per word: code-
     * point pieces via [[cpPieces]], per position the in-vocab candidates,
     * `share = w·1e6 DIV Σw` and `f·share` emissions — term-for-term the
@@ -122,15 +138,15 @@ object UnigramLm {
         .groupBy(col("piece")).agg(sum(col("f")).as("tf"))
       val w0 = tf.filter(col("tf") >= minCount || length(col("piece")) === 1)
         .select(col("piece"), col("tf").as("w"))
-      // O(model) driver collect between rounds (the Pq codebook shape)
-      def toMap(df: DataFrame): Map[String, Long] =
-        df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      var wMap = toMap(w0)
+      // O(model) driver collect between rounds (the Pq codebook shape),
+      // shipped to the executors as a broadcast
+      var wMap = modelMap(w0.collect())
       var out: DataFrame = null
       for (r <- 1 to emRounds) {
-        val m = wMap
+        val bc = s.sparkContext.broadcast(wMap)
         val next = typedWords
           .flatMap { case (word, f) =>
+            val m = bc.value
             val ps = cpPieces(word, maxPieceLen)
             // group by position; candidate = piece present in the model
             val byPos = ps.groupBy(_._1)
@@ -153,7 +169,13 @@ object UnigramLm {
               .as("w"))
         // intermediate rounds feed the next round's driver model; the
         // final round is returned materialized WITHOUT a second execution
-        if (r < emRounds) wMap = toMap(next) else out = Materialize.cutFinal(next)
+        if (r < emRounds) { wMap = modelMap(next.collect()); bc.destroy() }
+        else {
+          out = Materialize.cutFinal(next)
+          // unpersist, not destroy: with the cutFinal A/B knob on, `out`
+          // is still lazy and re-reads the broadcast (re-sent on demand)
+          bc.unpersist(blocking = false)
+        }
       }
       out
     } finally words.unpersist(blocking = false)
@@ -190,9 +212,10 @@ object UnigramLm {
     val s = docs.sparkSession
     import s.implicits._
     // the trained weights are O(model) — collect once (the Pq dtState
-    // precedent) and run the WHOLE per-word DP locally: edge (p → p+|pc|)
-    // costs (1 + costScale DIV w)·64 + 1 for every in-vocab piece with
-    // w ≥ 1 starting at p, and the forward min over positions computes
+    // precedent; capped and broadcast like train's rounds) and run the
+    // WHOLE per-word DP locally: edge (p → p+|pc|) costs
+    // (1 + costScale DIV w)·64 + 1 for every in-vocab piece with w ≥ 1
+    // starting at p, and the forward min over positions computes
     // exactly the min-plus-doubling closure's dist(0, len) — shortest
     // path with positive int64 edge costs, same integers, no float. The
     // r17 relational DP ran ceil(log2(maxLen)) doubling rounds of
@@ -203,11 +226,9 @@ object UnigramLm {
     // throw (r14 ADVICE). Single chars are clamped >= 1 by train(), so
     // every position keeps an edge — segmentation never fails. Mirrored
     // in the oracle's edges CTE.
-    val wMap: Map[String, Long] =
-      train(docs, maxPieceLen, minCount, emRounds, maxWordLen)
-        .collect().iterator
-        .map(r => r.getString(0) -> r.getLong(1))
-        .filter(_._2 >= 1L).toMap
+    val wMap = s.sparkContext.broadcast(
+      modelMap(train(docs, maxPieceLen, minCount, emRounds, maxWordLen).collect())
+        .filter(_._2 >= 1L))
     val words = wordFreq(docs, maxWordLen)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -218,6 +239,7 @@ object UnigramLm {
       val out = Materialize.cutFinal(
         words.select(col("word"), col("f")).as[(String, Long)]
           .flatMap { case (word, f) =>
+            val m = wMap.value
             val cp = word.codePointCount(0, word.length)
             val offs = new Array[Int](cp + 1)
             var i = 0
@@ -233,7 +255,7 @@ object UnigramLm {
                 var len = 1
                 val maxL = math.min(maxPieceLen, cp - p)
                 while (len <= maxL) {
-                  wMap.get(word.substring(offs(p), offs(p + len))) match {
+                  m.get(word.substring(offs(p), offs(p + len))) match {
                     case Some(wv) =>
                       val c = (1L + costScale / wv) * 64L + 1L
                       val q = p + len
@@ -252,6 +274,7 @@ object UnigramLm {
             else Some((word, f, combined % 64L, combined / 64L))
           }
           .toDF("word", "f", "n_tokens", "cost"))
+      wMap.unpersist(blocking = false) // not destroy: see train's last round
       out
     } finally words.unpersist(blocking = false)
   }

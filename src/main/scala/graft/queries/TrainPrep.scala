@@ -670,8 +670,8 @@ object TrainPrep {
     },
 
     // B84 BPE merge induction (graft.operators.Bpe — scale posture, the
-    // relational greedy-application argument, and the Sennrich 2016
-    // citation documented there): learn the first 3 merge-table rows from
+    // greedy-application kernel, and the Sennrich 2016 citation
+    // documented there): learn the first 3 merge-table rows from
     // the corpus's word-frequency table. The oracle replays ALL THREE
     // rounds — pair statistics, deterministic argmax, and the
     // gaps-and-islands greedy application — as chained CTEs, so every
@@ -844,17 +844,18 @@ object TrainPrep {
       val docs = Tables.documents(s, d)
       val (_, vocabSyms) =
         graft.operators.Bpe.mergesWithVocab(docs, rounds = 3)
-      // mergesWithVocab returns the symbol table PERSISTED; materialize the
-      // per-word token counts (vocabulary-scale, a strictly smaller
-      // projection) via an eager localCheckpoint and release the training
-      // cache NOW (r12 ADVICE) — a persist would pin it for the session's
-      // lifetime across every bench sweep, whereas checkpoint blocks are
-      // reclaimed by the ContextCleaner once the returned plan is dropped.
+      // mergesWithVocab returns the symbol table as a Materialize.Cut;
+      // materialize the per-word token counts (vocabulary-scale, a strictly
+      // smaller projection) via an eager localCheckpoint and release the
+      // training table's blocks NOW (r12 ADVICE) — a persist would pin it
+      // for the session's lifetime across every bench sweep, whereas
+      // checkpoint blocks are reclaimed by the ContextCleaner once the
+      // returned plan is dropped.
       val vocab = try {
-        vocabSyms
+        vocabSyms.df
           .select(col("word"), size(col("s")).cast("long").as("toks_w"))
           .localCheckpoint(true)
-      } finally vocabSyms.unpersist(blocking = false)
+      } finally vocabSyms.release()
       docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) >= 1)
         .join(vocab, Seq("word"))
@@ -865,7 +866,7 @@ object TrainPrep {
     })
 
   /** One BPE oracle round: s{r-1} → s{r} (mirrors Bpe.pairCounts +
-    * Bpe.applyMerge — pair stats with overlaps, argmax with the
+    * Bpe.mergeWord — pair stats with overlaps, argmax with the
     * (cnt DESC, a, b) tie-break, gaps-and-islands greedy application).
     * range(64) is a constant table bound (DuckDB's range table function
     * refuses lateral column args); symbol sequences are ≤ word length + 1

@@ -1,6 +1,10 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
 import graft.SparkSpecBase
 
 /** graft.operators.Bpe (SURVEY.md §2 B84): the merge loop must follow the
@@ -38,27 +42,31 @@ class BpeSpec extends SparkSpecBase {
     // 2 → [aa,aa,</w>]; "aaa" = [a,a,a,</w>]: matches 0,1 → take 0 →
     // [aa,a,</w>]
     val syms = Bpe.symbolTable(docsDf("aaaa aaa"))
-    val out = Bpe.applyMerge(syms, "a", "a")
+    val out = BpeSpec.applyMerge(syms, "a", "a")
       .collect().map(r => r.getString(0) -> r.getSeq[String](2)).toMap
     assert(out("aaaa") === Seq("aa", "aa", "</w>"))
     assert(out("aaa") === Seq("aa", "a", "</w>"))
+    assert(Bpe.mergeWord(Array("a", "a", "a", "a", "</w>"), "a", "a").toSeq ===
+      Seq("aa", "aa", "</w>"))
+    assert(Bpe.mergeWord(Array("a", "a", "a", "</w>"), "a", "a").toSeq ===
+      Seq("aa", "a", "</w>"))
   }
 
   test("applying the learned merge table reproduces the training-side symbol table") {
     // r11 verdict #4: the tokenizer APPLY path (a fresh symbol table
     // re-segmented with the frozen merge list via applyMerges) must equal
     // the state training itself reached — two different code paths
-    // (incremental persist-per-round vs one lazy fold) over the same rule.
+    // (one cut per training round vs one in-order fold pass) over the same rule.
     val docs = docsDf("aaab aaab aab to to go")
     val (tbl, trained) = Bpe.mergesWithVocab(docs, rounds = 3)
     val learned = tbl.orderBy(col("round")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     val applied = Bpe.applyMerges(Bpe.symbolTable(docs), learned)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getSeq[String](2)))).toMap
-    val t = trained
+    val t = trained.df
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getSeq[String](2)))).toMap
     assert(applied === t)
-    trained.unpersist(blocking = false)
+    trained.release()
   }
 
   test("learned-merge tokenization: hand-derived segmentations") {
@@ -66,10 +74,10 @@ class BpeSpec extends SparkSpecBase {
     // aaab: [a,a,a,b,</w>] -> [aa,a,b,</w>] -> [aa,a,b</w>] -> [aa,ab</w>]
     // aab:  [a,a,b,</w>]   -> [aa,b,</w>]   -> [aa,b</w>]  -> (aa != a: stop)
     val (_, vocab) = Bpe.mergesWithVocab(docsDf("aaab aaab aab"), rounds = 3)
-    val m = vocab.collect().map(r => r.getString(0) -> r.getSeq[String](2)).toMap
+    val m = vocab.df.collect().map(r => r.getString(0) -> r.getSeq[String](2)).toMap
     assert(m("aaab") === Seq("aa", "ab</w>"))
     assert(m("aab") === Seq("aa", "b</w>"))
-    vocab.unpersist(blocking = false)
+    vocab.release()
   }
 
   test("compression curve: hand-derived corpus token totals per round") {
@@ -149,5 +157,169 @@ class BpeSpec extends SparkSpecBase {
     assert(rounds < 8,
       s"batching never coalesced on the fixture (rounds=$rounds of 8 " +
         "merges) — the catalog entry's batching is vacuous")
+    // job-count guard: the bounds are the counts the typed rounds take on
+    // this fixture (the relational rewrite took 23 and 70); a return to a
+    // multi-stage rewrite per round fails here, not only in the bench
+    val seqJobs = jobs(Bpe.merges(docs, rounds = 3).collect())
+    assert(seqJobs <= 10, s"Bpe.merges(docs, 3) ran $seqJobs jobs, bound 10")
+    val batJobs = jobs(Bpe.mergesBatched(docs, totalMerges = 8, batchCap = 4).collect())
+    assert(batJobs <= 22, s"Bpe.mergesBatched(docs, 8, 4) ran $batJobs jobs, bound 22")
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained both sides). */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    org.apache.spark.GraftBusFlush.flush(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftBusFlush.flush(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  /** (word → (f, s)) of a symbol table, for whole-table comparisons. */
+  private def table(df: DataFrame): Map[String, (Long, Seq[String])] =
+    df.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getSeq[String](2)))).toMap
+
+  test("property: the typed merge pass equals the relational rewrite on random corpora") {
+    // 2–3 letter alphabets give long runs of one letter (the a = b islands)
+    // and symbols re-created by different merges (a·ab and aa·b are both
+    // aab); every round compares the WHOLE (word, f, s) table
+    val s = spark
+    import s.implicits._
+    for (seed <- 1 to 6) {
+      val rnd = new scala.util.Random(seed)
+      val alphabet = "abc".take(2 + seed % 2)
+      val words = Seq.fill(60)(
+        Seq.fill(1 + rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+      var cur = table(Bpe.symbolTable(docsDf(words.mkString(" "))))
+      def df = cur.toSeq.map { case (w, (f, sy)) => (w, f, sy) }.toDF("word", "f", "s")
+      def pairs = cur.values.toSeq.flatMap(_._2.sliding(2).collect {
+        case Seq(a, b) => (a, b)
+      }).distinct.sorted
+      for (round <- 1 to 6) {
+        val ps = pairs
+        val batch =
+          if (round % 3 != 0) { // single merge, an a = b pair half the time
+            val same = ps.filter(p => p._1 == p._2)
+            Seq(if (same.nonEmpty && rnd.nextBoolean()) same(rnd.nextInt(same.length))
+                else ps(rnd.nextInt(ps.length)))
+          } else { // a pairwise-disjoint batch (mergesBatched's rule 1)
+            val used = scala.collection.mutable.Set[String]()
+            rnd.shuffle(ps).filter { case (a, b) =>
+              val ok = !used(a) && !used(b)
+              if (ok) used ++= Seq(a, b, a + b)
+              ok
+            }.take(3)
+          }
+        val typed = table(Bpe.mergePass(df, batch))
+        val relational = table(
+          if (batch.size == 1) BpeSpec.applyMerge(df, batch.head._1, batch.head._2)
+          else BpeSpec.applyMergeBatch(df, batch))
+        assert(typed === relational, s"seed $seed round $round batch $batch")
+        cur = typed
+      }
+    }
+  }
+
+  test("applyMerges is sequential, not lowest-rank-pair-first") {
+    // table (a,b) (b,c) (a,bc) (abc,d) (ab,c) on "abcd": sequentially,
+    // (a,b) → [ab,c,d,</w>]; (b,c), (a,bc), (abc,d) find nothing; (ab,c)
+    // → [abc,d,</w>]. A lowest-rank-pair-first loop would then fire
+    // (abc,d), which ranks before (ab,c), and return [abcd,</w>]
+    val learned = Seq("a" -> "b", "b" -> "c", "a" -> "bc", "abc" -> "d", "ab" -> "c")
+    val syms = Bpe.symbolTable(docsDf("abcd"))
+    val got = table(Bpe.applyMerges(syms, learned))
+    assert(got("abcd")._2 === Seq("abc", "d", "</w>"))
+    val ref = learned.foldLeft(syms) { case (t, (a, b)) => BpeSpec.applyMerge(t, a, b) }
+    assert(got === table(ref))
+  }
+
+  test("applyMerges refuses a learned table past the broadcast cap") {
+    val cap = Bpe.MaxLearnedMerges
+    val e = intercept[IllegalArgumentException] {
+      Bpe.applyMerges(Bpe.symbolTable(docsDf("ab")), Vector.fill(cap + 1)("a" -> "b"))
+    }
+    assert(e.getMessage.contains(s"cap of $cap") && e.getMessage.contains(s"${cap + 1} merges"),
+      e.getMessage)
+  }
+}
+
+/** The RELATIONAL form of the merge rewrite — the kernel's cross-check.
+  * Greedy left-to-right application as gaps-and-islands: for a pair (a, b)
+  * with a ≠ b two matches can never overlap (positions i and i+1 both
+  * matching forces a = b), so every match is taken; for a = b, matches
+  * inside a run of identical symbols overlap chain-wise and greedy takes
+  * every OTHER one (group consecutive match positions, keep odd ranks).
+  * The DuckDB oracle's sqlBpeRound replays the same rule. */
+object BpeSpec {
+
+  /** Apply ONE merge (a0, b0) greedily left-to-right to every word. */
+  def applyMerge(syms: DataFrame, a0: String, b0: String): DataFrame = {
+    val byI = Window.partitionBy(col("word")).orderBy(col("i"))
+    val ex = syms.select(col("word"), col("f"),
+      posexplode(col("s")).as(Seq("i", "sym")))
+    val matches = ex
+      .withColumn("nxt", lead(col("sym"), 1).over(byI))
+      .filter(col("sym") === a0 && col("nxt") === b0)
+      .withColumn("rn", row_number().over(byI))
+      .withColumn("grp", col("i") - col("rn"))
+      .withColumn("rn2", row_number().over(
+        Window.partitionBy(col("word"), col("grp")).orderBy(col("i"))))
+      .filter(col("rn2") % 2 === 1)
+      .select(col("word"), col("i"))
+    val starts = matches.withColumn("chosen", lit(true))
+    val absorbed = matches.select(col("word"), (col("i") + 1).as("i"),
+      lit(true).as("absorbed"))
+    ex.join(starts, Seq("word", "i"), "left")
+      .join(absorbed, Seq("word", "i"), "left")
+      .filter(col("absorbed").isNull)
+      .select(col("word"), col("f"), col("i"),
+        when(col("chosen"), lit(a0 + b0)).otherwise(col("sym")).as("sym"))
+      .groupBy(col("word"), col("f"))
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("sym")))),
+        x => x.getField("sym")).as("s"))
+  }
+
+  /** Apply a BATCH of pairwise-disjoint merges simultaneously. Under the
+    * precondition (no two pairs share a symbol, none contains another's
+    * concatenation) match SITES of different pairs never overlap, so the
+    * simultaneous rewrite equals applying the batch sequentially in any
+    * order. The run grouping is keyed per (word, pair): a same-symbol run
+    * only ever contains ONE pair's matches, so the per-pair islands are
+    * exactly the single-pair islands. */
+  def applyMergeBatch(syms: DataFrame, batch: Seq[(String, String)]): DataFrame = {
+    require(batch.nonEmpty, "applyMergeBatch on an empty batch")
+    val spark = syms.sparkSession
+    import spark.implicits._
+    val byI = Window.partitionBy(col("word")).orderBy(col("i"))
+    val byPair = Window.partitionBy(col("word"), col("pa"), col("pb"))
+      .orderBy(col("i"))
+    val ex = syms.select(col("word"), col("f"),
+      posexplode(col("s")).as(Seq("i", "sym")))
+    val pdf = batch.toDF("pa", "pb")
+    val matches = ex
+      .withColumn("nxt", lead(col("sym"), 1).over(byI))
+      .join(broadcast(pdf), col("sym") === col("pa") && col("nxt") === col("pb"))
+      .withColumn("rn", row_number().over(byPair))
+      .withColumn("grp", col("i") - col("rn"))
+      .withColumn("rn2", row_number().over(
+        Window.partitionBy(col("word"), col("pa"), col("pb"), col("grp"))
+          .orderBy(col("i"))))
+      .filter(col("rn2") % 2 === 1)
+      .select(col("word"), col("i"), concat(col("pa"), col("pb")).as("merged"))
+    val absorbed = matches.select(col("word"), (col("i") + 1).as("i"),
+      lit(true).as("absorbed"))
+    ex.join(matches, Seq("word", "i"), "left")
+      .join(absorbed, Seq("word", "i"), "left")
+      .filter(col("absorbed").isNull)
+      .select(col("word"), col("f"), col("i"),
+        coalesce(col("merged"), col("sym")).as("sym"))
+      .groupBy(col("word"), col("f"))
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("sym")))),
+        x => x.getField("sym")).as("s"))
   }
 }

@@ -52,12 +52,14 @@ class MaterializeSpec extends SparkSpecBase {
   test("reliable mode yields byte-identical BPE merges and final vocab") {
     val (tblD, vocabD) = Bpe.mergesWithVocab(docs, rounds = 4)
     val defTbl = tblD.collect().toSeq
-    val defVocab = vocabD.select(col("word"), col("f"),
+    val defVocab = vocabD.df.select(col("word"), col("f"),
       concat_ws("|", col("s")).as("s")).collect().toSeq.sortBy(_.getString(0))
+    vocabD.release()
     val (relTbl, relVocab) = withReliable(scratch("mat_reliable_bpe")) {
       val (t, v) = Bpe.mergesWithVocab(docs, rounds = 4)
-      (t.collect().toSeq, v.select(col("word"), col("f"),
+      try (t.collect().toSeq, v.df.select(col("word"), col("f"),
         concat_ws("|", col("s")).as("s")).collect().toSeq.sortBy(_.getString(0)))
+      finally v.release()
     }
     assert(relTbl === defTbl, "merge table diverged under reliable mode")
     assert(relVocab === defVocab, "final vocab diverged under reliable mode")

@@ -126,4 +126,18 @@ class UnigramLmSpec extends SparkSpecBase {
     assert(chars.subsetOf(kept),
       s"coverage broken: missing chars ${chars -- kept}")
   }
+
+  test("train refuses a model past the broadcast cap") {
+    // 24-hex-char words: each has 190 pieces of length >= 6, distinct
+    // across words in all but a few hundred cases, so 6000 words give
+    // over 2^20 candidate pieces at minCount 1
+    val docs = spark.range(6000)
+      .select(substring(sha2(col("id").cast("string"), 256), 1, 24).as("text"))
+    val cap = UnigramLm.MaxModelPieces
+    val e = intercept[IllegalArgumentException] {
+      UnigramLm.train(docs, maxPieceLen = 24, minCount = 1L, emRounds = 1)
+    }
+    assert(e.getMessage.contains(s"cap of $cap") &&
+      e.getMessage.matches(".*UnigramLm model has [0-9]+ pieces.*"), e.getMessage)
+  }
 }
