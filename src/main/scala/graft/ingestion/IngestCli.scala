@@ -26,10 +26,13 @@ object IngestCli {
         MetadataPipeline.runStream(spark, cfg, Trigger.AvailableNow())
           .awaitTermination()
       case _ =>
-        val out = MetadataPipeline.runBatch(spark, cfg)
-        println(s"[ingest] workflow rows appended: ${out.newWorkflow.count()}")
-        println(s"[ingest] dead-letter rows: ${out.deadLetter.count()}")
-        println(s"[ingest] skipped by gates: ${out.skipped.count()}")
+        // counts observed on the poll's one pass: printing them runs no job
+        val n = MetadataPipeline.runBatch(spark, cfg).counts
+        val C = MetadataPipeline.Counts
+        println(s"[ingest] workflow rows appended: ${n(C.Workflow)}")
+        println(s"[ingest] dead-letter rows: ${n(C.DeadLetter)}")
+        println(s"[ingest] skipped by gates: ${C.Gates.map(n).sum} " +
+          C.Gates.map(g => s"$g=${n(g)}").mkString("(", ", ", ")"))
     }
     spark.stop()
   }

@@ -9,39 +9,51 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.functions.udfs
+import graft.operators.Materialize
 import model._
 
-/** The reference pipeline (SURVEY.md §2 Part A) as one declarative Spark
-  * dataflow: directory of metadata ZIPs → per-entry records → validated,
-  * typed workflow rows + raw-zone copies + dead-letter errors.
+/** The reference pipeline (SURVEY.md §2 Part A) as one Spark pass per poll:
+  * directory of metadata ZIPs → one fate per ZIP → validated, typed
+  * workflow rows + raw-zone copies + dead-letter errors.
   *
   * Stage map (reference MetadataIngestionServiceImpl.java:95–123):
   *  - A1/A2  binaryFile scan + ISBN-from-filename (ref executer :56–62),
   *    checksum-validated (isbn13_valid) — non-ISBN ZIPs dead-letter instead
   *    of crashing;
-  *  - A9–A11 three anti-join idempotency gates (ref :181–210) BEFORE any
-  *    extraction — nothing is exploded for a known ISBN (ref :99 gates
-  *    before work; Catalyst cannot reorder through the flatMap, so the
-  *    order is explicit);
-  *  - A3–A5  ZIP explode + `java.util.Properties` parse (ref :137–152);
-  *  - A6/A7  book/chapter split on record_key == ISBN (ref :106–110);
-  *  - A8     genre semi-join against the genre dimension (ref :112–116,
-  *    170–173);
-  *  - A13    typed projection of the 15 process variables (ref :219–248);
-  *  - A12/A14/A15 sinks: raw zone, workflow table, dead letter.
+  *  - A9–A11 the three idempotency gates (ref :181–210) as existence flags:
+  *    one left join per state table against its DISTINCT keys (a key
+  *    repeated in history never duplicates a polled ZIP); the first gate
+  *    that matches wins, as in the reference's if-chain. Gates run BEFORE
+  *    any extraction — nothing is exploded for a known ISBN (ref :99);
+  *  - intra-batch dedup: a `row_number` per ISBN over the ZIPs that passed
+  *    the gates (DUPLICATE_IN_BATCH);
+  *  - A3–A8, A13 [[zipFate]], the per-ZIP kernel, on the survivors only:
+  *    explode ([[ZipExplode.explodeOne]]), parse (`udfs.parseProperties`),
+  *    book check (A6/A7), genre check (A8) and the all_metadata map, all
+  *    from the ZIP's own row — no record-level join or aggregate;
+  *  - A12/A14/A15 sinks: raw zone, workflow table, dead letter — each a
+  *    filter/projection of the one fates frame ([[process]]).
+  *
+  * Sink path ([[ingestPoll]]): the fates frame is materialized ONCE with
+  * `Materialize.cut` and all three appends read that cut, so a poll scans
+  * each ZIP once. Not `persist()`: the raw append's `recacheByPath`
+  * refreshes any CACHED plan reading the raw zone, so a persisted fates
+  * frame would be recomputed against the just-written raw zone and gate
+  * every fresh ZIP ALREADY_UPLOADED before the workflow append. A cut is a
+  * fresh RDD leaf with no file index to refresh.
   *
   * Transactionality (A19): the reference runs each ZIP in REQUIRES_NEW and
   * rolls back the upload when extraction/validation throws — so only fully
-  * successful ZIPs persist in the raw zone. [[process]] reproduces that:
-  * `newRaw` contains exactly the ZIPs that produced a workflow row; failed
-  * ZIPs appear only in the dead letter and are re-attempted next run,
-  * matching the reference's retry-every-poll behavior.
+  * successful ZIPs persist in the raw zone. The fates frame reproduces
+  * that: raw and workflow rows come from the same ok fates under the same
+  * `zip_name`; failed ZIPs appear only in the dead letter and are
+  * re-attempted next run, matching the reference's retry-every-poll
+  * behavior.
   *
-  * Scale posture (100 TB): the gates are shuffle anti-joins keyed on
+  * Scale posture (100 TB): the gates are shuffle joins keyed on
   * zip_name/isbn (state tables are large history at scale — no broadcast);
-  * the explode is an iterator `flatMap` inside the scan stage (no shuffle);
-  * the genre dimension is an explicit broadcast; all_metadata assembly is
-  * one partial+final aggregate keyed on zip_name.
+  * the kernel is a typed map in the stage after the gates (no shuffle of
+  * records); per-poll counts are `Dataset.observe` metrics on the pass.
   */
 object MetadataPipeline {
 
@@ -49,10 +61,22 @@ object MetadataPipeline {
   case class PipelineState(raw: DataFrame, workflow: DataFrame, published: DataFrame)
 
   /** One batch's outputs. `skipped` is observability for the gates (the
-    * reference only logs these, ref :184–207). */
+    * reference only logs these, ref :184–207). `counts` are the poll's
+    * counts observed on its one written pass, keyed by [[Counts]]; empty
+    * from [[process]], whose outputs are lazy. */
   case class PipelineOutput(
       newRaw: DataFrame, newWorkflow: DataFrame, deadLetter: DataFrame,
-      skipped: DataFrame)
+      skipped: DataFrame, counts: Map[String, Long] = Map.empty)
+
+  /** Keys of [[PipelineOutput.counts]]: ok fates (= workflow rows
+    * appended), dead letters of the poll, and skips per gate label. */
+  object Counts {
+    val Workflow = "workflow"
+    val DeadLetter = "dead_letter"
+    val Gates: Seq[String] = Seq(SkipGate.AlreadyUploaded, SkipGate.WorkflowExists,
+      SkipGate.IsbnFolderExists, SkipGate.DuplicateInBatch)
+  }
+  private val PollMetrics = "poll"
 
   val rawSchema: StructType = StructType(Seq(
     StructField("zip_name", StringType),
@@ -114,31 +138,58 @@ object MetadataPipeline {
       .option("pathGlobFilter", "*.zip")
       .load(inputDir)
 
-  /** The pure transform: one poll's ZIPs + current state → sink deltas.
-    * `ingestTs` is injectable (the reference stamps `new Date()` at
-    * ref :222; tests and the oracle pin it). */
-  def process(spark: SparkSession, zips: DataFrame, state: PipelineState,
-              cfg: IngestionConfig, ingestTs: Timestamp): PipelineOutput = {
+  /** A3–A8 + A13 for one ZIP that passed the gates, in one pass like the
+    * reference's per-ZIP loop (ref :99–123): explode, parse, book check,
+    * genre check. Returns exactly one fate: a dead letter — EXTRACT_ZIP
+    * for an unreadable archive or a malformed `.properties` entry (ref
+    * :155–158; `Properties.load` throws on a bad `\uXXXX`), else
+    * MISSING_BOOK_METADATA, else INVALID_GENRE — or ok with the book's
+    * props and all_metadata. Entries sharing a basename keep the last in
+    * archive order (the reference's `HashMap.put`, ref :146–150). */
+  def zipFate(path: String, content: Array[Byte], zipName: String, isbn: String,
+              genres: Set[String]): ZipFate = {
+    def dead(code: String, msg: String) =
+      ZipFate(zipName, isbn, Fate.Dead, code, msg + zipName, null, null, null)
+    val entries = ZipExplode.explodeOne(path, content)
+    val records =
+      if (entries.exists(_.error.isDefined)) None
+      else try Some(entries.map(e => e.record_key -> udfs.parseProperties(e.bytes)).toMap)
+      catch { case _: IllegalArgumentException => None }
+    records match {
+      case None => dead(ErrorCode.ExtractZip, "error extracting metadata ZIP ")
+      case Some(all) => all.get(isbn) match {
+        case None => dead(ErrorCode.MissingBookMetadata, "no book record for ISBN in ")
+        // a missing Genre key is null ≙ Properties.getProperty → invalid
+        case Some(book) if !book.get(PropKey.Genre).exists(genres) =>
+          dead(ErrorCode.InvalidGenre, "invalid genre in metadata ZIP ")
+        case Some(book) => ZipFate(zipName, isbn, Fate.Ok, null, null, content, book, all)
+      }
+    }
+  }
 
-    def errRow(df: DataFrame, code: String, msg: org.apache.spark.sql.Column) =
-      df.select(col("zip_name"), lit(code).as("error_code"), msg.as("message"),
-        lit(ingestTs).as("ts"))
-
+  /** One [[ZipFate]] row per polled ZIP: the gates as flags, the in-batch
+    * rank over the ZIPs that passed them, then [[zipFate]] on the
+    * survivors. */
+  private def fates(spark: SparkSession, zips: DataFrame, state: PipelineState,
+                    cfg: IngestionConfig): DataFrame = {
+    import spark.implicits._
     // A2: filename key; trim ≙ ref :96; checksum ≙ the executer's ISBN
-    // contract (MetadataIngestionExecuter.java:56–62).
+    // contract (MetadataIngestionExecuter.java:56–62). This one zip_name
+    // keys the ZIP in every sink.
     val named = zips.select(col("path"), col("content"),
         trim(element_at(split(col("path"), "/"), -1)).as("zip_name"))
       .withColumn("isbn", regexp_extract(col("zip_name"), "(97[89][0-9]{10})", 1))
-      .withColumn("isbn_ok", col("isbn") =!= "" && udfs.isbn13_valid(col("isbn")))
-    val badIsbn = errRow(named.filter(!col("isbn_ok")), ErrorCode.MissingIsbn,
-      concat(lit("no valid ISBN-13 in ZIP filename "), col("zip_name")))
-    val withIsbn = named.filter(col("isbn_ok")).drop("isbn_ok")
-
-    // A9–A11: the three idempotency gates, cheapest-evidence-first like the
-    // reference, each a left_anti on the consulted state table (B14).
-    val g1 = withIsbn.join(state.raw.select("zip_name"), Seq("zip_name"), "left_anti")
-    val g2 = g1.join(state.workflow.select("isbn"), Seq("isbn"), "left_anti")
-    val g3pre = g2.join(state.published.select("isbn"), Seq("isbn"), "left_anti")
+    def seen(keys: DataFrame, key: String, flag: String) =
+      keys.select(col(key)).distinct().withColumn(flag, lit(true))
+    val flagged = named
+      .join(seen(state.raw, "zip_name", "in_raw"), Seq("zip_name"), "left")
+      .join(seen(state.workflow, "isbn", "in_wf"), Seq("isbn"), "left")
+      .join(seen(state.published, "isbn", "in_pub"), Seq("isbn"), "left")
+      .withColumn("code",
+        when(!udfs.isbn13_valid(col("isbn")), ErrorCode.MissingIsbn)
+          .when(col("in_raw"), SkipGate.AlreadyUploaded)
+          .when(col("in_wf"), SkipGate.WorkflowExists)
+          .when(col("in_pub"), SkipGate.IsbnFolderExists))
     // Intra-batch idempotency: the gates only consult PRIOR state, so two
     // ZIPs carrying the same ISBN in one poll would both pass and emit two
     // workflow rows — the reference's sequential per-ZIP processing gates
@@ -147,77 +198,49 @@ object MetadataPipeline {
     // no workflow row exists yet, and the winner may still dead-letter —
     // see SkipGate) and are not uploaded, so they are re-polled next run
     // and gated against the then-real state — converging with the
-    // reference even when the winner fails validation this batch.
-    val intraW = Window.partitionBy(col("isbn")).orderBy(col("zip_name"))
-    val intraRanked = g3pre.withColumn("rn", row_number().over(intraW))
-    val g3 = intraRanked.filter(col("rn") === 1).drop("rn")
-    val intraDup = intraRanked.filter(col("rn") > 1)
-      .select(col("zip_name"), col("isbn"), lit(SkipGate.DuplicateInBatch).as("gate"))
-    def skip(df: DataFrame, seen: DataFrame, key: String, gate: String) =
-      df.join(seen, Seq(key), "left_semi")
-        .select(col("zip_name"), col("isbn"), lit(gate).as("gate"))
-    val skipped =
-      skip(withIsbn, state.raw.select("zip_name"), "zip_name", SkipGate.AlreadyUploaded)
-        .unionByName(skip(g1, state.workflow.select("isbn"), "isbn", SkipGate.WorkflowExists))
-        .unionByName(skip(g2, state.published.select("isbn"), "isbn", SkipGate.IsbnFolderExists))
-        .unionByName(intraDup)
+    // reference even when the winner fails validation this batch. The
+    // (isbn, code) partition holding code = null is exactly the ZIPs
+    // that passed the gates.
+    val rank = row_number().over(
+      Window.partitionBy(col("isbn"), col("code")).orderBy(col("zip_name")))
+    val gated = flagged.withColumn("code",
+      when(col("code").isNull && rank > 1, SkipGate.DuplicateInBatch)
+        .otherwise(col("code")))
+    val genres = cfg.genres.toSet
+    gated.select("path", "content", "zip_name", "isbn", "code")
+      .as[(String, Array[Byte], String, String, String)]
+      .map {
+        case (path, content, zipName, isbn, null) =>
+          zipFate(path, content, zipName, isbn, genres)
+        case (_, _, zipName, isbn, ErrorCode.MissingIsbn) =>
+          ZipFate(zipName, isbn, Fate.Dead, ErrorCode.MissingIsbn,
+            s"no valid ISBN-13 in ZIP filename $zipName", null, null, null)
+        case (_, _, zipName, isbn, gate) =>
+          ZipFate(zipName, isbn, Fate.Skip, gate, null, null, null, null)
+      }
+      .toDF()
+  }
 
-    // A3–A5: explode entries (flatMap generator, ref :137–152) and parse
-    // each as exact java.util.Properties (B46).
-    val entries = ZipExplode.entries(spark, g3.select(col("path"), col("content"))).toDF()
-    val extractErr = errRow(entries.filter(col("error").isNotNull),
-      ErrorCode.ExtractZip,
-      concat(lit("error extracting metadata ZIP "), col("zip_name")))
-    val records = entries.filter(col("error").isNull)
-      .withColumn("props", udfs.parse_properties(col("bytes")))
-      // A6: the record keyed by the ISBN is the book record (ref :106–107)
-      .withColumn("kind",
-        when(col("record_key") === col("isbn"), "book").otherwise("chapter"))
-
-    // A7: ZIP with no book record → MISSING_BOOK_METADATA (ref :107–110).
-    val books = records.filter(col("kind") === "book")
-    val missingBook = errRow(
-      records.select("zip_name").distinct()
-        .join(books.select("zip_name"), Seq("zip_name"), "left_anti"),
-      ErrorCode.MissingBookMetadata,
-      concat(lit("no "), lit("book record for ISBN in "), col("zip_name")))
-
-    // A8: genre semi-join vs the dimension (B13, ref :112–116, 170–173).
-    // try_element_at, not element_at: under Spark 4's default ANSI mode a
-    // missing map key THROWS and would abort the whole poll — the reference's
-    // Properties.getProperty returns null for a missing key, so a book with
-    // no Genre entry takes the null-genre → invalid-genre dead-letter path
-    // (one malformed ZIP must never kill the batch, ref A15/A19).
-    val genreDim = spark.createDataFrame(cfg.genres.map(Tuple1(_))).toDF("book_genre")
-    val booksG = books.withColumn("book_genre",
-      try_element_at(col("props"), lit(PropKey.Genre)))
-    val validBooks = booksG.join(broadcast(genreDim), Seq("book_genre"), "left_semi")
-    val invalidGenre = errRow(
-      booksG.join(broadcast(genreDim), Seq("book_genre"), "left_anti"),
-      ErrorCode.InvalidGenre,
-      concat(lit("invalid genre in metadata ZIP "), col("zip_name")))
-
-    // A13: all-metadata map (ref :228) — one aggregate keyed on zip_name —
-    // plus the typed projection of the 15 process variables (ref :222–245).
-    val okZipNames = validBooks.select("zip_name")
-    // (collect_list order is partition-dependent; map key order is anyway
-    // unspecified — consumers needing determinism sort at serialization)
-    val allMeta = records.join(okZipNames, Seq("zip_name"), "left_semi")
-      .groupBy(col("zip_name"))
-      .agg(map_from_entries(collect_list(struct(col("record_key"), col("props"))))
-        .as("all_metadata"))
-    val newWorkflow = validBooks.join(allMeta, "zip_name")
-      .select(
+  /** The four outputs as filters/projections of a fates frame. */
+  private def outputOf(fates: DataFrame, cfg: IngestionConfig,
+                       ingestTs: Timestamp): PipelineOutput = {
+    val ok = fates.filter(col("fate") === Fate.Ok)
+    // try_element_at ≙ Properties.getProperty null-on-missing (ref
+    // :231–236): absent keys project as null instead of throwing under
+    // ANSI mode.
+    def prop(key: String) = try_element_at(col("book"), lit(key))
+    PipelineOutput(
+      // A12 + A19: only fully successful ZIPs persist to the raw zone.
+      newRaw = ok.select(col("zip_name"), col("content"), lit(ingestTs).as("ingest_ts")),
+      // A13: the typed projection of the 15 process variables (ref :222–245).
+      newWorkflow = ok.select(
         col("isbn"),
         concat(lit("Best Publishing workflow for "), col("isbn")).as("workflow_description"),
-        // try_element_at ≙ Properties.getProperty null-on-missing (ref
-        // :231–236): absent keys project as null instead of throwing under
-        // ANSI mode.
-        try_element_at(col("props"), lit(PropKey.Title)).as("book_title"),
-        col("book_genre"),
-        try_element_at(col("props"), lit(PropKey.Authors)).as("book_authors"),
-        try_element_at(col("props"), lit(PropKey.NrOfChapters)).as("nr_of_chapters"),
-        try_element_at(col("props"), lit(PropKey.NrOfPages)).as("nr_of_pages"),
+        prop(PropKey.Title).as("book_title"),
+        prop(PropKey.Genre).as("book_genre"),
+        prop(PropKey.Authors).as("book_authors"),
+        prop(PropKey.NrOfChapters).as("nr_of_chapters"),
+        prop(PropKey.NrOfPages).as("nr_of_pages"),
         lit(ingestTs).as("publishing_date"),
         lit(false).as("content_found"),
         lit(false).as("content_error_found"),
@@ -225,18 +248,20 @@ object MetadataPipeline {
         lit(false).as("chapter_folder_hierarchy_exists"),
         lit(cfg.interruptT1TimerDuration).as("interrupt_t1_timer_duration"),
         lit(cfg.wait2Check4ContentTimerDuration).as("wait_2_check_content_timer_duration"),
-        col("all_metadata"))
-
-    // A12 + A19: only fully successful ZIPs persist to the raw zone (the
-    // reference's per-ZIP transaction rolls the upload back on any error).
-    val newRaw = g3.join(okZipNames, Seq("zip_name"), "left_semi")
-      .select(col("zip_name"), col("content"), lit(ingestTs).as("ingest_ts"))
-
-    val deadLetter = badIsbn.unionByName(extractErr)
-      .unionByName(missingBook).unionByName(invalidGenre)
-
-    PipelineOutput(newRaw, newWorkflow, deadLetter, skipped)
+        col("all_metadata")),
+      deadLetter = fates.filter(col("fate") === Fate.Dead).select(col("zip_name"),
+        col("code").as("error_code"), col("message"), lit(ingestTs).as("ts")),
+      skipped = fates.filter(col("fate") === Fate.Skip)
+        .select(col("zip_name"), col("isbn"), col("code").as("gate")))
   }
+
+  /** The pure transform: one poll's ZIPs + current state → sink deltas.
+    * `ingestTs` is injectable (the reference stamps `new Date()` at
+    * ref :222; tests and the oracle pin it). Lazy: each output re-runs
+    * the pass when evaluated. */
+  def process(spark: SparkSession, zips: DataFrame, state: PipelineState,
+              cfg: IngestionConfig, ingestTs: Timestamp): PipelineOutput =
+    outputOf(fates(spark, zips, state, cfg), cfg, ingestTs)
 
   /** One batch pass (A20 ≙ the JMX manual trigger / CLI one-shot): read
     * state, process, append sinks. Dead letters are appended idempotently
@@ -247,23 +272,36 @@ object MetadataPipeline {
                ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput =
     ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
 
-  /** The sink path both modes share: read gate state, [[process]] one
-    * poll's `zips` (by-name, so the poll is scanned after the state is
-    * read), then append raw, workflow and the dead letters not already
-    * recorded for the same (zip_name, error_code). */
+  /** The sink path both modes share: read gate state, then list the poll
+    * (`zips` is by-name and bound once, after the state is read), compute
+    * its fates in one pass, cut them once and append raw, workflow and the
+    * dead letters not already recorded for the same (zip_name,
+    * error_code) from the cut. The returned output is the lazy
+    * [[process]] over the same poll and state (the cut's blocks are
+    * released before it returns), with the counts observed on the pass. */
   private def ingestPoll(spark: SparkSession, cfg: IngestionConfig,
                          ingestTs: Timestamp)(zips: => DataFrame): PipelineOutput = {
     val state = readState(spark, cfg.warehouseDir)
-    val out = process(spark, zips, state, cfg, ingestTs)
-    val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
-    val newDl = out.deadLetter
-      .join(priorDl.select("zip_name", "error_code"),
-        Seq("zip_name", "error_code"), "left_anti")
-    append(out.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
-    append(out.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
-      s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
-    append(newDl, s"${cfg.warehouseDir}/${Zone.DeadLetter}")
-    out
+    val polled = zips
+    val fate = col("fate")
+    val observed = fates(spark, polled, state, cfg).observe(PollMetrics,
+      count(when(fate === Fate.Ok, 1)).as(Counts.Workflow),
+      count(when(fate === Fate.Dead, 1)).as(Counts.DeadLetter) +:
+        Counts.Gates.map(g => count(when(col("code") === g, 1)).as(g)): _*)
+    val cut = Materialize.cut(observed)
+    try {
+      val now = outputOf(cut.df, cfg, ingestTs)
+      val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
+      append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
+      append(now.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
+        s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
+      append(now.deadLetter.join(priorDl.select("zip_name", "error_code"),
+          Seq("zip_name", "error_code"), "left_anti"),
+        s"${cfg.warehouseDir}/${Zone.DeadLetter}")
+    } finally cut.release()
+    val row = observed.queryExecution.observedMetrics(PollMetrics)
+    process(spark, polled, state, cfg, ingestTs)
+      .copy(counts = row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap)
   }
 
   /** B5: append parquet write, optionally partitioned ({year} layout ≙

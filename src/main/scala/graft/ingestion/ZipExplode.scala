@@ -17,6 +17,9 @@ import model._
   * the reference's single-pass `ZipInputStream` loop. A corrupt or empty
   * archive yields one error row (EXTRACT_ZIP ≙ :155–158) instead of failing
   * the job — per-unit error isolation (A15).
+  *
+  * The pipeline calls [[explodeOne]] once per ZIP inside its fate kernel
+  * (`MetadataPipeline.zipFate`); [[entries]] is the record-level form.
   */
 object ZipExplode {
 

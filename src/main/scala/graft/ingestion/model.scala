@@ -20,6 +20,27 @@ object model {
       bytes: Array[Byte],
       error: Option[String])
 
+  /** One polled ZIP's fate, a row of the per-poll fates frame. `fate` is one
+    * of [[Fate]]'s labels; `code` is the error code (Dead) or the gate
+    * (Skip) and null when ok; `message` is set on dead letters only. Ok
+    * rows carry the archive bytes for the raw zone, the book record's props
+    * and all_metadata (record_key → props); the other rows carry nulls. */
+  case class ZipFate(
+      zip_name: String,
+      isbn: String,
+      fate: String,
+      code: String,
+      message: String,
+      content: Array[Byte],
+      book: Map[String, String],
+      all_metadata: Map[String, Map[String, String]])
+
+  object Fate {
+    val Ok = "OK"
+    val Skip = "SKIP"
+    val Dead = "DEAD"
+  }
+
   /** Typed error codes — mirrors the reference's ProcessingErrorCode usage
     * (MetadataIngestionServiceImpl.java:109, 115, 158) plus the
     * filename-contract failure (MetadataIngestionExecuter.java:62). */
