@@ -21,10 +21,14 @@ import org.apache.spark.sql.functions._
   * Scale posture (100 TB): every round is two shuffle joins + one aggregate
   * on (id|src) keys, all partial+final; the convergence check is an
   * aggregate-only `isEmpty` (no driver collect of data rows). Lineage is cut
-  * per round: `localCheckpoint` (executor storage — fine for a single-job
-  * run) or, with `reliable = true`, `DataFrame.checkpoint` to the reliable
-  * checkpoint dir — the right setting for a multi-day 100 TB job where an
-  * executor loss must not recompute the whole iteration chain.
+  * per round in the session's checkpoint mode ([[Materialize]]):
+  * `localCheckpoint` by default (executor storage — fine for a single-job
+  * run), or with `graft.checkpoint.reliable=true` (+ `graft.checkpoint.dir`)
+  * `DataFrame.checkpoint` to the reliable checkpoint dir — the right
+  * setting for a multi-day 100 TB job where an executor loss must not
+  * recompute the whole iteration chain. The cut keeps the checkpoint's own
+  * plan leaf (not [[Materialize.cut]]'s fresh one): a fresh leaf drops the
+  * labels' partitioning and would add a shuffle per round.
   *
   * Fails LOUDLY (IllegalStateException) if the labels have not converged
   * within `maxIter` rounds — silently returning half-propagated labels would
@@ -36,35 +40,17 @@ object ConnectedComponents {
   final case class Result(labels: DataFrame, rounds: Int)
 
   /** @param pairs two-column DataFrame of undirected edges (a, b).
-    * @param checkpointDir reliable-checkpoint location, only read when
-    *   `reliable = true`. On a real cluster this must be a distributed
-    *   filesystem path (a driver-local dir defeats the purpose — surviving
-    *   executor loss). When None, the SparkContext's already-configured
-    *   checkpoint dir is used; if neither is set the call fails loudly
-    *   rather than silently mutating process-wide state with a default.
     * @return labels (member, cluster_rep) for every vertex with ≥1 edge. */
-  def run(pairs: DataFrame, maxIter: Int = 25,
-          reliable: Boolean = false,
-          checkpointDir: Option[String] = None): Result = {
-    val spark = pairs.sparkSession
-    if (reliable) {
-      checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-      require(spark.sparkContext.getCheckpointDir.nonEmpty,
-        "reliable = true needs a checkpoint dir: pass checkpointDir = " +
-          "Some(<distributed-fs path>) or call sc.setCheckpointDir first")
-    }
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-
+  def run(pairs: DataFrame, maxIter: Int = 25): Result = {
     // edge endpoints = the first two columns; extra columns (a confirmed
     // pair's jac/cos measure) are ignored, so NearDup's 3-column outputs
     // compose directly
     val Seq(a, b) = pairs.schema.fieldNames.take(2).toSeq
-    val edges = cut(
+    val edges = Materialize.checkpointed(
       pairs.select(col(a).as("src"), col(b).as("dst"))
         .unionByName(pairs.select(col(b).as("src"), col(a).as("dst"))))
 
-    var labels = cut(edges.select(col("src").as("id")).distinct()
+    var labels = Materialize.checkpointed(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var converged = false
     var iter = 0
@@ -74,7 +60,7 @@ object ConnectedComponents {
       // pointer jump: resolve label -> label(label) (labels are always ids
       // of vertices present in the table, so the join is total)
       val jump = labels.select(col("id").as("jid"), col("label").as("jl"))
-      val next = cut(labels
+      val next = Materialize.checkpointed(labels
         .join(neighborMin, col("id") === col("src"), "left")
         .join(jump, col("label") === col("jid"), "left")
         .select(col("id"),

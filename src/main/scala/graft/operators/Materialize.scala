@@ -26,10 +26,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * The knob is a SparkSession conf, not a parameter, deliberately: the
   * call sites sit 2-4 frames below public entry points (catalog queries,
   * streaming foreachBatch drivers) and a threaded parameter would have to
-  * cross every one of them. Same contract as
-  * [[ConnectedComponents.run]]'s explicit `reliable`/`checkpointDir`
-  * arguments — that operator keeps its parameter form (callers hold the
-  * knob locally); everything else reads the session conf here.
+  * cross every one of them.
   *
   * Two entry points, by what the caller does with the result:
   *
@@ -88,7 +85,7 @@ object Materialize {
   private val appliedDir =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def checkpointed(df: DataFrame): DataFrame =
+  private[operators] def checkpointed(df: DataFrame): DataFrame =
     if (reliable(df)) {
       val sc = df.sparkSession.sparkContext
       df.sparkSession.conf.getOption(DirKey).foreach { d =>

@@ -520,9 +520,7 @@ object NearDup {
   /** Cluster canonicalization: confirmed pairs → (cluster_rep, member) via
     * min-label connected components (see [[ConnectedComponents]] for the
     * pointer-jumping convergence and checkpointing contract). */
-  def clusters(pairs: DataFrame, reliable: Boolean = false,
-               checkpointDir: Option[String] = None): DataFrame =
-    ConnectedComponents.run(pairs, reliable = reliable,
-      checkpointDir = checkpointDir).labels
+  def clusters(pairs: DataFrame): DataFrame =
+    ConnectedComponents.run(pairs).labels
       .select(col("label").as("cluster_rep"), col("id").as("member"))
 }

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField,
+  StructType, TimestampType}
 
 /** Scale soak (SURVEY.md §2 B50/B51 scale evidence): a deterministic
   * ~10×-sf0.1 corpus (default 100k documents + 22k embeddings) pushed
@@ -283,63 +285,46 @@ object ScaleSoak {
   def isLate(l: Layout): org.apache.spark.sql.Column =
     col("id") % 97 === 0 && col("id") / l.streamPerFile >= 2
 
-  private def writeStreamCorpus(spark: SparkSession, dir: String,
-                                l: Layout): String = {
+  private val streamSchema = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", TimestampType),
+    StructField("user_id", LongType), StructField("typ", StringType),
+    StructField("value", DoubleType)))
+
+  /** The stream corpus as a harness split source: split k = the events
+    * of file k ([[streamEvents]]'s `fidx`), one split per micro-batch. */
+  private def streamSource(spark: SparkSession, dir: String,
+                           l: Layout): DataFrame =
     // v2 in the key: the generator changed (late offset 1200 → 2400 s)
     // without a Layout change, and the marker only fingerprints the Layout
-    val d = new java.io.File(s"$dir/stream_v2_${l.hashCode}")
-    graft.BuildOnce(d) {
+    graft.StreamHarness.splitSource(spark,
+      new java.io.File(s"$dir/stream_v2_${l.hashCode}"), streamSchema) {
       val ev = streamEvents(spark, l)
-      (0 until l.streamFiles).foreach { k =>
-        val tmp = new java.io.File(d, s"_tmp$k")
-        ev.filter(col("fidx") === k)
-          .select("event_id", "ts", "user_id", "typ", "value")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-        val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(d, f"batch$k%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(1000000L * (k + 1))
-        tmp.listFiles().foreach(_.delete()); tmp.delete()
-      }
+      (0 until l.streamFiles).map(k => ev.filter(col("fidx") === k)
+        .select("event_id", "ts", "user_id", "typ", "value"))
     }
-    d.getAbsolutePath
-  }
 
-  /** Drive one streaming pipeline over the file-per-batch corpus and fold
-    * `recentProgress` state telemetry into a [[StreamLeg]]. */
-  private def streamLeg(spark: SparkSession, name: String, src: String,
-                        ckptRoot: String, totalIn: Long)
-                       (make: DataFrame => DataFrame): StreamLeg = {
-    import org.apache.spark.sql.streaming.Trigger
-    val sch = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("typ",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
+  /** Drive one streaming pipeline over the split corpus through the
+    * harness runner and fold the finished query's `recentProgress` state
+    * telemetry into a [[StreamLeg]]. */
+  private def streamLeg(spark: SparkSession, name: String, dir: String,
+                        l: Layout)(make: DataFrame => DataFrame): StreamLeg = {
     val emitted = new AtomicLong
+    val root = graft.StreamHarness.scratchRoot(
+      "soak_" + name.replaceAll("[^a-zA-Z0-9]", "_"), dir)
+    val src = make(streamSource(spark, dir, l)) // a cold corpus build is not timed
     val t0 = System.nanoTime()
-    val q = make(spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(src))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        s"$ckptRoot/${name.replaceAll("[^a-zA-Z0-9]", "_")}")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        emitted.addAndGet(b.count()); ()
-      }
-      .start()
-    q.awaitTermination()
+    val q = graft.StreamHarness.foreachBatch(src, root) { (b, _) =>
+      emitted.addAndGet(b.count())
+    }
     val secs = (System.nanoTime() - t0) / 1e9
+    // the pid-scoped checkpoint is only meaningful within this run — left
+    // behind it accumulates one directory tree per soak run until a
+    // manual clean (r8 advice)
+    graft.Fs.deleteRecursively(root)
     val ops = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
     StreamLeg(name,
       batches = q.recentProgress.length,
-      totalIn = totalIn,
+      totalIn = l.nStreamEvents,
       maxStateRows = if (ops.isEmpty) 0 else ops.map(_.numRowsTotal).max,
       finalStateRows = if (ops.isEmpty) 0 else ops.last.numRowsTotal,
       droppedLate = ops.map(_.numRowsDroppedByWatermark).sum,
@@ -897,16 +882,11 @@ object ScaleSoak {
     val streamSession = spark.newSession()
     streamSession.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       math.max(100, l.streamFiles * 4 + 20).toString)
-    val streamSrc = writeStreamCorpus(spark, dir, l)
-    val ckptRoot = s"$dir/stream_ckpt_${l.hashCode}_" +
-      ProcessHandle.current().pid()
-    val dedupLeg = streamLeg(streamSession, "streaming dedup", streamSrc,
-      ckptRoot, l.nStreamEvents) { src =>
+    val dedupLeg = streamLeg(streamSession, "streaming dedup", dir, l) { src =>
       src.withWatermark("ts", "300 seconds")
         .dropDuplicatesWithinWatermark(Seq("event_id"))
     }
-    val joinLeg = streamLeg(streamSession, "stream-stream interval join", streamSrc,
-      ckptRoot, l.nStreamEvents) { src =>
+    val joinLeg = streamLeg(streamSession, "stream-stream interval join", dir, l) { src =>
       val clicks = src.filter(col("typ") === "click")
         .select(col("user_id"), col("ts").as("cts"))
         .withWatermark("cts", "300 seconds")
@@ -918,10 +898,6 @@ object ScaleSoak {
         col("pts") <= col("cts") + expr("INTERVAL 300 seconds"))
     }
     val streamLegs = Seq(dedupLeg, joinLeg)
-    // the pid-scoped checkpoints are only meaningful within this run —
-    // left behind they accumulate one directory tree per soak run until a
-    // manual clean (r8 advice)
-    graft.Fs.deleteRecursively(new java.io.File(ckptRoot))
 
     var cents: DataFrame = null
     val (_, km) = measure(spark, "k-means fit (IVF trainer)",
@@ -1104,6 +1080,16 @@ object ScaleSoak {
       pqQueries = pqQueries, pqPartnerHits = pqPartnerHits)
   }
 
+  /** The `l.nVecs` embedding corpus at `dir/vecs_<nVecs>`, written once
+    * ([[graft.BuildOnce]], marker `_VECOK_<nVecs>`) for the vector soaks. */
+  private def writeVecs(spark: SparkSession, dir: String, l: Layout): String = {
+    val vecsPath = s"$dir/vecs_${l.nVecs}"
+    graft.BuildOnce(new java.io.File(dir), s"_VECOK_${l.nVecs}") {
+      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
+    }
+    vecsPath
+  }
+
   /** r10 verdict #5 — the vector-family evidence ONE ORDER OF MAGNITUDE
     * above the size the geometry was validated on: 200k base vectors (10×
     * the soak's 20k) + the same planted protocols (every `vecDupPeriod`-th
@@ -1117,13 +1103,7 @@ object ScaleSoak {
   def runVectorScale(spark: SparkSession, dir: String,
                      l: Layout = Layout(nVecs = 200000)): String = {
     import org.apache.spark.storage.StorageLevel
-    val vecsPath = s"$dir/vecs_${l.nVecs}"
-    val marker = new java.io.File(s"$dir/_VECOK_${l.nVecs}")
-    if (!marker.exists()) {
-      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
+    val vecsPath = writeVecs(spark, dir, l)
     val allVecs = spark.read.parquet(vecsPath)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = allVecs.count()
@@ -1557,13 +1537,7 @@ object ScaleSoak {
                          l: Layout = Layout(nVecs = 200000)): String = {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
-    val vecsPath = s"$dir/vecs_${l.nVecs}"
-    val marker = new java.io.File(s"$dir/_VECOK_${l.nVecs}")
-    if (!marker.exists()) {
-      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
+    val vecsPath = writeVecs(spark, dir, l)
     val vecs = spark.read.parquet(vecsPath)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = vecs.count()
@@ -1627,13 +1601,7 @@ object ScaleSoak {
   def runPcaSoak(spark: SparkSession, dir: String,
                  l: Layout = Layout(nVecs = 200000)): String = {
     import org.apache.spark.storage.StorageLevel
-    val vecsPath = s"$dir/vecs_${l.nVecs}"
-    val marker = new java.io.File(s"$dir/_VECOK_${l.nVecs}")
-    if (!marker.exists()) {
-      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
+    val vecsPath = writeVecs(spark, dir, l)
     val dim = l.dim
     val vecs = spark.read.parquet(vecsPath)
       .select(col("vec_id"), col("e"))
@@ -1702,13 +1670,7 @@ object ScaleSoak {
   def runKnnLifecycleSoak(spark: SparkSession, dir: String,
                           l: Layout = Layout(nVecs = 20000)): String = {
     import org.apache.spark.storage.StorageLevel
-    val vecsPath = s"$dir/vecs_${l.nVecs}"
-    val marker = new java.io.File(s"$dir/_VECOK_${l.nVecs}")
-    if (!marker.exists()) {
-      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
+    val vecsPath = writeVecs(spark, dir, l)
     val cfg = EmbedLshConfig(bands = 8, bits = 9,
       prime = EmbedLshConfig.primeAtLeast(72), dim = l.dim,
       maxBucket = 1000, cosineConfirm = 0.45)
@@ -2298,14 +2260,11 @@ object ScaleSoak {
   def runCompactSoak(spark: SparkSession, dir: String,
                      nRows: Long = 2000000L, nFrag: Int = 2048): String = {
     val fragPath = s"$dir/compact_frag_$nFrag"
-    val marker = new java.io.File(s"$dir/_FRAGOK_$nFrag")
-    if (!marker.exists()) {
+    graft.BuildOnce(new java.io.File(dir), s"_FRAGOK_$nFrag") {
       spark.range(nRows)
         .select(col("id"), md5(col("id").cast("string")).as("payload"))
         .repartition(nFrag)
         .write.mode("overwrite").parquet(fragPath)
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
     }
     val compPath = s"$dir/compact_out_$nFrag"
     val (nBefore, bytes) = Compact.layout(spark, fragPath)

@@ -705,11 +705,11 @@ object LlmOps {
        |  WHERE len(toks) >= 3)""".stripMargin
   private val sqlShingles = sqlShinglesFrom("documents")
 
-  /** The minhash → bands → capped buckets → confirmed-pairs CTE chain
-    * (mirrors [[graft.operators.NearDup.minhashPairs]] with [[MinHashCfg]]),
-    * assuming an `sh(doc_id, shingles)` CTE is already in scope. Lazy:
-    * `sqlJaccard` is initialized further down the object body. */
-  private lazy val sqlMinhashPairs =
+  /** The minhash → bands → capped buckets → candidate-pairs CTE chain
+    * `ex … cand` (mirrors [[graft.operators.NearDup.minhashPairs]] with
+    * [[MinHashCfg]] up to its confirm), assuming an `sh(doc_id, shingles)`
+    * CTE is already in scope. */
+  private val sqlMinhashCand =
     s"""ex AS (SELECT doc_id, ${sqlH28("u.s")} AS h FROM sh, unnest(shingles) u(s)),
        |params AS (SELECT i, 1234567 + 7654321*i AS a, 987654 + 123457*i AS b FROM range(12) r(i)),
        |mh AS (SELECT doc_id, i, min((a*h + b) % 268435399) AS mh
@@ -723,7 +723,13 @@ object LlmOps {
        |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM bands x JOIN ok z ON z.band = x.band AND z.mh0 = x.mh0 AND z.mh1 = x.mh1
        |  JOIN bands y ON x.band = y.band AND x.mh0 = y.mh0
-       |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id),
+       |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id)""".stripMargin
+
+  /** [[sqlMinhashCand]] + the Jaccard confirm: the confirmed-pairs chain
+    * ending in `pairs(doc_a, doc_b)`. Lazy: `sqlJaccard` is initialized
+    * further down the object body. */
+  private lazy val sqlMinhashPairs =
+    s"""$sqlMinhashCand,
        |pairs AS (
        |  SELECT doc_a, doc_b
        |  FROM cand c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b
@@ -2235,20 +2241,7 @@ object LlmOps {
 
     "q_dedup_minhash_lsh" ->
       s"""WITH $sqlShingles,
-         |ex AS (SELECT doc_id, ${sqlH28("u.s")} AS h FROM sh, unnest(shingles) u(s)),
-         |params AS (SELECT i, 1234567 + 7654321*i AS a, 987654 + 123457*i AS b FROM range(12) r(i)),
-         |mh AS (SELECT doc_id, i, min((a*h + b) % 268435399) AS mh
-         |       FROM ex CROSS JOIN params GROUP BY doc_id, i),
-         |bands AS (SELECT doc_id, i // 2 AS band,
-         |    max(CASE WHEN i % 2 = 0 THEN mh END) AS mh0,
-         |    max(CASE WHEN i % 2 = 1 THEN mh END) AS mh1
-         |  FROM mh GROUP BY doc_id, i // 2),
-         |ok AS (SELECT band, mh0, mh1 FROM bands
-         |       GROUP BY 1, 2, 3 HAVING count(*) <= ${MaxBucket}),
-         |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN ok z ON z.band = x.band AND z.mh0 = x.mh0 AND z.mh1 = x.mh1
-         |  JOIN bands y ON x.band = y.band AND x.mh0 = y.mh0
-         |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id)
+         |$sqlMinhashCand
          |SELECT doc_a, doc_b, $sqlJaccard AS jac
          |FROM cand c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b
          |WHERE $sqlJaccard >= 0.8
@@ -2258,20 +2251,7 @@ object LlmOps {
     // incremental run must produce exactly this
     "q_dedup_incremental" ->
       s"""WITH $sqlShingles,
-         |ex AS (SELECT doc_id, ${sqlH28("u.s")} AS h FROM sh, unnest(shingles) u(s)),
-         |params AS (SELECT i, 1234567 + 7654321*i AS a, 987654 + 123457*i AS b FROM range(12) r(i)),
-         |mh AS (SELECT doc_id, i, min((a*h + b) % 268435399) AS mh
-         |       FROM ex CROSS JOIN params GROUP BY doc_id, i),
-         |bands AS (SELECT doc_id, i // 2 AS band,
-         |    max(CASE WHEN i % 2 = 0 THEN mh END) AS mh0,
-         |    max(CASE WHEN i % 2 = 1 THEN mh END) AS mh1
-         |  FROM mh GROUP BY doc_id, i // 2),
-         |ok AS (SELECT band, mh0, mh1 FROM bands
-         |       GROUP BY 1, 2, 3 HAVING count(*) <= ${MaxBucket}),
-         |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN ok z ON z.band = x.band AND z.mh0 = x.mh0 AND z.mh1 = x.mh1
-         |  JOIN bands y ON x.band = y.band AND x.mh0 = y.mh0
-         |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id)
+         |$sqlMinhashCand
          |SELECT doc_a, doc_b, $sqlJaccard AS jac
          |FROM cand c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b
          |WHERE $sqlJaccard >= 0.8 AND (doc_a % 10 = 7 OR doc_b % 10 = 7)
@@ -2279,24 +2259,7 @@ object LlmOps {
 
     "q_dedup_clusters" ->
       s"""WITH RECURSIVE $sqlShingles,
-         |ex AS (SELECT doc_id, ${sqlH28("u.s")} AS h FROM sh, unnest(shingles) u(s)),
-         |params AS (SELECT i, 1234567 + 7654321*i AS a, 987654 + 123457*i AS b FROM range(12) r(i)),
-         |mh AS (SELECT doc_id, i, min((a*h + b) % 268435399) AS mh
-         |       FROM ex CROSS JOIN params GROUP BY doc_id, i),
-         |bands AS (SELECT doc_id, i // 2 AS band,
-         |    max(CASE WHEN i % 2 = 0 THEN mh END) AS mh0,
-         |    max(CASE WHEN i % 2 = 1 THEN mh END) AS mh1
-         |  FROM mh GROUP BY doc_id, i // 2),
-         |ok AS (SELECT band, mh0, mh1 FROM bands
-         |       GROUP BY 1, 2, 3 HAVING count(*) <= ${MaxBucket}),
-         |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN ok z ON z.band = x.band AND z.mh0 = x.mh0 AND z.mh1 = x.mh1
-         |  JOIN bands y ON x.band = y.band AND x.mh0 = y.mh0
-         |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM cand c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b
-         |  WHERE $sqlJaccard >= 0.8),
+         |$sqlMinhashPairs,
          |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
          |          UNION ALL SELECT doc_b, doc_a FROM pairs),
          |nodes AS (SELECT DISTINCT s AS id FROM edges),
@@ -2336,24 +2299,7 @@ object LlmOps {
 
     "q_dedup_survivor" ->
       s"""WITH RECURSIVE $sqlShingles,
-         |ex AS (SELECT doc_id, ${sqlH28("u.s")} AS h FROM sh, unnest(shingles) u(s)),
-         |params AS (SELECT i, 1234567 + 7654321*i AS a, 987654 + 123457*i AS b FROM range(12) r(i)),
-         |mh AS (SELECT doc_id, i, min((a*h + b) % 268435399) AS mh
-         |       FROM ex CROSS JOIN params GROUP BY doc_id, i),
-         |bands AS (SELECT doc_id, i // 2 AS band,
-         |    max(CASE WHEN i % 2 = 0 THEN mh END) AS mh0,
-         |    max(CASE WHEN i % 2 = 1 THEN mh END) AS mh1
-         |  FROM mh GROUP BY doc_id, i // 2),
-         |ok AS (SELECT band, mh0, mh1 FROM bands
-         |       GROUP BY 1, 2, 3 HAVING count(*) <= ${MaxBucket}),
-         |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM bands x JOIN ok z ON z.band = x.band AND z.mh0 = x.mh0 AND z.mh1 = x.mh1
-         |  JOIN bands y ON x.band = y.band AND x.mh0 = y.mh0
-         |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM cand c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b
-         |  WHERE $sqlJaccard >= 0.8),
+         |$sqlMinhashPairs,
          |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
          |          UNION ALL SELECT doc_b, doc_a FROM pairs),
          |nodes AS (SELECT DISTINCT s AS id FROM edges),

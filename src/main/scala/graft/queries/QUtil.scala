@@ -50,4 +50,21 @@ object QUtil {
     val f = s"1e$digits"
     round6ExactSql(s"sum(round(($e) * $f)) / $f / count(*)")
   }
+
+  /** SQL replay of [[graft.operators.LinearScorer]] at `minCount = 3`, the
+    * scorer every scoring entry's oracle shares: CTEs `tok(doc_id, term)`,
+    * `model(term, w_micro)` and `sc(doc_id, logit_micro)` over
+    * `documents`. */
+  val sqlScoreReplay: String =
+    """tok AS (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+      |model AS (
+      |  SELECT term,
+      |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
+      |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
+      |  WHERE c >= 3),
+      |sc AS (
+      |  SELECT t.doc_id,
+      |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
+      |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id)""".stripMargin
 }

@@ -1,14 +1,14 @@
 package graft.queries
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 import org.apache.spark.sql.types._
 
+import graft.StreamHarness
 import QUtil._
 
 /** B44 processor for q_stream_tws: per-user running (update count, event
@@ -40,11 +40,19 @@ class UserRunningProcessor
   * and returns the sink contents; the DuckDB oracle recomputes the same
   * result in SQL — proving streaming-mode output ≡ batch output.
   *
-  * Two harness shapes:
+  * Every run goes through [[graft.StreamHarness]]'s one bounded runner
+  * (AvailableNow, one timeout, a stuck query stopped and thrown): into a
+  * memory sink (`toTable`) or through a `foreachBatch` body under a
+  * pid-scoped scratch root (`foreachBatch` + `scratchRoot`). Two source
+  * shapes:
   *  - single-batch (q_stream_tumbling/sliding/dedup): the whole events table
   *    arrives in one micro-batch; complete output mode for the windowed aggs
   *    (batch-parity form), append for dedup.
-  *  - multi-batch (q_stream_late_drop/session/stateful/multisink): the
+  *  - multi-batch (every other entry): a harness split source
+  *    (`splitSource`: one file per split, read one per micro-batch). Each
+  *    source below keeps only its split predicates, its schema and its
+  *    scratch-dir name. For the events split (q_stream_late_drop/session/
+  *    stateful/multisink/…) the
   *    events table is split into THREE time-ordered files read one per
   *    micro-batch (`maxFilesPerTrigger 1` + AvailableNow), so the watermark
   *    advances across batches — late-data drop, session finalization,
@@ -117,89 +125,53 @@ object StreamingQ {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** Write one split as a SINGLE parquet file with a pinned modification
-    * time — the file-stream source orders files by modTime (oldest first),
-    * so batch order is deterministic. */
-  private def writeSplit(df: DataFrame, dir: File, name: String, modTime: Long): Unit = {
-    val tmp = new File(dir, "_tmp")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-    val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-    Files.move(part.toPath, new File(dir, name).toPath,
-      StandardCopyOption.REPLACE_EXISTING)
-    new File(dir, name).setLastModified(modTime)
-    tmp.listFiles().foreach(_.delete()); tmp.delete()
-  }
-
-  /** Materialize the three-file split corpus (idempotent per sf dir). */
-  private def splitDir(s: SparkSession, d: String): String = {
-    val dir = new File("target/qscratch/stream_mb3_" +
-      d.replaceAll("[^a-zA-Z0-9.]", "_"))
-    graft.BuildOnce(dir) {
+  /** The 3-batch file-stream source over the events split (see object
+    * doc), through [[graft.StreamHarness]] like every split below. */
+  private def mbStream(s: SparkSession, d: String): DataFrame =
+    StreamHarness.splitSource(s,
+      StreamHarness.scratchDir("stream_mb3", d), mbSchema) {
       val ev = graft.Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      writeSplit(ev.filter(batch0Cond), dir, "batch0.parquet", 1000000L)
-      writeSplit(ev.filter(batch1Cond), dir, "batch1.parquet", 2000000L)
-      writeSplit(ev.filter(!batch0Cond && !batch1Cond), dir, "batch2.parquet", 3000000L)
+      Seq(ev.filter(batch0Cond), ev.filter(batch1Cond),
+        ev.filter(!batch0Cond && !batch1Cond))
     }
-    dir.getAbsolutePath
-  }
+
+  /** The three `key % 3` splits of `df` — the split of every stream below
+    * whose batches model an arbitrary arrival order. */
+  private def mod3(df: DataFrame, key: String): Seq[DataFrame] =
+    (0 until 3).map(k => df.filter(col(key) % 3 === k))
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("source", StringType)))
 
   /** Three-file documents split (doc_id mod 3) for the stateless online-
-    * scoring query — same single-file-per-batch / pinned-modTime mechanics
-    * as the events split, but there is no event time here: the batches
-    * model an arbitrary arrival order of a document feed, and the query
-    * under test must be batching-invariant (stateless append). */
-  private def docSplitDir(s: SparkSession, d: String): String = {
-    val dir = new File("target/qscratch/stream_docs3_" +
-      d.replaceAll("[^a-zA-Z0-9.]", "_"))
-    graft.BuildOnce(dir) {
-      val docs = graft.Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), col("source"))
-      writeSplit(docs.filter(col("doc_id") % 3 === 0), dir, "batch0.parquet", 1000000L)
-      writeSplit(docs.filter(col("doc_id") % 3 === 1), dir, "batch1.parquet", 2000000L)
-      writeSplit(docs.filter(col("doc_id") % 3 === 2), dir, "batch2.parquet", 3000000L)
-    }
-    dir.getAbsolutePath
-  }
-
+    * scoring and curation entries — there is no event time here: the
+    * batches model an arbitrary arrival order of a document feed, and the
+    * query under test must be batching-invariant (stateless append). */
   private def docStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .option("pathGlobFilter", "batch*.parquet")
-      .parquet(docSplitDir(s, d))
+    StreamHarness.splitSource(s,
+      StreamHarness.scratchDir("stream_docs3", d), docSchema) {
+      mod3(graft.Tables.documents(s, d)
+        .select(col("doc_id"), col("text"), col("source")), "doc_id")
+    }
 
   private val embSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
+  private def embeddings(s: SparkSession, d: String): DataFrame =
+    graft.Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+
   /** Three-file embeddings split (vec_id mod 3) for the streaming
     * index-maintenance query — batch 0 is the corpus the index is built
     * over, batches 1 and 2 are delta arrivals. */
-  private def embSplitDir(s: SparkSession, d: String): String = {
-    val dir = new File("target/qscratch/stream_emb3_" +
-      d.replaceAll("[^a-zA-Z0-9.]", "_"))
-    graft.BuildOnce(dir) {
-      val emb = graft.Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-      writeSplit(emb.filter(col("vec_id") % 3 === 0), dir, "batch0.parquet", 1000000L)
-      writeSplit(emb.filter(col("vec_id") % 3 === 1), dir, "batch1.parquet", 2000000L)
-      writeSplit(emb.filter(col("vec_id") % 3 === 2), dir, "batch2.parquet", 3000000L)
-    }
-    dir.getAbsolutePath
-  }
-
   private def embStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .option("pathGlobFilter", "batch*.parquet")
-      .parquet(embSplitDir(s, d))
+    StreamHarness.splitSource(s,
+      StreamHarness.scratchDir("stream_emb3", d), embSchema) {
+      mod3(embeddings(s, d), "vec_id")
+    }
 
   /** RANGE-keyed three-file embeddings split (vec_id < 300 / 300..399 /
     * ≥ 400) for the streaming PQ-encode entry: the %3 split would tear
@@ -209,49 +181,23 @@ object StreamingQ {
     * the initial corpus the frozen models are trained on, batches 1–2
     * are later arrivals encoded against them. Fixed absolute boundaries
     * so the oracle mirrors the predicate verbatim at every SF. */
-  private def embRangeSplitDir(s: SparkSession, d: String): String = {
-    val dir = new File("target/qscratch/stream_embr3_" +
-      d.replaceAll("[^a-zA-Z0-9.]", "_"))
-    graft.BuildOnce(dir) {
-      val emb = graft.Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-      writeSplit(emb.filter(col("vec_id") < 300), dir, "batch0.parquet", 1000000L)
-      writeSplit(emb.filter(col("vec_id") >= 300 && col("vec_id") < 400),
-        dir, "batch1.parquet", 2000000L)
-      writeSplit(emb.filter(col("vec_id") >= 400), dir, "batch2.parquet", 3000000L)
-    }
-    dir.getAbsolutePath
-  }
-
   private def embRangeStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .option("pathGlobFilter", "batch*.parquet")
-      .parquet(embRangeSplitDir(s, d))
+    StreamHarness.splitSource(s,
+      StreamHarness.scratchDir("stream_embr3", d), embSchema) {
+      val emb = embeddings(s, d)
+      Seq(emb.filter(col("vec_id") < 300),
+        emb.filter(col("vec_id") >= 300 && col("vec_id") < 400),
+        emb.filter(col("vec_id") >= 400))
+    }
 
   /** Three-file QUERY split (the vec_id < 10 query vectors, vec_id mod 3)
-    * for the streaming serving entry — the corpus itself never streams,
+    * for the streaming serving entries — the corpus itself never streams,
     * it is the frozen index's training data. */
-  private def embQuerySplitDir(s: SparkSession, d: String): String = {
-    val dir = new File("target/qscratch/stream_embq3_" +
-      d.replaceAll("[^a-zA-Z0-9.]", "_"))
-    graft.BuildOnce(dir) {
-      val q = graft.Tables.embeddings(s, d).filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("embedding"))
-      writeSplit(q.filter(col("vec_id") % 3 === 0), dir, "batch0.parquet", 1000000L)
-      writeSplit(q.filter(col("vec_id") % 3 === 1), dir, "batch1.parquet", 2000000L)
-      writeSplit(q.filter(col("vec_id") % 3 === 2), dir, "batch2.parquet", 3000000L)
-    }
-    dir.getAbsolutePath
-  }
-
   private def embQueryStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .option("pathGlobFilter", "batch*.parquet")
-      .parquet(embQuerySplitDir(s, d))
+    StreamHarness.splitSource(s,
+      StreamHarness.scratchDir("stream_embq3", d), embSchema) {
+      mod3(embeddings(s, d).filter(col("vec_id") < 10), "vec_id")
+    }
 
   private val cdcSchema = StructType(Seq(
     StructField("k", LongType), StructField("seq", LongType),
@@ -262,34 +208,19 @@ object StreamingQ {
     * updates (%10≡3, seq 2, price ×1.10), batch 2 = the deletes (%7≡0,
     * seq 3) — so the stream replays exactly the changelog the batch entry
     * folds in one pass, and the full-feed oracle is shared verbatim. */
-  private def cdcSplitDir(s: SparkSession, d: String): String = {
-    val dir = new File("target/qscratch/stream_cdc3_" +
-      d.replaceAll("[^a-zA-Z0-9.]", "_"))
-    graft.BuildOnce(dir) {
+  private def cdcStream(s: SparkSession, d: String): DataFrame =
+    StreamHarness.splitSource(s,
+      StreamHarness.scratchDir("stream_cdc3", d), cdcSchema) {
       val orders = graft.Tables.orders(s, d)
-      val cents = round(col("o_totalprice") * 100).cast("long")
-      writeSplit(orders.select(col("o_orderkey").as("k"), lit(1L).as("seq"),
-        lit("I").as("op"), cents.as("price_cents")),
-        dir, "batch0.parquet", 1000000L)
-      writeSplit(orders.filter(col("o_orderkey") % 10 === 3)
-        .select(col("o_orderkey").as("k"), lit(2L).as("seq"),
+      val k = col("o_orderkey").as("k")
+      Seq(orders.select(k, lit(1L).as("seq"), lit("I").as("op"),
+          round(col("o_totalprice") * 100).cast("long").as("price_cents")),
+        orders.filter(col("o_orderkey") % 10 === 3).select(k, lit(2L).as("seq"),
           lit("U").as("op"),
           round(col("o_totalprice") * 110).cast("long").as("price_cents")),
-        dir, "batch1.parquet", 2000000L)
-      writeSplit(orders.filter(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey").as("k"), lit(3L).as("seq"),
-          lit("D").as("op"), lit(null).cast("long").as("price_cents")),
-        dir, "batch2.parquet", 3000000L)
+        orders.filter(col("o_orderkey") % 7 === 0).select(k, lit(3L).as("seq"),
+          lit("D").as("op"), lit(null).cast("long").as("price_cents")))
     }
-    dir.getAbsolutePath
-  }
-
-  private def cdcStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(cdcSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .option("pathGlobFilter", "batch*.parquet")
-      .parquet(cdcSplitDir(s, d))
 
   /** Child session for the multi-batch stateful queries: stateful streaming
     * partitions = state-store instances per micro-batch, so they are sized
@@ -306,14 +237,6 @@ object StreamingQ {
         totalCores = s0.sparkContext.defaultParallelism).toString)
     s
   }
-
-  /** The 3-batch file-stream source over the split corpus. */
-  private def mbStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(mbSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .option("pathGlobFilter", "batch*.parquet")
-      .parquet(splitDir(s, d))
 
   /** Per-key running state for q_stream_stateful (B44). */
   case class UserEv(user_id: Long, cents: Long)
@@ -332,22 +255,6 @@ object StreamingQ {
         .option("pathGlobFilter", "events.parquet").parquet(d))
   }
 
-  /** Run `df` to completion into a memory sink and return its contents.
-    * A timed-out query is stopped and thrown, never read: a partial sink
-    * would surface as a baffling nondeterministic oracle mismatch. */
-  private def runToTable(s: SparkSession, df: DataFrame, name: String,
-                         mode: String): DataFrame = {
-    s.catalog.dropTempView(name)
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    if (!q.awaitTermination(180000)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"streaming query $name still running after 180 s — refusing to read a partial sink")
-    }
-    s.table(name)
-  }
-
   /** The multi-batch harness FLOOR for Bench (r8 verdict): the same
     * machinery every multi-batch entry pays — child session, 3-file split
     * source read one file per micro-batch, checkpointed AvailableNow run,
@@ -363,7 +270,7 @@ object StreamingQ {
     val src = mbStream(s, d)
       .withWatermark("ts", DELAY)
       .select(col("event_id"), col("ts"))
-    runToTable(s, src, "graft_stream_harness_floor", "append")
+    StreamHarness.toTable(src, "graft_stream_harness_floor", "append")
       .agg(count(lit(1)).as("n"))
   }
 
@@ -382,7 +289,7 @@ object StreamingQ {
   def harnessJoinFloor(s0: SparkSession, d: String): DataFrame = {
     val s = mbSession(s0)
     val joined = intervalJoin(s, d, "__floor_none__", "__floor_none__", "inner")
-    runToTable(s, joined, "graft_stream_join_floor", "append")
+    StreamHarness.toTable(joined, "graft_stream_join_floor", "append")
       .agg(count(lit(1)).as("n"))
   }
 
@@ -417,7 +324,7 @@ object StreamingQ {
         .agg(count(lit(1)).as("n"), moneySum(col("value"), 2).as("total_value"))
         .select(to_date(col("w.start")).as("day"), col("event_type"),
           col("n"), col("total_value"))
-      runToTable(s, agg, "graft_stream_tumbling", "complete")
+      StreamHarness.toTable(agg, "graft_stream_tumbling", "complete")
         .orderBy(col("day"), col("event_type"))
     },
 
@@ -439,7 +346,7 @@ object StreamingQ {
         .select(to_date(col("w.start")).as("day"), posexplode(col("top")))
         .select(col("day"), (col("pos") + 1).cast("int").as("rn"),
           col("col._2").as("event_id"), col("col._1").cast("long").as("cents"))
-      runToTable(s, agg, "graft_stream_topk", "complete")
+      StreamHarness.toTable(agg, "graft_stream_topk", "complete")
         .orderBy(col("day"), col("rn"))
     },
 
@@ -449,7 +356,7 @@ object StreamingQ {
         .groupBy(window(col("ts"), "2 days", "1 day").as("w"))
         .agg(count(lit(1)).as("n"), moneySum(col("value"), 2).as("total_value"))
         .select(to_date(col("w.start")).as("win_start"), col("n"), col("total_value"))
-      runToTable(s, agg, "graft_stream_sliding", "complete")
+      StreamHarness.toTable(agg, "graft_stream_sliding", "complete")
         .orderBy(col("win_start"))
     },
 
@@ -459,7 +366,7 @@ object StreamingQ {
         .withWatermark("ts", "1 hour")
         .dropDuplicates("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-      runToTable(s, dedup, "graft_stream_dedup", "append")
+      StreamHarness.toTable(dedup, "graft_stream_dedup", "append")
         .orderBy(col("user_id"), col("event_type"))
     },
 
@@ -477,7 +384,7 @@ object StreamingQ {
         .agg(count(lit(1)).as("n"), moneySum(col("value"), 2).as("total_value"))
         .select(to_date(col("w.start")).as("day"), col("event_type"),
           col("n"), col("total_value"))
-      runToTable(s, agg, "graft_stream_late_drop", "append")
+      StreamHarness.toTable(agg, "graft_stream_late_drop", "append")
         .orderBy(col("day"), col("event_type"))
     },
 
@@ -498,7 +405,7 @@ object StreamingQ {
         .groupBy(window(col("ts"), "2 days", "1 day").as("w"))
         .agg(count(lit(1)).as("n"), moneySum(col("value"), 2).as("total_value"))
         .select(to_date(col("w.start")).as("win_start"), col("n"), col("total_value"))
-      runToTable(s, agg, "graft_stream_sliding_append", "append")
+      StreamHarness.toTable(agg, "graft_stream_sliding_append", "append")
         .orderBy(col("win_start"))
     },
 
@@ -516,7 +423,7 @@ object StreamingQ {
         .agg(count(lit(1)).as("n_events"), moneySum(col("value"), 2).as("session_value"))
         .select(col("user_id"), unix_micros(col("w.start")).as("session_start_us"),
           col("n_events"), col("session_value"))
-      runToTable(s, agg, "graft_stream_session", "append")
+      StreamHarness.toTable(agg, "graft_stream_session", "append")
         .orderBy(col("user_id"), col("session_start_us"))
     },
 
@@ -537,7 +444,7 @@ object StreamingQ {
         .select(col("event_id"), col("user_id"),
           col("c_mktsegment").as("segment"),
           round(col("value") * 100).cast("long").as("cents"))
-      runToTable(s, out, "graft_stream_static", "append")
+      StreamHarness.toTable(out, "graft_stream_static", "append")
         .orderBy(col("event_id"))
     },
 
@@ -573,7 +480,7 @@ object StreamingQ {
           col("cents") * 2 > col("q3") * 2 + (col("q3") - col("q1")) * 3)
         .select(col("event_id"), col("event_type"), col("cents"),
           col("q1"), col("q3"))
-      runToTable(s, out, "graft_stream_anomaly", "append")
+      StreamHarness.toTable(out, "graft_stream_anomaly", "append")
         .orderBy(col("event_id"))
     },
 
@@ -596,7 +503,7 @@ object StreamingQ {
         .select(col("doc_id"), col("source"),
           scoreF(col("text")).as("logit_micro"))
         .withColumn("keep", col("logit_micro") >= 0L)
-      runToTable(s, out, "graft_stream_model_apply", "append")
+      StreamHarness.toTable(out, "graft_stream_model_apply", "append")
         .orderBy(col("doc_id"))
     },
 
@@ -618,7 +525,7 @@ object StreamingQ {
         .select(col("user_id"), col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("purch_ts")).as("purch_us"))
-      runToTable(s, joined, "graft_stream_join", "append")
+      StreamHarness.toTable(joined, "graft_stream_join", "append")
         .orderBy(col("user_id"), col("click_id"), col("purch_id"))
     },
 
@@ -635,7 +542,7 @@ object StreamingQ {
         .select(col("user_id"), col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("purch_ts")).as("purch_us"))
-      runToTable(s, joined, "graft_stream_join_left", "append")
+      StreamHarness.toTable(joined, "graft_stream_join_left", "append")
         .orderBy(col("user_id"), col("click_id"), col("purch_id"))
     },
 
@@ -649,7 +556,7 @@ object StreamingQ {
       val joined = intervalJoin(s, d, "click", "purchase", "left_semi")
         .select(col("user_id"), col("click_id"),
           unix_micros(col("click_ts")).as("click_us"))
-      runToTable(s, joined, "graft_stream_join_semi", "append")
+      StreamHarness.toTable(joined, "graft_stream_join_semi", "append")
         .orderBy(col("user_id"), col("click_id"))
     },
 
@@ -665,7 +572,7 @@ object StreamingQ {
           col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("purch_ts")).as("purch_us"))
-      runToTable(s, joined, "graft_stream_join_right", "append")
+      StreamHarness.toTable(joined, "graft_stream_join_right", "append")
         .orderBy(col("user_id"), col("click_id").asc_nulls_last,
           col("purch_id"))
     },
@@ -690,7 +597,7 @@ object StreamingQ {
           col("click_id"), col("purch_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("purch_ts")).as("purch_us"))
-      runToTable(s, joined, "graft_stream_join_full", "append")
+      StreamHarness.toTable(joined, "graft_stream_join_full", "append")
         .orderBy(col("user_id"), col("click_id").asc_nulls_last,
           col("purch_id").asc_nulls_last)
     },
@@ -716,7 +623,7 @@ object StreamingQ {
             state.update(next)
             Iterator(UserOut(uid, next.updSeq, next.n, next.cents))
           })
-      runToTable(s, out.toDF(), "graft_stream_stateful", "update")
+      StreamHarness.toTable(out.toDF(), "graft_stream_stateful", "update")
         .orderBy(col("user_id"), col("upd_seq"))
     },
 
@@ -737,7 +644,7 @@ object StreamingQ {
       val out = typed.groupByKey(_._1)
         .transformWithState(new UserRunningProcessor, TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "upd_seq", "n_events", "total_cents")
-      runToTable(s, out, "graft_stream_tws", "update")
+      StreamHarness.toTable(out, "graft_stream_tws", "update")
         .orderBy(col("user_id"), col("upd_seq"))
     },
 
@@ -749,38 +656,21 @@ object StreamingQ {
     // per-batch append semantics are what the oracle hashes.
     "q_stream_multisink" -> { (s0, d) =>
       val s = mbSession(s0)
-      // pid-scoped: this root is DELETED and rebuilt per invocation (the
-      // sink is the query's output), so unlike the build-once fixtures it
-      // can never be shared — a concurrent Bench ∥ Verify pair would
-      // delete each other's in-flight sink. Dirs die with `sbt clean`.
-      val root = new File("target/qscratch/stream_sink_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
+      val root = StreamHarness.scratchRoot("stream_sink", d)
       val byType = new File(root, "by_type").getPath
       val errors = new File(root, "errors").getPath
-      val q = mbStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("value") * 100).cast("long")).as("total_cents"))
-            .withColumn("batch_seq", lit(id).cast("int"))
-            .write.mode("append").parquet(byType)
-          batch.filter(col("event_type") === "error")
-            .groupBy((col("user_id") % 10).as("user_mod"))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("value") * 100).cast("long")).as("total_cents"))
-            .withColumn("batch_seq", lit(id).cast("int"))
-            .write.mode("append").parquet(errors)
-          ()
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_multisink still running after 180 s — refusing to read partial sinks")
+      StreamHarness.foreachBatch(mbStream(s, d), root) { (batch, id) =>
+        batch.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * 100).cast("long")).as("total_cents"))
+          .withColumn("batch_seq", lit(id).cast("int"))
+          .write.mode("append").parquet(byType)
+        batch.filter(col("event_type") === "error")
+          .groupBy((col("user_id") % 10).as("user_mod"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * 100).cast("long")).as("total_cents"))
+          .withColumn("batch_seq", lit(id).cast("int"))
+          .write.mode("append").parquet(errors)
       }
       s.read.parquet(byType)
         .select(lit("by_type").as("sink"), col("event_type").as("k"),
@@ -801,41 +691,26 @@ object StreamingQ {
     // final snapshot from scratch, proving 3 merges ≡ one global aggregate.
     "q_stream_upsert" -> { (s0, d) =>
       val s = mbSession(s0)
-      // pid-scoped for the same reason as q_stream_multisink's root
-      val root = new File("target/qscratch/stream_upsert_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
-      val q = mbStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val agg = batch.groupBy(col("user_id"))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("value") * 100).cast("long")).as("cents"))
-            .withColumn("last_batch", lit(id).cast("int"))
-          val prev = new File(root, s"v${id - 1}")
-          val merged =
-            if (!prev.exists()) agg
-            else {
-              val p = batch.sparkSession.read.parquet(prev.getPath)
-                .select(col("user_id"), col("n").as("pn"),
-                  col("cents").as("pc"), col("last_batch").as("pb"))
-              p.join(agg, Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("pn"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-                  (coalesce(col("pc"), lit(0L)) + coalesce(col("cents"), lit(0L))).as("cents"),
-                  coalesce(col("last_batch"), col("pb")).as("last_batch"))
-            }
-          merged.write.mode("overwrite").parquet(new File(root, s"v$id").getPath)
-          ()
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_upsert still running after 180 s — refusing to read a partial snapshot")
+      val root = StreamHarness.scratchRoot("stream_upsert", d)
+      StreamHarness.foreachBatch(mbStream(s, d), root) { (batch, id) =>
+        val agg = batch.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * 100).cast("long")).as("cents"))
+          .withColumn("last_batch", lit(id).cast("int"))
+        val prev = new File(root, s"v${id - 1}")
+        val merged =
+          if (!prev.exists()) agg
+          else {
+            val p = batch.sparkSession.read.parquet(prev.getPath)
+              .select(col("user_id"), col("n").as("pn"),
+                col("cents").as("pc"), col("last_batch").as("pb"))
+            p.join(agg, Seq("user_id"), "full_outer")
+              .select(col("user_id"),
+                (coalesce(col("pn"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
+                (coalesce(col("pc"), lit(0L)) + coalesce(col("cents"), lit(0L))).as("cents"),
+                coalesce(col("last_batch"), col("pb")).as("last_batch"))
+          }
+        merged.write.mode("overwrite").parquet(new File(root, s"v$id").getPath)
       }
       val last = root.listFiles().filter(_.getName.startsWith("v"))
         .map(_.getName.drop(1).toInt).max
@@ -857,23 +732,10 @@ object StreamingQ {
     // idempotence and the tombstone/resurrect ordering rules.
     "q_stream_cdc" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_cdc_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_cdc", d)
       val snapRoot = new File(root, "snap").getPath
-      val q = cdcStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_cdc still running after 180 s — refusing to read a partial snapshot")
+      StreamHarness.foreachBatch(cdcStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
       }
       graft.operators.StreamCdc.readLatest(s, snapRoot).orderBy(col("k"))
     },
@@ -889,23 +751,10 @@ object StreamingQ {
     // hand-built changelogs.
     "q_stream_cdc_asof" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_cdc_asof_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_cdc_asof", d)
       val snapRoot = new File(root, "snap").getPath
-      val q = cdcStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_cdc_asof still running after 180 s — refusing to read a partial snapshot")
+      StreamHarness.foreachBatch(cdcStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
       }
       (0L to 2L).map { h =>
         graft.operators.StreamCdc.readVersion(s, snapRoot, h)
@@ -927,23 +776,10 @@ object StreamingQ {
     // below-horizon bucket dirs kept, purge manifest tight + idempotent).
     "q_stream_cdc_vacuum" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_cdc_vac_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_cdc_vac", d)
       val snapRoot = new File(root, "snap").getPath
-      val q = cdcStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_cdc_vacuum still running after 180 s — refusing to read a partial snapshot")
+      StreamHarness.foreachBatch(cdcStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
       }
       graft.operators.StreamCdc.vacuum(s, snapRoot, horizon = 2L)
       graft.operators.StreamCdc.readLatest(s, snapRoot).orderBy(col("k"))
@@ -962,23 +798,10 @@ object StreamingQ {
     // determinism, the below-horizon applyBatch guard).
     "q_stream_cdc_rebase" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_cdc_reb_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_cdc_reb", d)
       val snapRoot = new File(root, "snap").getPath
-      val q = cdcStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_cdc_rebase still running after 180 s — refusing to read a partial snapshot")
+      StreamHarness.foreachBatch(cdcStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCdc.applyBatch(batch, bid, snapRoot)
       }
       graft.operators.StreamCdc.rebase(s, snapRoot, newId = 10L)
       graft.operators.StreamCdc.vacuum(s, snapRoot, horizon = 10L)
@@ -999,7 +822,7 @@ object StreamingQ {
     // appends only — never read+overwrite (the q_stream_upsert rule).
     //
     // Semantics are FIRST-ARRIVAL-WINS, arrival order (batch, doc_id)
-    // lexicographic (batch = doc_id % 3, the docSplitDir rule): a doc is
+    // lexicographic (batch = doc_id % 3, the docStream split): a doc is
     // exact-dropped iff its sha arrived earlier, near-dup-dropped iff a
     // confirmed pair links it to ANY earlier exact-unique arrival —
     // including one that was itself near-dup-dropped (the signature index
@@ -1016,12 +839,7 @@ object StreamingQ {
     // driver-side and pins zero leaks.
     "q_stream_curate" -> { (s0, d) =>
       val s = mbSession(s0)
-      // pid-scoped for the same reason as q_stream_multisink's root
-      val root = new File("target/qscratch/stream_curate_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_curate", d)
       val histDir = new File(root, "hist")
       val curDir = new File(root, "curated")
       // exactly-once since r12: the batch body lives in
@@ -1030,18 +848,9 @@ object StreamingQ {
       // rewrites identical state instead of double-appending; replay
       // pinned in StreamCurateSpec). Normal execution reads exactly what
       // the r11 append form read, so the oracle is unchanged.
-      val q = docStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCurate.curateBatch(batch, bid, histDir,
-            curDir, score = None)
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_curate still running after 180 s — refusing to read a partial corpus")
+      StreamHarness.foreachBatch(docStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCurate.curateBatch(batch, bid, histDir,
+          curDir, score = None)
       }
       graft.operators.StreamCurate.readAll(s, curDir).orderBy(col("doc_id"))
     },
@@ -1061,25 +870,12 @@ object StreamingQ {
     // every horizon.
     "q_stream_asof" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_asof_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_asof", d)
       val histDir = new File(root, "hist")
       val curDir = new File(root, "curated")
-      val q = docStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCurate.curateBatch(batch, bid, histDir,
-            curDir, score = None)
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_asof still running after 180 s — refusing to read a partial corpus")
+      StreamHarness.foreachBatch(docStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCurate.curateBatch(batch, bid, histDir,
+          curDir, score = None)
       }
       graft.operators.StreamCurate.compact(s, curDir.getPath, uptoBatch = 1)
       (1L to 3L).map { a =>
@@ -1109,11 +905,7 @@ object StreamingQ {
     // survivors.
     "q_stream_curate_scored" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_curate_scored_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_curate_scored", d)
       val histDir = new File(root, "hist")
       val curDir = new File(root, "curated")
       // frozen model + per-source P75 cutoffs, trained on the full corpus
@@ -1139,19 +931,9 @@ object StreamingQ {
       val cutDf = cutRows.toDF("source", "p75_micro")
       // same exactly-once batch body as q_stream_curate, plus the frozen
       // quality gate on the curated sink only (StreamCurate.curateBatch)
-      val q = docStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.StreamCurate.curateBatch(batch, bid, histDir,
-            curDir, score = Some((scoreU, cutDf)))
-        }
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_curate_scored still running after 180 s — refusing to " +
-            "read a partial corpus")
+      StreamHarness.foreachBatch(docStream(s, d), root) { (batch, bid) =>
+        graft.operators.StreamCurate.curateBatch(batch, bid, histDir,
+          curDir, score = Some((scoreU, cutDf)))
       }
       graft.operators.StreamCurate.readAll(s, curDir).orderBy(col("doc_id"))
     },
@@ -1171,26 +953,13 @@ object StreamingQ {
     // and retry idempotence.
     "q_stream_knn_insert" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_knn_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_knn", d)
       val gRoot = new File(root, "g").getPath
       val vRoot = new File(root, "v").getPath
-      val q = embStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.Ann.knnStreamBatch(batch, bid, gRoot, vRoot,
-            k = graft.queries.LlmOps.KnnK, graft.queries.LlmOps.KnnLshCfg,
-            rounds = 2, buildK = graft.queries.LlmOps.KnnBuildK, hops = 2)
-        }
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_knn_insert still running after 300 s — refusing to read a partial graph")
+      StreamHarness.foreachBatch(embStream(s, d), root) { (batch, bid) =>
+        graft.operators.Ann.knnStreamBatch(batch, bid, gRoot, vRoot,
+          k = graft.queries.LlmOps.KnnK, graft.queries.LlmOps.KnnLshCfg,
+          rounds = 2, buildK = graft.queries.LlmOps.KnnBuildK, hops = 2)
       }
       graft.operators.Ann.knnStreamState(s, gRoot)
         .select(col("src").as("vec_id"), col("rank"),
@@ -1212,11 +981,7 @@ object StreamingQ {
     // replay + rewrite idempotence.
     "q_stream_knn_search" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_knnq_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_knnq", d)
       val aRoot = new File(root, "a").getPath
       // offline: the frozen index over the corpus — the SAME deployed
       // artifact q_embed_knn_search serves (Frozen tag shared; r15
@@ -1230,19 +995,10 @@ object StreamingQ {
         graft.operators.Ann.knnGraph(corpus,
           k = graft.queries.LlmOps.KnnK, graft.queries.LlmOps.KnnLshCfg,
           rounds = 2, buildK = graft.queries.LlmOps.KnnBuildK))
-      val q = embQueryStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.Ann.knnStreamServe(batch, bid, corpus, gFrozen,
-            aRoot, k = graft.queries.LlmOps.KnnK,
-            graft.queries.LlmOps.KnnLshCfg, hops = 2)
-        }
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_knn_search still running after 300 s — refusing to read partial answers")
+      StreamHarness.foreachBatch(embQueryStream(s, d), root) { (batch, bid) =>
+        graft.operators.Ann.knnStreamServe(batch, bid, corpus, gFrozen,
+          aRoot, k = graft.queries.LlmOps.KnnK,
+          graft.queries.LlmOps.KnnLshCfg, hops = 2)
       }
       s.read.parquet(s"$aRoot/b*")
         .orderBy(col("qid"), col("rank"))
@@ -1262,11 +1018,7 @@ object StreamingQ {
     // idempotence.
     "q_stream_ivfpq_search" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_ivfpq_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_ivfpq", d)
       val aRoot = new File(root, "a").getPath
       val cfg = graft.operators.PqConfig()
       val nCoarse = graft.queries.LlmOps.IvfCfg.numCentroids
@@ -1288,18 +1040,9 @@ object StreamingQ {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         index.count()
-        val q = embQueryStream(s, d).writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", new File(root, "_ckpt").getPath)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            graft.operators.Pq.ivfStreamServe(batch, bid, index, cb, coarse,
-              aRoot, k = 3, nprobe = graft.queries.LlmOps.IvfCfg.nprobe, cfg)
-          }
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException(
-            "q_stream_ivfpq_search still running after 300 s — refusing to read partial answers")
+        StreamHarness.foreachBatch(embQueryStream(s, d), root) { (batch, bid) =>
+          graft.operators.Pq.ivfStreamServe(batch, bid, index, cb, coarse,
+            aRoot, k = 3, nprobe = graft.queries.LlmOps.IvfCfg.nprobe, cfg)
         }
         s.read.parquet(s"$aRoot/b*")
           .orderBy(col("qid"), col("rank"))
@@ -1310,7 +1053,7 @@ object StreamingQ {
     // B130 STREAMING IVFADC index MAINTENANCE — the WRITE side
     // ([[graft.operators.Pq.ivfStreamEncode]]; the B124 mirror for the
     // codes index): models are trained OFFLINE on the initial corpus
-    // (vec_id < 300 — the range split, see embRangeSplitDir for why %3
+    // (vec_id < 300 — the range split, see embRangeStream for why %3
     // would tear the seed contract) and FROZEN; the full corpus then
     // arrives in 3 range batches, each encoded map-side against the
     // frozen models into a batchId-keyed dir (exactly-once — encoding is
@@ -1322,11 +1065,7 @@ object StreamingQ {
     // encode and retry idempotence.
     "q_stream_ivfpq_insert" -> { (s0, d) =>
       val s = mbSession(s0)
-      val root = new File("target/qscratch/stream_ivfpqw_" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_p" + ProcessHandle.current().pid())
-      if (root.exists()) graft.Fs.deleteRecursively(root)
-      root.mkdirs()
+      val root = StreamHarness.scratchRoot("stream_ivfpqw", d)
       val iRoot = new File(root, "i").getPath
       val cfg = graft.operators.PqConfig()
       val nCoarse = graft.queries.LlmOps.IvfCfg.numCentroids
@@ -1337,18 +1076,9 @@ object StreamingQ {
       val cb = graft.operators.Pq.train(trainCorpus, cfg)
       val coarse = trainCorpus.filter(col("vec_id") < nCoarse)
         .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-      val q = embRangeStream(s, d).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", new File(root, "_ckpt").getPath)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.Pq.ivfStreamEncode(batch, bid, cb, coarse,
-            iRoot, cfg)
-        }
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_ivfpq_insert still running after 300 s — refusing to read a partial index")
+      StreamHarness.foreachBatch(embRangeStream(s, d), root) { (batch, bid) =>
+        graft.operators.Pq.ivfStreamEncode(batch, bid, cb, coarse,
+          iRoot, cfg)
       }
       val cs = (0 until cfg.m).map(m =>
         element_at(col("codes"), m + 1).as(s"c$m"))
@@ -1538,17 +1268,7 @@ object StreamingQ {
         |ORDER BY e.event_id""".stripMargin,
 
     "q_stream_model_apply" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id)
+      s"""WITH $sqlScoreReplay
         |SELECT d.doc_id, d.source, sc.logit_micro,
         |  sc.logit_micro >= 0 AS keep
         |FROM documents d JOIN sc ON d.doc_id = sc.doc_id
@@ -1924,7 +1644,7 @@ object StreamingQ {
     },
 
     "q_stream_curate_scored" ->
-      """WITH d AS (SELECT doc_id, text, source, doc_id % 3 AS b FROM documents),
+      s"""WITH d AS (SELECT doc_id, text, source, doc_id % 3 AS b FROM documents),
         |es AS (SELECT doc_id, text, source, b FROM (
         |  SELECT *, row_number() OVER (
         |    PARTITION BY sha256(text) ORDER BY b, doc_id) AS rn FROM d) t
@@ -1964,17 +1684,7 @@ object StreamingQ {
         |    / 1e3 >= 0.8),
         |dropped AS (SELECT DISTINCT CASE WHEN doc_b % 3 >= doc_a % 3
         |    THEN doc_b ELSE doc_a END AS doc_id FROM pairs),
-        |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |        FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id),
+        |$sqlScoreReplay,
         |ds AS (SELECT dd.source, dd.doc_id, sc.logit_micro
         |  FROM documents dd JOIN sc ON sc.doc_id = dd.doc_id),
         |hst AS (SELECT source, logit_micro, count(*)::BIGINT AS c

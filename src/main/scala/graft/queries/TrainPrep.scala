@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import QUtil.sqlScoreReplay
 
 /** Training-data preparation operators (SURVEY.md §2 B60/B61): benchmark
   * contamination detection, document chunking, deterministic sequence
@@ -939,17 +940,7 @@ object TrainPrep {
 
     // the single-partition window form the scalable rank replaces
     "q_train_curriculum" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id),
+      s"""WITH $sqlScoreReplay,
         |r AS (SELECT doc_id, logit_micro,
         |    row_number() OVER (ORDER BY logit_micro DESC, doc_id) AS rank,
         |    count(*) OVER () AS n
@@ -1046,17 +1037,7 @@ object TrainPrep {
          |GROUP BY dw.doc_id ORDER BY dw.doc_id""".stripMargin,
 
     "q_score_ks_drift" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id),
+      s"""WITH $sqlScoreReplay,
         |ds AS (SELECT d.source, d.doc_id, sc.logit_micro
         |  FROM documents d JOIN sc ON sc.doc_id = d.doc_id),
         |cnt AS (SELECT source, logit_micro,
@@ -1081,17 +1062,7 @@ object TrainPrep {
 
     // Mann-Whitney: the scorer replay + doubled-midrank window arithmetic
     "q_score_mw_drift" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id),
+      s"""WITH $sqlScoreReplay,
         |ds AS (SELECT d.source, d.doc_id, sc.logit_micro
         |  FROM documents d JOIN sc ON sc.doc_id = d.doc_id),
         |cnt AS (SELECT source, logit_micro,
@@ -1113,17 +1084,7 @@ object TrainPrep {
         |FROM agg ORDER BY source""".stripMargin,
 
     "q_model_apply" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id)
+      s"""WITH $sqlScoreReplay
         |SELECT d.source, d.lang, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN sc.logit_micro >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |  CAST(sum(sc.logit_micro) AS BIGINT) AS logit_sum,
@@ -1133,17 +1094,7 @@ object TrainPrep {
         |GROUP BY d.source, d.lang ORDER BY d.source, d.lang""".stripMargin,
 
     "q_score_calibrate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id),
+      s"""WITH $sqlScoreReplay,
         |scd AS (
         |  SELECT d.source, sc.logit_micro
         |  FROM documents d JOIN sc ON d.doc_id = sc.doc_id),
@@ -1159,17 +1110,7 @@ object TrainPrep {
         |GROUP BY c.source, c.n_docs, c.p75_micro ORDER BY c.source""".stripMargin,
 
     "q_score_calibrate_lang" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |model AS (
-        |  SELECT term,
-        |    CAST('0x' || substr(md5(term), 1, 7) AS BIGINT) % 2001 - 1000 AS w_micro
-        |  FROM (SELECT term, count(*) AS c FROM tok GROUP BY term)
-        |  WHERE c >= 3),
-        |sc AS (
-        |  SELECT t.doc_id,
-        |    CAST(sum(coalesce(m.w_micro, 0)) AS BIGINT) AS logit_micro
-        |  FROM tok t LEFT JOIN model m USING (term) GROUP BY t.doc_id),
+      s"""WITH $sqlScoreReplay,
         |scd AS (
         |  SELECT d.source, d.lang, sc.logit_micro
         |  FROM documents d JOIN sc ON d.doc_id = sc.doc_id),

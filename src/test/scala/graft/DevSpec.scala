@@ -25,6 +25,22 @@ class DevSpec extends AnyFunSuite {
     assert(mains.sorted === List("Bench", "CurateCli", "Dev", "IngestCli", "Verify"))
   }
 
+  /** The src/main files (relative to src/main) whose text contains `text`. */
+  private def mainFilesMatching(text: String): List[String] =
+    Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(text))
+      .map(p => Paths.get("src/main").relativize(p).toString).toList.sorted
+
+  test("only the streaming harness (and IngestCli's unbounded loop) waits on a query or scopes by pid") {
+    // a new streaming entry must run through StreamHarness, not bring back
+    // its own copy of the run/wait/stop block or of the pid-scoped root
+    assert(mainFilesMatching("awaitTermination(") ===
+      List("scala/graft/StreamHarness.scala", "scala/graft/ingestion/IngestCli.scala"))
+    assert(mainFilesMatching("ProcessHandle.current") ===
+      List("scala/graft/StreamHarness.scala"))
+  }
+
   private def devExit(args: String*): (Int, String) = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val proc = new ProcessBuilder(

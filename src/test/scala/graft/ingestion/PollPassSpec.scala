@@ -77,6 +77,11 @@ class PollPassSpec extends SparkSpecBase {
     assert(out.counts(SkipGate.IsbnFolderExists) === 1)
     assert(out.counts(SkipGate.DuplicateInBatch) === 1)
     assert(isbns(wh, Zone.Workflow).size === 4)
+    // a second poll over the same files finds the same 5 dead letters
+    // (what the count reports), but appends none of them again
+    val again = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2)
+    assert(again.counts(C.DeadLetter) === 5)
+    assert(spark.read.parquet(s"$wh/${Zone.DeadLetter}").count() === 5)
   }
 
   test("a key repeated in history gates a polled ZIP once, never duplicates it") {

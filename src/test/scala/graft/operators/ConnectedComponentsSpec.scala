@@ -37,6 +37,22 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     }
   }
 
+  /** Run `body` with the session's reliable-checkpoint mode on (and
+    * `dir` as its checkpoint dir, if given), restoring the conf and the
+    * context's dir after — the PageRankSpec pattern. */
+  private def withReliable[T](dir: Option[String])(body: => T): T = {
+    val sc = spark.sparkContext
+    val prevDir = sc.getCheckpointDir
+    spark.conf.set(Materialize.ReliableKey, "true")
+    dir.foreach(spark.conf.set(Materialize.DirKey, _))
+    try body
+    finally {
+      spark.conf.unset(Materialize.ReliableKey)
+      spark.conf.unset(Materialize.DirKey)
+      sc.setCheckpointDir(prevDir.orNull)
+    }
+  }
+
   test("reliable mode without any checkpoint dir fails loudly") {
     // silently defaulting to a driver-local path would defeat the point of
     // reliable checkpointing (surviving executor loss on a real cluster
@@ -44,14 +60,18 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     // reliable-mode test below, which is what sets the context's dir.
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
       intercept[IllegalArgumentException] {
-        ConnectedComponents.run(path(4), reliable = true)
+        withReliable(None)(ConnectedComponents.run(path(4)))
       }
     } else cancel("checkpoint dir already set on the shared context")
   }
 
   test("reliable-checkpoint mode produces identical labels") {
-    val res = ConnectedComponents.run(path(32), reliable = true,
-      checkpointDir = Some("target/cc_checkpoint_spec"))
-    assert(res.labels.collect().forall(_.getLong(1) == 0L))
+    val dir = scratch("cc_checkpoint_spec")
+    val labels = withReliable(Some(dir)) {
+      ConnectedComponents.run(path(32)).labels.collect().map(_.getLong(1)).toSet
+    }
+    assert(labels === Set(0L))
+    assert(new java.io.File(dir).list().nonEmpty,
+      "reliable mode left no checkpoint files in the configured dir")
   }
 }

@@ -298,51 +298,30 @@ class StreamCurateSpec extends SparkSpecBase {
     // the same checkpointLocation retries batch 1 against its own
     // committed output before continuing. Final state must equal the
     // uninterrupted run's byte-for-byte (same (doc_id, sha) row set).
+    import graft.StreamHarness
     import graft.operators.StreamCurate
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
     val root = new java.io.File(scratch("curate_restart"))
     val feed = new java.io.File(root, "feed"); feed.mkdirs()
     val docs = graft.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
-    // single-file-per-batch feed with pinned mod-times — the entries' own
-    // docSplitDir mechanics (file order = arrival order)
-    for (i <- 0 to 2) {
-      val tmp = new java.io.File(feed, "_tmp")
-      docs.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(feed, s"batch$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.setLastModified((i + 1) * 1000000L)
-      tmp.listFiles().foreach(_.delete()); tmp.delete()
-    }
-    val schema = docs.schema
+    // the catalog entry's own doc_id % 3 split, written by the same
+    // harness split writer (file order = arrival order)
+    StreamHarness.writeSplit(feed, (0 to 2).map(i => docs.filter(col("doc_id") % 3 === i)))
     val hist = new java.io.File(root, "hist")
     val cur = new java.io.File(root, "cur")
-    val ckpt = new java.io.File(root, "_ckpt").getPath
-    def stream(crashAfterBatch: Long): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .option("pathGlobFilter", "batch*.parquet")
-        .parquet(feed.getPath)
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
+    def stream(crashAfterBatch: Long): Unit =
+      try {
+        StreamHarness.foreachBatch(StreamHarness.readSplit(spark, feed, docs.schema),
+            root) { (batch, bid) =>
           StreamCurate.curateBatch(batch, bid, hist, cur, score = None)
           if (bid == crashAfterBatch)
             throw new RuntimeException(s"injected crash after batch $bid commit")
         }
-        .start()
-      try { if (!q.awaitTermination(180000)) fail("stream did not terminate") }
-      catch { case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+        assert(crashAfterBatch < 0, "the injected crash never fired")
+      } catch { case e: org.apache.spark.sql.streaming.StreamingQueryException =>
         assert(e.getMessage.contains("injected crash"),
           s"unexpected stream failure: $e")
-      } finally if (q.isActive) q.stop()
-    }
+      }
     stream(crashAfterBatch = 1) // dies with batch 1's state written
     stream(crashAfterBatch = -1) // restart: retries batch 1, runs batch 2
     val got = StreamCurate.readAll(spark, cur)
