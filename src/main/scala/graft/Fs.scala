@@ -12,4 +12,14 @@ object Fs {
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()
   }
+
+  /** The subdirectories of `root` whose names start with `prefix`, sorted
+    * by name — what the glob `root/prefix*` matches, listed here so a
+    * reader gets explicit paths: Spark probes a single read path for a
+    * streaming-sink log, and on a glob that probe logs a
+    * FileNotFoundException stack trace for the literal pattern. */
+  def subdirs(root: String, prefix: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+      .map(_.getPath).sorted
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Shared lineage-cut for the ITERATIVE operators (NN-descent rounds,
   * BPE merge rounds, index insert/delete repairs) — one place that decides
@@ -68,8 +69,12 @@ object Materialize {
   val DirKey = "graft.checkpoint.dir"
 
   /** A materialized round: the fresh-leaf frame plus the handle that
-    * frees its storage (no-op in reliable mode — data lives in files). */
-  final case class Cut(df: DataFrame, release: () => Unit)
+    * frees its storage (no-op in reliable mode — data lives in files).
+    * `onDriver`: the frame is a local relation built on the driver (a
+    * driver-resident training's result), `release` does nothing, and a
+    * consumer can use it as a small local table without materializing it
+    * again. */
+  final case class Cut(df: DataFrame, release: () => Unit, onDriver: Boolean = false)
 
   private def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption(ReliableKey).exists(_.toBoolean)
@@ -106,6 +111,19 @@ object Materialize {
   def cutFinal(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.getOption(CutFinalOffKey).exists(_.toBoolean)) df
     else checkpointed(df)
+
+  /** `df`'s rows persisted (MEMORY_AND_DISK, lineage kept) under a fresh
+    * LogicalRDD leaf. Lazy: the first action on the frame computes and
+    * caches the rows inside its own job, where `Dataset.persist` pays a
+    * separate job for its AQE cache stage. For a table whose one bounded
+    * read may be its only use, but which a later multi-round consumer
+    * must not recompute. */
+  def persisted(df: DataFrame): Cut = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    Cut(org.apache.spark.sql.GraftInternalRows.wrap(df.sparkSession, rows, df.schema),
+      () => { rows.unpersist(blocking = false); () })
+  }
 
   /** Eagerly materialize one iteration round: fresh-leaf stats + an
     * explicit storage-release handle (see object doc for the ordering

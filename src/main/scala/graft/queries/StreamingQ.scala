@@ -1000,7 +1000,7 @@ object StreamingQ {
           aRoot, k = graft.queries.LlmOps.KnnK,
           graft.queries.LlmOps.KnnLshCfg, hops = 2)
       }
-      s.read.parquet(s"$aRoot/b*")
+      s.read.parquet(graft.Fs.subdirs(aRoot, "b"): _*)
         .orderBy(col("qid"), col("rank"))
     },
 
@@ -1044,7 +1044,7 @@ object StreamingQ {
           graft.operators.Pq.ivfStreamServe(batch, bid, index, cb, coarse,
             aRoot, k = 3, nprobe = graft.queries.LlmOps.IvfCfg.nprobe, cfg)
         }
-        s.read.parquet(s"$aRoot/b*")
+        s.read.parquet(graft.Fs.subdirs(aRoot, "b"): _*)
           .orderBy(col("qid"), col("rank"))
           .localCheckpoint(true)
       } finally index.unpersist(blocking = false)
@@ -1082,7 +1082,7 @@ object StreamingQ {
       }
       val cs = (0 until cfg.m).map(m =>
         element_at(col("codes"), m + 1).as(s"c$m"))
-      s.read.parquet(s"$iRoot/b*")
+      s.read.parquet(graft.Fs.subdirs(iRoot, "b"): _*)
         .select(col("vec_id") +: col("cell") +: cs: _*)
         .orderBy(col("vec_id"))
         .localCheckpoint(true)

@@ -683,8 +683,8 @@ object TrainPrep {
     },
 
     // B84 BATCHED merge induction (r14 verdict #2 — the exact-safe prefix
-    // rule, its three-part proof, and the rounds-not-merges job bound all
-    // on graft.operators.Bpe.mergesBatched): the first 8 merges learned
+    // rule and its three-part proof on graft.operators.Bpe.safePrefix, the
+    // rounds-not-merges job bound on Bpe.mergesBatched): the first 8 merges learned
     // with per-round disjoint batches (cap 4) instead of 8 driver
     // round-trips. The ORACLE replays the merges SEQUENTIALLY (8 chained
     // sqlBpeRound CTEs — the same machinery as q_bpe_merges) — the hash
@@ -835,27 +835,30 @@ object TrainPrep {
     // The trained vocabulary IS the application of the learned table to
     // the training corpus (BpeSpec pins applyMerges ≡ the training-side
     // state), so the entry reuses mergesWithVocab's final symbol table
-    // rather than paying the application twice. The doc-words ⋈ word-type
-    // join is corpus-keyed on BOTH sides (word types grow with the corpus,
-    // heavy-tailed — not a broadcastable dimension), so the shuffled join
-    // is the correct 100 TB plan; AQE broadcasts at toy SF when it
-    // measures small. Oracle = the q_bpe_merges chained-CTE replay
-    // extended with the per-doc count join.
+    // rather than paying the application twice. Above Bpe.DriverSymbolCap
+    // the doc-words ⋈ word-type join is corpus-keyed on BOTH sides (word
+    // types grow with the corpus, heavy-tailed — not a broadcastable
+    // dimension), so the shuffled join is the correct 100 TB plan; under
+    // the cap the vocabulary was trained on the driver and joins as a
+    // local relation, which the planner broadcasts. Oracle = the
+    // q_bpe_merges chained-CTE replay extended with the per-doc count join.
     "q_text_tokens_learned" -> { (s, d) =>
       val docs = Tables.documents(s, d)
       val (_, vocabSyms) =
         graft.operators.Bpe.mergesWithVocab(docs, rounds = 3)
-      // mergesWithVocab returns the symbol table as a Materialize.Cut;
-      // materialize the per-word token counts (vocabulary-scale, a strictly
-      // smaller projection) via an eager localCheckpoint and release the
-      // training table's blocks NOW (r12 ADVICE) — a persist would pin it
-      // for the session's lifetime across every bench sweep, whereas
-      // checkpoint blocks are reclaimed by the ContextCleaner once the
-      // returned plan is dropped.
+      // mergesWithVocab returns the symbol table as a Materialize.Cut. A
+      // driver-resident training's table is a local relation: its per-word
+      // token counts join as a small local table, no job. A distributed
+      // one's per-word token counts (vocabulary-scale, a strictly smaller
+      // projection) are materialized via an eager localCheckpoint and the
+      // training table's blocks released NOW (r12 ADVICE) — a persist
+      // would pin it for the session's lifetime across every bench sweep,
+      // whereas checkpoint blocks are reclaimed by the ContextCleaner once
+      // the returned plan is dropped.
       val vocab = try {
-        vocabSyms.df
+        val toks = vocabSyms.df
           .select(col("word"), size(col("s")).cast("long").as("toks_w"))
-          .localCheckpoint(true)
+        if (vocabSyms.onDriver) toks else toks.localCheckpoint(true)
       } finally vocabSyms.release()
       docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) >= 1)

@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
 /** Access shim for graft's [[graft.operators.Materialize]] (the
-  * [[org.apache.spark.GraftBusFlush]] precedent): re-wrap an ALREADY
-  * MATERIALIZED `RDD[InternalRow]` — the checkpoint RDD a lineage cut just
-  * produced — in a fresh LogicalRDD leaf without the
+  * [[org.apache.spark.GraftBusFlush]] precedent): re-wrap an
+  * `RDD[InternalRow]` — the checkpoint RDD a lineage cut just produced, or
+  * a persisted one — in a fresh LogicalRDD leaf without the
   * `createDataFrame(ck.rdd, schema)` round-trip, which derives an
   * external-Row RDD (full InternalRow→Row decode) and re-encodes it on
   * every downstream read of every iteration round (r16 verdict #5).

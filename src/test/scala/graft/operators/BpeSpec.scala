@@ -157,13 +157,90 @@ class BpeSpec extends SparkSpecBase {
     assert(rounds < 8,
       s"batching never coalesced on the fixture (rounds=$rounds of 8 " +
         "merges) — the catalog entry's batching is vacuous")
-    // job-count guard: the bounds are the counts the typed rounds take on
-    // this fixture (the relational rewrite took 23 and 70); a return to a
-    // multi-stage rewrite per round fails here, not only in the bench
+    // job-count guard: the bounds are the counts the driver-resident
+    // rounds take on this fixture (the distributed typed rounds took 10
+    // and 22, the relational rewrite 23 and 70); a return to a job per
+    // round fails here, not only in the bench
     val seqJobs = jobs(Bpe.merges(docs, rounds = 3).collect())
-    assert(seqJobs <= 10, s"Bpe.merges(docs, 3) ran $seqJobs jobs, bound 10")
+    assert(seqJobs <= 2, s"Bpe.merges(docs, 3) ran $seqJobs jobs, bound 2")
     val batJobs = jobs(Bpe.mergesBatched(docs, totalMerges = 8, batchCap = 4).collect())
-    assert(batJobs <= 22, s"Bpe.mergesBatched(docs, 8, 4) ran $batJobs jobs, bound 22")
+    assert(batJobs <= 2, s"Bpe.mergesBatched(docs, 8, 4) ran $batJobs jobs, bound 2")
+    // and the distributed rounds learn the same, sequential and batched
+    assertSamePaths(docs, 8, batchCap = 1, "fixture sequential")
+    assertSamePaths(docs, 8, batchCap = 4, "fixture batched")
+  }
+
+  /** Everything one training run returns — merge table, round count,
+    * token curve, final vocabulary — and whether it ran on the driver. */
+  private def trained(docs: DataFrame, merges: Int, batchCap: Int, cap: Int) = {
+    val run = Bpe.induce(docs, merges, batchCap, applyLast = true, curve = true, cap = cap)
+    val v = run.vocab.cut()
+    try ((mergeRows(run.table), run.rounds, run.totals, table(v.df)), v.onDriver)
+    finally v.release()
+  }
+
+  /** Driver-resident and distributed training of the same corpus agree on
+    * every output, and each ran where it was asked to. */
+  private def assertSamePaths(docs: DataFrame, merges: Int, batchCap: Int, what: String) = {
+    val (drv, onDriver) = trained(docs, merges, batchCap, Bpe.DriverSymbolCap)
+    val (dist, distOnDriver) = trained(docs, merges, batchCap, cap = 0)
+    assert(onDriver && !distOnDriver, s"$what: the cap did not pick the paths")
+    assert(drv === dist, s"$what: driver-resident training diverged from distributed")
+    drv
+  }
+
+  test("driver-resident ≡ distributed rounds on the planted corpora") {
+    val planted = Seq(
+      Seq.fill(5)("abab").mkString(" ") + " " + Seq.fill(4)("cdcd").mkString(" ") +
+        " " + Seq.fill(3)("efef").mkString(" "),
+      "aaab aaab aab", "aib", "aaab aaab aab to to go")
+    for (text <- planted; batchCap <- Seq(1, 8)) {
+      val merges = if (text == "aib") 2 else 4
+      assertSamePaths(docsDf(text), merges, batchCap, s"'$text' batchCap $batchCap")
+    }
+  }
+
+  test("driver-resident ranking breaks count ties in UTF-8 byte order, as orderBy does") {
+    // U+FF21 ('Ａ') is EF BC A1 in UTF-8 and U+1F600 is F0 9F 98 80, so
+    // UTF-8 (and Spark's orderBy) puts Ａ first; UTF-16 String.compareTo
+    // compares the surrogate D83D with FF21 and puts the emoji first
+    val (fw, emoji) = (new String(Character.toChars(0xFF21)),
+      new String(Character.toChars(0x1F600)))
+    assert(fw.compareTo(emoji) > 0, "the planted pair no longer splits the two orders")
+    val docs = docsDf(s"$fw $emoji")
+    val s = spark
+    import s.implicits._
+    val byOrderBy = Seq((fw, "</w>"), (emoji, "</w>")).toDF("a", "b")
+      .orderBy(col("a"), col("b")).head().getString(0)
+    assert(byOrderBy === fw)
+    val drv = assertSamePaths(docs, 1, batchCap = 1, "UTF-8 tie")
+    assert(drv._1 === Seq((1, fw, "</w>", 1L)))
+  }
+
+  test("property: the incremental pair index equals a full recount on random corpora") {
+    // ASCII alphabets, so String order is UTF-8 order; every round the
+    // reference recounts all pairs of its own table and takes the argmax
+    for (seed <- 1 to 8) {
+      val rnd = new scala.util.Random(seed)
+      val alphabet = "abcd".take(2 + seed % 3)
+      val words = Seq.fill(80)(
+        Seq.fill(1 + rnd.nextInt(10))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+      val docs = docsDf(words.mkString(" "))
+      var ref = table(Bpe.symbolTable(docs))
+      val want = (1 to 12).map { r =>
+        val cnt = ref.values.toSeq.flatMap { case (f, sy) =>
+          sy.sliding(2).collect { case Seq(a, b) => (a, b) -> f }
+        }.groupMapReduce(_._1)(_._2)(_ + _)
+        val ((a, b), c) = cnt.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+        ref = ref.map { case (w, (f, sy)) => w -> ((f, Bpe.mergeWord(sy.toArray, a, b).toSeq)) }
+        (r, a, b, c)
+      }
+      val (drv, onDriver) = trained(docs, 12, 1, Bpe.DriverSymbolCap)
+      assert(onDriver)
+      assert(drv._1 === want, s"seed $seed")
+      assert(drv._4 === ref, s"seed $seed final vocabulary")
+      assert(drv._3.last === ref.values.map { case (f, sy) => f * sy.length }.sum)
+    }
   }
 
   /** Spark jobs started while `body` runs (listener bus drained both sides). */

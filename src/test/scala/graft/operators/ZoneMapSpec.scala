@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** B136 zone-map skipping: the layout claims the content-transparent
@@ -16,6 +18,19 @@ class ZoneMapSpec extends SparkSpecBase {
       .repartitionByRange(files, col("k"))
       .sortWithinPartitions(col("k"))
       .write.mode("overwrite").parquet(dir)
+
+  /** `df` as `files` partitions sorted by `key`, partition i holding the
+    * rows with key in [i·domain/files, (i+1)·domain/files) — an
+    * equal-depth range layout for a key uniform over [0, domain), with the
+    * boundaries fixed instead of sampled. */
+  private def rangeFiles(df: DataFrame, key: Column, domain: Long, files: Int): DataFrame = {
+    val keyed = df.withColumn("__k", key.cast("long"))
+    val parts = keyed.rdd
+      .keyBy(r => (r.getAs[Long]("__k") * files / domain).toInt)
+      .partitionBy(new HashPartitioner(files)).values
+    spark.createDataFrame(parts, keyed.schema)
+      .sortWithinPartitions(col("__k")).drop("__k")
+  }
 
   test("clustered layout: a narrow range opens a strict subset of files, content exact") {
     val dir = scratch("zonemap_clustered")
@@ -85,12 +100,15 @@ class ZoneMapSpec extends SparkSpecBase {
       (col("id") % 256L).as("a"),
       ((col("id") / 256L).cast("long") % 128L).as("b"),
       col("id").as("v"))
+    // both layouts cut at explicit range boundaries (repartitionByRange's
+    // boundary sample is seeded by the RDD id, so its files — and the
+    // counts compared below — shifted with how many RDDs the JVM had made)
     val zdir = scratch("zonemap_z")
-    ZOrder.cluster(base, col("a"), col("b"), numFiles = 16)
+    rangeFiles(base, ZOrder.interleave2(col("a"), col("b")), domain = n, files = 16)
       .write.mode("overwrite").parquet(zdir)
     ZoneMap.build(spark, zdir, Seq("a", "b"))
     val sdir = scratch("zonemap_sorted")
-    base.repartitionByRange(16, col("a")).sortWithinPartitions(col("a"), col("b"))
+    rangeFiles(base, col("a"), domain = 256L, files = 16)
       .write.mode("overwrite").parquet(sdir)
     ZoneMap.build(spark, sdir, Seq("a", "b"))
     val ranges = Seq(("a", 32L, 95L), ("b", 16L, 47L)) // 25% × 25% of the grid

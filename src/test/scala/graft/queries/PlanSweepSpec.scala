@@ -89,10 +89,11 @@ class PlanSweepSpec extends SparkSpecBase {
     // shuffled joins were removed outright — cell and codes now ride one
     // VecBestCell/VecPqCodes kernel projection, so those seven entries no
     // longer need a shuffled-join waiver and the sweep guards them again)
-    // B84 apply side: doc-word instances ⋈ the word-TYPE table — the type
-    // table is heavy-tailed corpus vocabulary (grows with the corpus, not
-    // a dimension), so the shuffled join is the 100 TB plan; AQE
-    // broadcasts at toy SF when it measures small
+    // B84 apply side: doc-word instances ⋈ the word-TYPE table — above
+    // Bpe.DriverSymbolCap the type table is heavy-tailed corpus vocabulary
+    // (grows with the corpus, not a dimension), so the shuffled join is
+    // the 100 TB plan; under the cap (every fixture) it is a driver-local
+    // relation and plans as a broadcast
     "q_text_tokens_learned",
     // B96 residual: the residual map joins the corpus to the broadcast
     // coarse centroids, but q_embed_ivfpq_residual's RE-RANK fetch joins

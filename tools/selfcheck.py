@@ -4,6 +4,9 @@ engine; the engine is pure Scala/Spark). Usage:
 
     sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
     python3 tools/selfcheck.py /tmp/verify_out /root/testdata/sf0.01
+
+Every entry listed in <out>/verify_errors.json counts as a failure: Verify
+could not write it, so <out>/<name> can only hold an earlier run's output.
 """
 import duckdb, json, sys, glob
 
@@ -17,9 +20,16 @@ for t in ['region', 'nation', 'customer', 'supplier', 'part', 'orders',
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
 oracle = json.load(open(f'{out}/oracle_sql.json'))
-fails = []
+# Entries Verify could not build or write: whatever parquet <out>/<name>
+# holds is an earlier run's, so these fail without a compare.
+try:
+    errors = json.load(open(f'{out}/verify_errors.json'))
+except FileNotFoundError:
+    errors = {'verify_errors.json': 'MISSING (Verify writes it on every run)'}
+fails = [(name, f'VERIFY ERROR {msg}') for name, msg in sorted(errors.items())
+         if not only or name in only]
 for name, sql in sorted(oracle.items()):
-    if only and name not in only:
+    if (only and name not in only) or name in errors:
         continue
     spark_files = glob.glob(f'{out}/{name}/*.parquet')
     if not spark_files:
@@ -48,6 +58,6 @@ for name, sql in sorted(oracle.items()):
         print(f'OK   {name} ({len(got)} rows)')
 for name, msg in fails:
     print(f'FAIL {name}: {msg}')
-n = len(only) if only else len(oracle)
+n = len(only) if only else len(set(oracle) | set(errors))
 print(f'\n{n - len(fails)}/{n} pass')
 sys.exit(1 if fails else 0)
