@@ -4,10 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 import graft.operators.{Materialize, ScaleSoak}
 import graft.queries.StreamingQ
@@ -15,7 +14,8 @@ import graft.queries.StreamingQ
 /** The one dev entry point: measurement and evidence tools around the
   * catalog. None of them is part of the bench contract; every timed run
   * goes through [[Bench.timeNoop]], so a dev number is measured exactly as
-  * a bench row is.
+  * a bench row is, and every job, stage, shuffle and micro-batch number
+  * comes from [[Measure.during]].
   *
   *   sbt "runMain graft.Dev run q_dedup_minhash_lsh <sfDir> explain"
   *       time one entry twice (run 1 pays JVM/codegen warm-up, run 2 is
@@ -30,7 +30,7 @@ import graft.queries.StreamingQ
   *   sbt "runMain graft.Dev prof q_embed_ivfpq [sfDir] [runs]"
   *       per-stage cost, per-micro-batch `durationMs` and per-state-operator
   *       rows for one entry, or for the bench's `__floor` / `__join_floor`
-  *       streaming harnesses (see [[Collector]])
+  *       streaming harnesses, read from one [[Measure.during]] per run
   *   sbt "runMain graft.Dev scale <section> [dir] [outFile]"
   *       regenerate one SCALE.md section in place (see [[scaleSections]])
   */
@@ -114,13 +114,9 @@ object Dev {
     }
 
   private def prof(name: String, sfDir: String, runs: Int): Int = {
-    // registered by CONF: the streaming entries run on newSession()
-    // children, each with its own StreamingQueryManager that instantiates
-    // listeners from this conf — an addListener on the root session would
-    // never see their queries
     val spark = Sessions.builder()
       .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[DevStreamListener].getName)
+        classOf[Measure.StreamListener].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     withSession(spark) { spark =>
@@ -130,18 +126,58 @@ object Dev {
         case _ => SparkEntry.queries(name)(spark, sfDir)
       }
       Bench.warmUp(spark, "[prof]")(mk())
-      val collector = new Collector
-      spark.sparkContext.addSparkListener(collector)
       val oks = (1 to runs).map { i =>
-        collector.reset()
-        val (wall, ok) = Bench.timeNoop(s"[prof] $name run$i")(mk())
-        Thread.sleep(500) // let trailing listener events drain
+        val ((wall, ok), m) =
+          Measure.during(spark)(Bench.timeNoop(s"[prof] $name run$i")(mk()))
         println(f"[prof] $name run$i wall=$wall%.2f s")
-        collector.report(wall)
+        report(m, wall)
         ok
       }
-      spark.sparkContext.removeSparkListener(collector)
       if (oks.forall(identity)) 0 else 1
+    }
+  }
+
+  /** Three views of one measured run: the stage table (costliest 40 by
+    * task time), the per-micro-batch `durationMs` breakdown, and one row
+    * per state operator per micro-batch (rows in state, updated, removed,
+    * update, removal and commit ms). */
+  private def report(m: Measured, wallS: Double): Unit = {
+    println(f"[prof] ${"stage"}%7s ${"job"}%4s ${"wallMs"}%8s ${"taskMs"}%8s " +
+      f"${"shufW"}%10s ${"shufR"}%10s ${"input"}%10s ${"tasks"}%5s  name")
+    m.stages.sortBy(-_.taskMs).take(40).foreach { r =>
+      println(f"[prof] ${r.id}%7d ${r.job}%4d " +
+        f"${r.wallMs}%8d ${r.taskMs}%8d ${r.shuffleWriteBytes}%10d ${r.shuffleReadBytes}%10d " +
+        f"${r.inputBytes}%10d ${r.tasks}%5d  ${r.name.take(60)}")
+    }
+    println(f"[prof] total taskMs=${m.taskMs} " +
+      f"jobWallMs=${m.jobWallMs} jobs=${m.jobs} stages=${m.stages.size}")
+
+    val evs = m.progress
+    if (evs.isEmpty) println("[prof] streaming: no micro-batches in this run")
+    else {
+      val keys = Seq("triggerExecution", "latestOffset", "getBatch",
+        "queryPlanning", "walCommit", "commitOffsets", "addBatch")
+      def dur(p: StreamingQueryProgress, k: String): Long =
+        Option(p.durationMs.get(k)).fold(-1L)(_.longValue)
+      println(f"[prof] ${"query"}%-24s ${"batch"}%5s ${"rows"}%7s " +
+        keys.map(k => f"$k%17s").mkString)
+      evs.foreach { p =>
+        println(f"[prof] ${String.valueOf(p.name).take(24)}%-24s ${p.batchId}%5d " +
+          f"${p.numInputRows}%7d " + keys.map(k => f"${dur(p, k)}%17d").mkString)
+      }
+      // how much of the wall the engine's own components explain
+      val trig = evs.map(dur(_, "triggerExecution").max(0L)).sum
+      println(s"[prof] batches=${evs.size} triggerExecutionSum=${trig}ms " +
+        keys.drop(1).map(k => s"$k=${evs.map(dur(_, k).max(0L)).sum}ms").mkString(" ") +
+        s" unattributedWall=${(wallS * 1000).toLong - trig}ms")
+      println(f"[prof] ${"query"}%-24s ${"batch"}%5s ${"op"}%-28s ${"rowsTotal"}%9s " +
+        f"${"updated"}%8s ${"removed"}%8s ${"updMs"}%7s ${"rmMs"}%7s ${"commitMs"}%8s")
+      for (p <- evs; (so, i) <- p.stateOperators.zipWithIndex) {
+        println(f"[prof] ${String.valueOf(p.name).take(24)}%-24s ${p.batchId}%5d " +
+          f"${s"$i:${so.operatorName}".take(28)}%-28s ${so.numRowsTotal}%9d " +
+          f"${so.numRowsUpdated}%8d ${so.numRowsRemoved}%8d ${so.allUpdatesTimeMs}%7d " +
+          f"${so.allRemovalsTimeMs}%7d ${so.commitTimeMs}%8d")
+      }
     }
   }
 
@@ -235,112 +271,4 @@ object Dev {
         existing.substring(0, i) + md + (if (next >= 0) existing.substring(next) else "")
       }
     }
-}
-
-/** The dev profiler's one collector. As a [[SparkListener]] it records,
-  * per stage, wall, task time, shuffle and input bytes, and per job the
-  * wall time; [[DevStreamListener]] queues every streaming micro-batch's
-  * progress. [[report]] prints three views of one run: the stage table,
-  * the per-micro-batch `durationMs` breakdown, and one row per state
-  * operator per micro-batch (rows in state, updated, removed, update,
-  * removal and commit ms). */
-private final class Collector extends SparkListener {
-  private final class Stage(val id: Int) {
-    var name = "?"
-    var wallMs, taskMs, shufW, shufR, input = 0L
-    var tasks = 0
-  }
-  private val stages = mutable.LinkedHashMap.empty[Int, Stage]
-  private val jobOfStage = mutable.Map.empty[Int, Int]
-  private val jobWall = mutable.LinkedHashMap.empty[Int, Long]
-
-  def reset(): Unit = synchronized {
-    stages.clear(); jobOfStage.clear(); jobWall.clear()
-    DevStreamListener.progress.clear()
-  }
-
-  private def stage(id: Int) = stages.getOrElseUpdate(id, new Stage(id))
-
-  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-    j.stageIds.foreach(s => jobOfStage(s) = j.jobId)
-    jobWall(j.jobId) = -j.time
-  }
-  override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
-    jobWall(j.jobId) = jobWall.getOrElse(j.jobId, 0L) + j.time
-  }
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
-    val si = sc.stageInfo
-    val r = stage(si.stageId)
-    r.name = si.name.takeWhile(_ != '\n')
-    r.wallMs += si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-    r.tasks += si.numTasks
-  }
-  override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
-    val m = te.taskMetrics
-    if (m != null) {
-      val r = stage(te.stageId)
-      r.taskMs += m.executorRunTime
-      r.shufW += m.shuffleWriteMetrics.bytesWritten
-      r.shufR += m.shuffleReadMetrics.totalBytesRead
-      r.input += m.inputMetrics.bytesRead
-    }
-  }
-
-  def report(wallS: Double): Unit = synchronized {
-    println(f"[prof] ${"stage"}%7s ${"job"}%4s ${"wallMs"}%8s ${"taskMs"}%8s " +
-      f"${"shufW"}%10s ${"shufR"}%10s ${"input"}%10s ${"tasks"}%5s  name")
-    stages.values.toSeq.sortBy(-_.taskMs).take(40).foreach { r =>
-      println(f"[prof] ${r.id}%7d ${jobOfStage.getOrElse(r.id, -1)}%4d " +
-        f"${r.wallMs}%8d ${r.taskMs}%8d ${r.shufW}%10d ${r.shufR}%10d " +
-        f"${r.input}%10d ${r.tasks}%5d  ${r.name.take(60)}")
-    }
-    println(f"[prof] total taskMs=${stages.values.map(_.taskMs).sum} " +
-      f"jobWallMs=${jobWall.values.filter(_ > 0).sum} jobs=${jobWall.size} stages=${stages.size}")
-
-    val evs = {
-      val b = mutable.ArrayBuffer.empty[StreamingQueryProgress]
-      DevStreamListener.progress.forEach(b += _)
-      b.toSeq.sortBy(p => (p.timestamp, String.valueOf(p.name), p.batchId))
-    }
-    if (evs.isEmpty) println("[prof] streaming: no micro-batches in this run")
-    else {
-      val keys = Seq("triggerExecution", "latestOffset", "getBatch",
-        "queryPlanning", "walCommit", "commitOffsets", "addBatch")
-      def dur(p: StreamingQueryProgress, k: String): Long =
-        Option(p.durationMs.get(k)).fold(-1L)(_.longValue)
-      println(f"[prof] ${"query"}%-24s ${"batch"}%5s ${"rows"}%7s " +
-        keys.map(k => f"$k%17s").mkString)
-      evs.foreach { p =>
-        println(f"[prof] ${String.valueOf(p.name).take(24)}%-24s ${p.batchId}%5d " +
-          f"${p.numInputRows}%7d " + keys.map(k => f"${dur(p, k)}%17d").mkString)
-      }
-      // how much of the wall the engine's own components explain
-      val trig = evs.map(dur(_, "triggerExecution").max(0L)).sum
-      println(s"[prof] batches=${evs.size} triggerExecutionSum=${trig}ms " +
-        keys.drop(1).map(k => s"$k=${evs.map(dur(_, k).max(0L)).sum}ms").mkString(" ") +
-        s" unattributedWall=${(wallS * 1000).toLong - trig}ms")
-      println(f"[prof] ${"query"}%-24s ${"batch"}%5s ${"op"}%-28s ${"rowsTotal"}%9s " +
-        f"${"updated"}%8s ${"removed"}%8s ${"updMs"}%7s ${"rmMs"}%7s ${"commitMs"}%8s")
-      for (p <- evs; (so, i) <- p.stateOperators.zipWithIndex) {
-        println(f"[prof] ${String.valueOf(p.name).take(24)}%-24s ${p.batchId}%5d " +
-          f"${s"$i:${so.operatorName}".take(28)}%-28s ${so.numRowsTotal}%9d " +
-          f"${so.numRowsUpdated}%8d ${so.numRowsRemoved}%8d ${so.allUpdatesTimeMs}%7d " +
-          f"${so.allRemovalsTimeMs}%7d ${so.commitTimeMs}%8d")
-      }
-    }
-  }
-}
-
-/** Conf-registered (no-arg constructor) streaming listener feeding the
-  * [[Collector]]: instantiated by EACH session's StreamingQueryManager,
-  * including `newSession()` children, so its queue is static. */
-class DevStreamListener extends StreamingQueryListener {
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-    DevStreamListener.progress.add(e.progress)
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-}
-
-object DevStreamListener {
-  val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
 }

@@ -360,8 +360,8 @@ object Ann {
         .select(col("vec_id").as("cent_id"), col("e").as("ce")))
 
   /** Collected (cent_id, ce) centroids sorted by id — the O(k·d) driver
-    * model the round-9 assignment kernel bakes in. */
-  private def collectCellCents(cents: DataFrame): Array[(Long, Array[Double])] =
+    * model the round-9 assignment kernel bakes in (here and in [[Pq]]). */
+  private[operators] def collectCellCents(cents: DataFrame): Array[(Long, Array[Double])] =
     cents.select(col("cent_id"), col("ce")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
 
@@ -369,7 +369,7 @@ object Ann {
     * ([[graft.functions.VecBestCell]] at scale 9 — BigDecimal HALF_UP, the
     * exact `round(cos, 9)` + min-id-tiebreak `max_by` semantics); the
     * kernel index maps back to cent_id when ids aren't dense 0-based. */
-  private def cellCol9(cs: Array[(Long, Array[Double])]): Column = {
+  private[operators] def cellCol9(cs: Array[(Long, Array[Double])]): Column = {
     require(cs.nonEmpty, "cell assignment: empty centroid set")
     val ids = cs.map(_._1)
     val idx = call_function("vec_best_cell", col("e"),

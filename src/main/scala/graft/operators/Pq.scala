@@ -219,13 +219,13 @@ object Pq {
                  cents: DataFrame): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val cs = collectCents(vecs.filter(col("vec_id") < numCentroids)
+    val cs = Ann.collectCellCents(vecs.filter(col("vec_id") < numCentroids)
       .select(col("vec_id").as("cent_id"), col("e").as("ce")))
     val mat = cbMat(cents, cfg)
     // ONE corpus projection carries both the coarse cell and the PQ codes —
     // the pre-r17 form reached the cell through a crossJoin + max_by
     // shuffle and then JOINED it back onto the codes pivot
-    val codes = vecs.select(col("vec_id"), cellColOf(cs).as("cell"),
+    val codes = vecs.select(col("vec_id"), Ann.cellCol9(cs).as("cell"),
       pqCodesCol(col("e"), mat).as("codes"))
     val probes = probesOf(collectQueries(vecs, isQuery), cs, nprobe)
       .toDF("qid", "qcell")
@@ -249,24 +249,6 @@ object Pq {
       .select(col("vec_id").as("cent_id"), col("e").as("ce"))
     val (assigned, probes) = assignProbes(vecs, isQuery, nprobe, ivfCents)
     (ivfCents, assigned, probes)
-  }
-
-  /** Collected (cent_id, ce) centroids, sorted by cent_id — the O(model)
-    * driver form [[assignProbes]] bakes into the assignment kernel. */
-  private def collectCents(cents: DataFrame): Array[(Long, Array[Double])] =
-    cents.select(col("cent_id"), col("ce")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-
-  /** Round-9 argmax-cosine cell assignment as a zero-shuffle column over
-    * collected centroids (the VecBestCell kernel at scale 9; index mapped
-    * back to cent_id when ids aren't dense 0-based). */
-  private def cellColOf(cs: Array[(Long, Array[Double])]): Column = {
-    require(cs.nonEmpty, "cell assignment: empty centroid set")
-    val ids = cs.map(_._1)
-    val idx = call_function("vec_best_cell", col("e"),
-      typedLit(cs.map(_._2.toSeq).toSeq), lit(9))
-    if (ids.zipWithIndex.forall { case (id, i) => id == i.toLong }) idx
-    else element_at(typedLit(ids.toSeq), (idx + 1).cast("int"))
   }
 
   /** Per-query top-`nprobe` probe list on the driver: round-9 HALF_UP
@@ -310,8 +292,8 @@ object Pq {
                                       cents: DataFrame): (DataFrame, DataFrame) = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val cs = collectCents(cents)
-    val assigned = vecs.select(col("vec_id"), cellColOf(cs).as("cell"))
+    val cs = Ann.collectCellCents(cents)
+    val assigned = vecs.select(col("vec_id"), Ann.cellCol9(cs).as("cell"))
     val probeRows = probesOf(collectQueries(vecs, isQuery), cs, nprobe)
     (assigned, probeRows.toDF("qid", "qcell"))
   }
@@ -346,11 +328,11 @@ object Pq {
                          cfg: PqConfig, pqSeedFrom: Long): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val cs = collectCents(coarseCents)
+    val cs = Ann.collectCellCents(coarseCents)
     // ONE corpus projection carries the cell (kernel) into the residual
     // map — the pre-r17 form shuffled the corpus through a crossJoin +
     // max_by aggregate and joined the result back on vec_id
-    val resid = vecs.select(col("vec_id"), col("e"), cellColOf(cs).as("cell"))
+    val resid = vecs.select(col("vec_id"), col("e"), Ann.cellCol9(cs).as("cell"))
       .join(broadcast(coarseCents), col("cell") === col("cent_id"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("e"), col("ce"), (a, b) => a - b).as("e"))
@@ -384,7 +366,7 @@ object Pq {
     val mat = cbMat(cents, cfg)
     val probeList = probes.collect().map(r => (r.getLong(0), r.getLong(1)))
     if (probeList.isEmpty) return Map.empty
-    val ceById = collectCents(ivfCents).toMap
+    val ceById = Ann.collectCellCents(ivfCents).toMap
     val qById = collectQueries(vecs,
       col("vec_id").isInCollection(probeList.map(_._1).distinct.toSeq)).toMap
     probeList.map { case (qid, cell) =>
@@ -600,7 +582,7 @@ object Pq {
   def encodeInto(delta: DataFrame, cfg: PqConfig, cents: DataFrame,
                  coarseCents: DataFrame): DataFrame =
     delta.select(col("vec_id"),
-      cellColOf(collectCents(coarseCents)).as("cell"),
+      Ann.cellCol9(Ann.collectCellCents(coarseCents)).as("cell"),
       pqCodesCol(col("e"), cbMat(cents, cfg)).as("codes"))
 
   /** DELETE maintenance on the codes index (the lifecycle's other write):

@@ -2,16 +2,17 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField,
   StructType, TimestampType}
 
+import graft.Measure
+
 /** Scale soak (SURVEY.md §2 B50/B51 scale evidence): a deterministic
   * ~10×-sf0.1 corpus (default 100k documents + 22k embeddings) pushed
   * through the dedup → clustering → ANN path with PER-STAGE shuffle bytes,
-  * wall time and bucket statistics measured by a SparkListener — the
+  * wall time and bucket statistics measured by [[graft.Measure]] — the
   * numbers every prior round argued from plan shape, now observed. The
   * rendered table lives in SCALE.md (regenerate with
   * `sbt "runMain graft.Dev scale base"`); ScaleSoakSpec asserts the
@@ -312,11 +313,9 @@ object ScaleSoak {
     val root = graft.StreamHarness.scratchRoot(
       "soak_" + name.replaceAll("[^a-zA-Z0-9]", "_"), dir)
     val src = make(streamSource(spark, dir, l)) // a cold corpus build is not timed
-    val t0 = System.nanoTime()
-    val q = graft.StreamHarness.foreachBatch(src, root) { (b, _) =>
+    val (q, m) = Measure.during(spark)(graft.StreamHarness.foreachBatch(src, root) { (b, _) =>
       emitted.addAndGet(b.count())
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
+    })
     // the pid-scoped checkpoint is only meaningful within this run — left
     // behind it accumulates one directory tree per soak run until a
     // manual clean (r8 advice)
@@ -331,7 +330,7 @@ object ScaleSoak {
       emitted = emitted.get,
       maxStateMB =
         if (ops.isEmpty) 0 else ops.map(_.memoryUsedBytes).max / 1048576.0,
-      seconds = secs)
+      seconds = m.wallS)
   }
 
   final case class CorpusPaths(docs: String, vecs: String,
@@ -364,30 +363,13 @@ object ScaleSoak {
     p
   }
 
-  private final class SoakListener extends SparkListener {
-    val read = new AtomicLong
-    val write = new AtomicLong
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      Option(e.stageInfo.taskMetrics).foreach { m =>
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-  }
-
-  /** Run `action`, returning its row count plus the stage's aggregate
-    * shuffle traffic (listener-bus-flushed, so the numbers are complete). */
+  /** Run `action`, returning its row count plus the soak row: its wall
+    * seconds and aggregate shuffle traffic, read from [[Measure.during]]. */
   def measure(spark: SparkSession, stage: String, note: String = "")
              (action: => Long): (Long, StageMetrics) = {
-    val listener = new SoakListener
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    try {
-      val rows = action
-      org.apache.spark.GraftBusFlush.flush(spark.sparkContext)
-      val secs = (System.nanoTime() - t0) / 1e9
-      (rows, StageMetrics(stage, rows, secs,
-        listener.read.get / 1048576.0, listener.write.get / 1048576.0, note))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, m) = Measure.during(spark)(action)
+    (rows, StageMetrics(stage, rows, m.wallS,
+      m.shuffleReadBytes / 1048576.0, m.shuffleWriteBytes / 1048576.0, note))
   }
 
   private def bucketStats(side: String, bands: DataFrame, maxBucket: Int,
@@ -1427,12 +1409,13 @@ object ScaleSoak {
 
     /** One timed training run: merge table (in round order), rounds, wall s. */
     def train(merges: Int, batch: Int, cap: Int) = {
-      val t0 = System.nanoTime()
-      val run = Bpe.induce(docs, merges, batch, applyLast = false, cap = cap)
-      run.vocab.release()
-      val rows = run.table.orderBy(col("round")).collect()
-        .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      (rows, run.rounds, (System.nanoTime() - t0) / 1e9)
+      val ((rows, rounds), m) = Measure.during(spark) {
+        val run = Bpe.induce(docs, merges, batch, applyLast = false, cap = cap)
+        run.vocab.release()
+        (run.table.collect().map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq,
+          run.rounds)
+      }
+      (rows, rounds, m.wallS)
     }
     val (seq16, _, seqSecs) = train(16, 1, cap = 0)
     val (batched, rounds, batSecs) = train(totalMerges, batchCap, cap = 0)
@@ -1514,10 +1497,9 @@ object ScaleSoak {
         .join(gold, Seq("qid", "vec_id"), "left_semi").count()
     val adc3 = hits(Pq.adcTopK(vecs, isQ, 3, cfg, cb))
     val legs = Seq(10, 50).map { s =>
-      val t0 = System.nanoTime()
-      val short = hits(Pq.adcTopK(vecs, isQ, s, cfg, cb))
-      val rr = hits(Pq.adcRerankTopK(vecs, isQ, k = 3, shortlist = s, cfg, cb))
-      (s, short, rr, (System.nanoTime() - t0) / 1e9)
+      val ((short, rr), m) = Measure.during(spark)((hits(Pq.adcTopK(vecs, isQ, s, cfg, cb)),
+        hits(Pq.adcRerankTopK(vecs, isQ, k = 3, shortlist = s, cfg, cb))))
+      (s, short, rr, m.wallS)
     }
     gold.unpersist(); vecs.unpersist()
     val sb = new StringBuilder
@@ -1755,10 +1737,9 @@ object ScaleSoak {
     val cfg = PqConfig()
     val nQ = 50
     val legs = Seq((16, 2), (64, 8), (256, 32)).map { case (cells, nprobe) =>
-      val t0 = System.nanoTime()
-      val (ratio, aRaw, aRes, total) =
-        residualRegimeLeg(vecs, cells, nprobe, nQ, cfg)
-      (cells, nprobe, ratio, aRaw, aRes, total, (System.nanoTime() - t0) / 1e9)
+      val ((ratio, aRaw, aRes, total), m) =
+        Measure.during(spark)(residualRegimeLeg(vecs, cells, nprobe, nQ, cfg))
+      (cells, nprobe, ratio, aRaw, aRes, total, m.wallS)
     }
     // seed-sensitivity probe at the MID regime (r12 finding): the 64-cell
     // residual agreement swings with the PQ codebook seed position while
@@ -2121,11 +2102,10 @@ object ScaleSoak {
       df.select(col("id"), transform(col("e"), x => x * 1.0000001d).as("e"),
         col("payload"))
     def arm(zeroCopy: Boolean): Double = {
-      val t0 = System.nanoTime()
       var cur = base
       var prev: Option[Materialize.Cut] = None
       var prevLegacy: Option[org.apache.spark.sql.DataFrame] = None
-      (1 to rounds).foreach { _ =>
+      val (_, m) = Measure.during(spark)((1 to rounds).foreach { _ =>
         if (zeroCopy) {
           val c = Materialize.cut(roundBody(cur))
           require(c.df.count() == nRows, "zero-copy arm lost rows")
@@ -2138,10 +2118,9 @@ object ScaleSoak {
           prevLegacy.foreach(_.unpersist(blocking = false))
           prevLegacy = Some(ck); cur = wrapped
         }
-      }
-      val s = (System.nanoTime() - t0) / 1e9
+      })
       prev.foreach(_.release()); prevLegacy.foreach(_.unpersist(blocking = false))
-      s
+      m.wallS
     }
     arm(zeroCopy = true) // JIT warm, discarded
     val pairs = (1 to 3).map(_ => (arm(zeroCopy = false), arm(zeroCopy = true)))

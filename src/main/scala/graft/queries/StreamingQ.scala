@@ -1127,8 +1127,8 @@ object StreamingQ {
     * q_dedup_minhash_lsh oracle) over exact survivors; the bucket cap
     * counted against the CUMULATIVE bucket population at the later side's
     * arrival batch; milli-rounded Jaccard confirm; drop the later arrival
-    * of each confirmed pair. Shared by q_stream_curate and the B81 AS-OF
-    * entry so the two replays cannot drift. */
+    * of each confirmed pair. Shared by q_stream_curate, the B81 AS-OF
+    * entry and q_stream_curate_scored so the replays cannot drift. */
   private val sqlStreamCurateChain: String =
     """d AS (SELECT doc_id, text, source, doc_id % 3 AS b FROM documents),
       |es AS (SELECT doc_id, text, source, b FROM (
@@ -1644,46 +1644,7 @@ object StreamingQ {
     },
 
     "q_stream_curate_scored" ->
-      s"""WITH d AS (SELECT doc_id, text, source, doc_id % 3 AS b FROM documents),
-        |es AS (SELECT doc_id, text, source, b FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY sha256(text) ORDER BY b, doc_id) AS rn FROM d) t
-        |  WHERE rn = 1),
-        |sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(len(toks) - 2),
-        |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS shingles
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM es) t
-        |  WHERE len(toks) >= 3),
-        |ex AS (SELECT doc_id, CAST('0x' || substr(md5(u.s), 1, 7) AS BIGINT) AS h
-        |       FROM sh, unnest(shingles) u(s)),
-        |params AS (SELECT i, 1234567 + 7654321*i AS a, 987654 + 123457*i AS b
-        |           FROM range(12) r(i)),
-        |mh AS (SELECT doc_id, i, min((a*h + b) % 268435399) AS mh
-        |       FROM ex CROSS JOIN params GROUP BY doc_id, i),
-        |bands AS (SELECT mh.doc_id, es.b, i // 2 AS band,
-        |    max(CASE WHEN i % 2 = 0 THEN mh END) AS mh0,
-        |    max(CASE WHEN i % 2 = 1 THEN mh END) AS mh1
-        |  FROM mh JOIN es ON es.doc_id = mh.doc_id
-        |  GROUP BY mh.doc_id, es.b, i // 2),
-        |bcnt AS (SELECT band, mh0, mh1, b, count(*) AS nb
-        |         FROM bands GROUP BY 1, 2, 3, 4),
-        |bcum AS (SELECT band, mh0, mh1, b, sum(nb) OVER (
-        |           PARTITION BY band, mh0, mh1 ORDER BY b) AS cum FROM bcnt),
-        |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y ON x.band = y.band AND x.mh0 = y.mh0
-        |    AND x.mh1 = y.mh1 AND x.doc_id < y.doc_id
-        |  JOIN bcum c ON c.band = x.band AND c.mh0 = x.mh0 AND c.mh1 = x.mh1
-        |    AND c.b = greatest(x.b, y.b)
-        |  WHERE c.cum <= 1000),
-        |pairs AS (SELECT c.doc_a, c.doc_b
-        |  FROM cand c JOIN sh sa ON sa.doc_id = c.doc_a
-        |  JOIN sh sb ON sb.doc_id = c.doc_b
-        |  WHERE floor(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE /
-        |    (len(sa.shingles) + len(sb.shingles)
-        |      - len(list_intersect(sa.shingles, sb.shingles))) * 1e3 + 0.5)
-        |    / 1e3 >= 0.8),
-        |dropped AS (SELECT DISTINCT CASE WHEN doc_b % 3 >= doc_a % 3
-        |    THEN doc_b ELSE doc_a END AS doc_id FROM pairs),
+      s"""WITH $sqlStreamCurateChain,
         |$sqlScoreReplay,
         |ds AS (SELECT dd.source, dd.doc_id, sc.logit_micro
         |  FROM documents dd JOIN sc ON sc.doc_id = dd.doc_id),

@@ -676,10 +676,11 @@ object TrainPrep {
     // the corpus's word-frequency table. The oracle replays ALL THREE
     // rounds — pair statistics, deterministic argmax, and the
     // gaps-and-islands greedy application — as chained CTEs, so every
-    // merge decision and its count are hash-checked across engines.
+    // merge decision and its count are hash-checked across engines. The
+    // merge table is driver-local and already in round order, so it needs
+    // no sort; coalesce(1) keeps it one output file.
     "q_bpe_merges" -> { (s, d) =>
-      graft.operators.Bpe.merges(Tables.documents(s, d), rounds = 3)
-        .orderBy(col("round"))
+      graft.operators.Bpe.merges(Tables.documents(s, d), rounds = 3).coalesce(1)
     },
 
     // B84 BATCHED merge induction (r14 verdict #2 — the exact-safe prefix
@@ -693,8 +694,7 @@ object TrainPrep {
     // corpus where batching provably coalesces rounds.
     "q_bpe_merges_batched" -> { (s, d) =>
       graft.operators.Bpe.mergesBatched(Tables.documents(s, d),
-        totalMerges = 8, batchCap = 4)
-        .orderBy(col("round"))
+        totalMerges = 8, batchCap = 4).coalesce(1)
     },
 
     // B94 curriculum phase assignment via the SCALABLE global rank — the
@@ -814,8 +814,7 @@ object TrainPrep {
     // the q_bpe_merges chained replay + one Σ f·|s| per round.
     "q_bpe_compression" -> { (s, d) =>
       val curve = graft.operators.Bpe
-        .compressionCurve(Tables.documents(s, d), rounds = 3)
-        .orderBy(col("round")).collect()
+        .compressionCurve(Tables.documents(s, d), rounds = 3).collect()
         .map(r => (r.getInt(0), r.getLong(1)))
       val t0 = curve.head._2
       // ppm scaling in BigInt (HUGEINT in the oracle): t·10⁶ wraps int64

@@ -41,6 +41,12 @@ class DevSpec extends AnyFunSuite {
       List("scala/graft/StreamHarness.scala"))
   }
 
+  test("only the measurement layer registers a Spark listener") {
+    // a tool that needs numbers reads them from Measure.during, not from a
+    // listener of its own
+    assert(mainFilesMatching("addSparkListener") === List("scala/graft/Measure.scala"))
+  }
+
   private def devExit(args: String*): (Int, String) = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val proc = new ProcessBuilder(

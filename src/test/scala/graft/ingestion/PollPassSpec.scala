@@ -3,10 +3,9 @@ package graft.ingestion
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpecBase
+import graft.{Measure, SparkSpecBase}
 import model._
 
 /** The one-pass poll: a per-ZIP fate kernel, one materialized fates frame
@@ -40,8 +39,9 @@ class PollPassSpec extends SparkSpecBase {
       put(in, Fixtures.zipName(b), Fixtures.zipOf(b))
     }
     val wh = scratch("pass-wh")
-    var out: MetadataPipeline.PipelineOutput = null
-    val n = jobs { out = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1) }
+    val (out, m) =
+      Measure.during(spark)(MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1))
+    val n = m.jobs
     // the bound is what the one-pass poll measures here; per-sink re-runs
     // of the poll (the earlier shape ran 21) fail it
     assert(n <= 7, s"runBatch over 300 ZIPs ran $n jobs, bound 7")
@@ -163,19 +163,5 @@ class PollPassSpec extends SparkSpecBase {
     val sk = out2.skipped.select("zip_name", "gate").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(sk === Seq((Fixtures.zipName(b), SkipGate.AlreadyUploaded)))
-  }
-
-  /** Spark jobs started while `body` runs (listener bus drained both sides). */
-  private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    org.apache.spark.GraftBusFlush.flush(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.GraftBusFlush.flush(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
   }
 }

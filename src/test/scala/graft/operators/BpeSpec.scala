@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpecBase
+import graft.{Measure, SparkSpecBase}
 
 /** graft.operators.Bpe (SURVEY.md §2 B84): the merge loop must follow the
   * textbook semantics exactly — overlapping pair counting, (cnt DESC, pair
@@ -161,9 +160,10 @@ class BpeSpec extends SparkSpecBase {
     // rounds take on this fixture (the distributed typed rounds took 10
     // and 22, the relational rewrite 23 and 70); a return to a job per
     // round fails here, not only in the bench
-    val seqJobs = jobs(Bpe.merges(docs, rounds = 3).collect())
+    val seqJobs = Measure.during(spark)(Bpe.merges(docs, rounds = 3).collect())._2.jobs
     assert(seqJobs <= 2, s"Bpe.merges(docs, 3) ran $seqJobs jobs, bound 2")
-    val batJobs = jobs(Bpe.mergesBatched(docs, totalMerges = 8, batchCap = 4).collect())
+    val batJobs = Measure.during(spark)(
+      Bpe.mergesBatched(docs, totalMerges = 8, batchCap = 4).collect())._2.jobs
     assert(batJobs <= 2, s"Bpe.mergesBatched(docs, 8, 4) ran $batJobs jobs, bound 2")
     // and the distributed rounds learn the same, sequential and batched
     assertSamePaths(docs, 8, batchCap = 1, "fixture sequential")
@@ -241,20 +241,6 @@ class BpeSpec extends SparkSpecBase {
       assert(drv._4 === ref, s"seed $seed final vocabulary")
       assert(drv._3.last === ref.values.map { case (f, sy) => f * sy.length }.sum)
     }
-  }
-
-  /** Spark jobs started while `body` runs (listener bus drained both sides). */
-  private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    org.apache.spark.GraftBusFlush.flush(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.GraftBusFlush.flush(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
   }
 
   /** (word → (f, s)) of a symbol table, for whole-table comparisons. */
