@@ -83,7 +83,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   private val excluded = Set("q_dedup_ngram_jaccard")
 
-  private[graft] def median(xs: Seq[Double]): Double = {
+  private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.size
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2

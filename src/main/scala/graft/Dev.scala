@@ -2,13 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 
-import graft.operators.{Materialize, ScaleSoak}
 import graft.queries.StreamingQ
 
 /** The one dev entry point: measurement and evidence tools around the
@@ -23,40 +20,31 @@ import graft.queries.StreamingQ
   *   sbt "runMain graft.Dev plan plans/r18 before <sfDir> q_a q_b"
   *       write each entry's formatted physical plan to
   *       `<outDir>/<name>_<tag>.txt` (the before/after evidence under plans/)
-  *   sbt "runMain graft.Dev ab <sfDir> 3 q_dedup_clusters q_stream_curate"
-  *       same-JVM A/B of [[graft.operators.Materialize.cutFinal]] ON vs OFF
-  *       (the `graft.cutFinal.disable` knob), alternating A/B per round so
-  *       JVM drift lands on both arms; prints per-arm medians
   *   sbt "runMain graft.Dev prof q_embed_ivfpq [sfDir] [runs]"
   *       per-stage cost, per-micro-batch `durationMs` and per-state-operator
   *       rows for one entry, or for the bench's `__floor` / `__join_floor`
   *       streaming harnesses, read from one [[Measure.during]] per run
-  *   sbt "runMain graft.Dev scale <section> [dir] [outFile]"
-  *       regenerate one SCALE.md section in place (see [[scaleSections]])
+  *
+  * SCALE.md's generators are test-side tools, not part of this object:
+  * `sbt "Test/runMain graft.Scale <section> [dir] [outFile]"`.
   */
 object Dev {
   private val testdata = "/root/testdata"
 
   private def usage: String =
-    s"""usage: graft.Dev <subcommand> [args]
+    """usage: graft.Dev <subcommand> [args]
        |  run <query> [sfDir] [explain]
        |  plan <outDir> <tag> <sfDir> <query>...
-       |  ab <sfDir> <rounds> <query>...
-       |  prof <query|__floor|__join_floor> [sfDir] [runs]
-       |  scale <section> [dir] [outFile]
-       |    sections: ${scaleSections.keys.toSeq.sorted.mkString(" ")}""".stripMargin
+       |  prof <query|__floor|__join_floor> [sfDir] [runs]""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val status = args.toList match {
       case "run" :: name :: rest =>
         run(name, rest.headOption.getOrElse(s"$testdata/sf0.01"), rest.contains("explain"))
       case "plan" :: outDir :: tag :: sfDir :: names => plan(outDir, tag, sfDir, names)
-      case "ab" :: sfDir :: rounds :: names => ab(sfDir, rounds.toInt, names)
       case "prof" :: name :: rest =>
         prof(name, rest.lift(0).getOrElse(s"$testdata/sf0.1"),
           rest.lift(1).fold(2)(_.toInt))
-      case "scale" :: section :: rest if scaleSections.contains(section) =>
-        scale(section, rest)
       case _ => System.err.println(usage); 2
     }
     if (status != 0) sys.exit(status)
@@ -87,30 +75,6 @@ object Dev {
         println(s"[plan] wrote $outDir/${name}_$tag.txt")
       }
       0
-    }
-
-  private def ab(sfDir: String, rounds: Int, names: List[String]): Int =
-    withSession(Sessions.get()) { spark =>
-      val key = Materialize.CutFinalOffKey
-      names.foreach(n => Bench.warmUp(spark, "[ab]")(SparkEntry.queries(n)(spark, sfDir)))
-      // (entry, cut disabled) -> successful run times
-      val times = mutable.Map.empty[(String, Boolean), List[Double]].withDefaultValue(Nil)
-      var failed = false
-      for (r <- 1 to rounds; n <- names) {
-        val Seq(on, off) = Seq(false, true).map { cutOff =>
-          if (cutOff) spark.conf.set(key, "true")
-          val arm = if (cutOff) "cutOFF" else "cutON"
-          val (t, ok) = Bench.timeNoop(s"[ab] round$r $n $arm")(SparkEntry.queries(n)(spark, sfDir))
-          spark.conf.unset(key)
-          if (ok) times((n, cutOff)) = t :: times((n, cutOff)) else failed = true
-          if (ok) f"$t%.2f" else "FAILED"
-        }
-        println(s"[ab] round$r $n cutON=$on cutOFF=$off")
-      }
-      def med(n: String, cutOff: Boolean): String =
-        if (times((n, cutOff)).isEmpty) "FAILED" else f"${Bench.median(times((n, cutOff)))}%.2f"
-      names.foreach(n => println(s"[ab] MEDIAN $n cutON=${med(n, false)} cutOFF=${med(n, true)}"))
-      if (failed) 1 else 0
     }
 
   private def prof(name: String, sfDir: String, runs: Int): Int = {
@@ -180,95 +144,4 @@ object Dev {
       }
     }
   }
-
-  /** The header SCALE.md opens with: the base soak report's. */
-  private[graft] val BaseHeader = "# SCALE"
-
-  /** One generated SCALE.md section: its header and its generator,
-    * which takes the session and the input dir. */
-  private final case class Part(header: String, gen: (SparkSession, String) => String)
-
-  /** A `scale` subcommand: its default input dir (None: the generators
-    * take no dir, and the subcommand takes only `[outFile]`) and the
-    * sections it regenerates. */
-  private final case class Scale(dir: Option[String], parts: Part*)
-
-  private val cdcHeader = "\n## Streaming-CDC fold at 2M keys (r16; bucketed r17)"
-  private val cutAbHeader = "\n## Zero-copy lineage cut (r17)"
-
-  /** Every SCALE.md generator. Sections with no entry here (the r16/r17
-    * iteration-durability, filtered-ANN and beam-width write-ups) are
-    * hand-written and only ever carried over by [[splice]]. */
-  private val scaleSections: Map[String, Scale] = {
-    val soak = Some("target/qscratch/scale_soak")
-    val vec = Some("target/qscratch/vec_scale")
-    Map(
-      "base" -> Scale(soak,
-        Part(BaseHeader, (s, d) => ScaleSoak.renderMarkdown(ScaleSoak.run(s, d)))),
-      "vec" -> Scale(vec, Part("\n## Vector scale 10x", ScaleSoak.runVectorScale(_, _))),
-      "scrub-bpe" -> Scale(soak,
-        Part("\n## Scrub + BPE 10x text soak", ScaleSoak.runScrubBpeSoak(_, _))),
-      "bpe-batch" -> Scale(None,
-        Part("\n## Batched BPE soak", (s, _) => ScaleSoak.runBpeBatchedSoak(s))),
-      "rerank-fetch" -> Scale(vec,
-        Part("\n## Re-rank fetch at 10x", ScaleSoak.runRerankFetchSoak(_, _))),
-      "residual" -> Scale(Some(s"$testdata/sf0.1"),
-        Part("\n## Residual IVFADC regime", ScaleSoak.runResidualRegime),
-        Part("\n## IVFADC-R shortlist dial", ScaleSoak.runRerankDial)),
-      "pca" -> Scale(vec, Part("\n## PCA covariance at 10x", ScaleSoak.runPcaSoak(_, _))),
-      "knn" -> Scale(vec,
-        Part("\n## Graph-ANN lifecycle at 10x", ScaleSoak.runKnnLifecycleSoak(_, _))),
-      "cdc" -> Scale(Some("target/qscratch/cdc_scale"),
-        Part(cdcHeader, (s, d) => cdcHeader + "\n" + ScaleSoak.runCdcSoak(s, d))),
-      "compact" -> Scale(Some("target/qscratch/compact_scale"),
-        Part("\n## Compaction at the small-files pathology", ScaleSoak.runCompactSoak(_, _))),
-      "dv" -> Scale(Some("target/qscratch/dv_scale"),
-        Part("\n## Deletion vectors at 2M rows", ScaleSoak.runDvSoak(_, _))),
-      "cut-ab" -> Scale(None,
-        Part(cutAbHeader, (s, _) => cutAbHeader + "\n" + ScaleSoak.runCutAbSoak(s))))
-  }
-
-  private def scale(section: String, rest: List[String]): Int = {
-    val sec = scaleSections(section)
-    val (dir, out) = sec.dir match {
-      case Some(d) => (rest.lift(0).getOrElse(d), rest.lift(1).getOrElse("SCALE.md"))
-      case None => ("", rest.lift(0).getOrElse("SCALE.md"))
-    }
-    withSession(Sessions.get()) { spark =>
-      sec.parts.foreach { case Part(header, gen) =>
-        val md = gen(spark, dir)
-        val p = Paths.get(out)
-        val existing = if (Files.exists(p)) Files.readString(p) else ""
-        Files.writeString(p, splice(existing, header, md))
-        println(s"[scale] $section: spliced ${header.trim} into $out")
-        println(md)
-      }
-      0
-    }
-  }
-
-  /** `existing` with `md` spliced in place of the section that starts at
-    * `header`, bounded at the NEXT "\n## " header so every later section
-    * stays byte-identical; appended when absent. The base report
-    * ([[BaseHeader]]) spans several "## " sections of its own: it is the
-    * file's prefix up to the first "## " header `md` does not produce. */
-  private[graft] def splice(existing: String, header: String, md: String): String =
-    if (header == BaseHeader) {
-      val own = md.linesIterator.filter(_.startsWith("## ")).toSet
-      def lineAt(i: Int): String = {
-        val e = existing.indexOf('\n', i)
-        existing.substring(i, if (e < 0) existing.length else e)
-      }
-      Iterator.iterate(existing.indexOf("\n## "))(i => existing.indexOf("\n## ", i + 1))
-        .takeWhile(_ >= 0)
-        .find(i => !own(lineAt(i + 1)))
-        .fold(md)(i => md + existing.substring(i))
-    } else {
-      val i = existing.indexOf(header)
-      if (i < 0) existing + md
-      else {
-        val next = existing.indexOf("\n## ", i + 1)
-        existing.substring(0, i) + md + (if (next >= 0) existing.substring(next) else "")
-      }
-    }
 }

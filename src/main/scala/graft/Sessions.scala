@@ -56,14 +56,6 @@ object Sessions {
     s
   }
 
-  /** Apply the oracle-critical settings to an externally built session
-    * (e.g. the driver's own Verify session). Safe to call repeatedly. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark
-  }
-
   /** Shuffle-partition count for a STATEFUL streaming job. Stateful
     * streaming partitions are state-store instances, pinned for the life of
     * the checkpoint (HDFSBackedStateStoreProvider/RocksDB keep one store

@@ -218,9 +218,7 @@ object Bpe {
         s"cap of $MaxLearnedMerges")
     val bc = syms.sparkSession.sparkContext.broadcast(learned.toArray)
     val out = Materialize.cutFinal(foldPass(syms, () => bc.value))
-    // unpersist, not destroy: with the cutFinal A/B knob on, `out` is still
-    // lazy and re-reads the broadcast (re-sent on demand)
-    bc.unpersist(blocking = false)
+    bc.destroy()
     out
   }
 

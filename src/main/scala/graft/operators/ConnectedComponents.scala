@@ -46,11 +46,11 @@ object ConnectedComponents {
     // pair's jac/cos measure) are ignored, so NearDup's 3-column outputs
     // compose directly
     val Seq(a, b) = pairs.schema.fieldNames.take(2).toSeq
-    val edges = Materialize.checkpointed(
+    val edges = Materialize.cutFinal(
       pairs.select(col(a).as("src"), col(b).as("dst"))
         .unionByName(pairs.select(col(b).as("src"), col(a).as("dst"))))
 
-    var labels = Materialize.checkpointed(edges.select(col("src").as("id")).distinct()
+    var labels = Materialize.cutFinal(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var converged = false
     var iter = 0
@@ -60,7 +60,7 @@ object ConnectedComponents {
       // pointer jump: resolve label -> label(label) (labels are always ids
       // of vertices present in the table, so the join is total)
       val jump = labels.select(col("id").as("jid"), col("label").as("jl"))
-      val next = Materialize.checkpointed(labels
+      val next = Materialize.cutFinal(labels
         .join(neighborMin, col("id") === col("src"), "left")
         .join(jump, col("label") === col("jid"), "left")
         .select(col("id"),

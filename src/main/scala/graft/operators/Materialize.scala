@@ -54,16 +54,6 @@ import org.apache.spark.storage.StorageLevel
 object Materialize {
   /** Session-conf key: "true" switches every cut to reliable checkpoints. */
   val ReliableKey = "graft.checkpoint.reliable"
-  /** Session-conf key (MEASUREMENT-ONLY): "true" turns [[cutFinal]] into
-    * the identity, so a cut's cost/benefit can be A/B-measured
-    * like-for-like on one build (r17 verdict #3 — four cut-consuming
-    * entries regressed and the adjudication needs the toggle). Never set
-    * by any query path; [[cut]] (the iteration form) is NOT covered — an
-    * uncut iteration compounds plan size and would freeze the driver.
-    * `spark.`-prefixed so `-Dspark.graft.cutFinal.disable=true` reaches
-    * the `newSession()` children the streaming entries run on (runtime
-    * `conf.set` on the root session does not). */
-  val CutFinalOffKey = "spark.graft.cutFinal.disable"
   /** Session-conf key: checkpoint directory used when [[ReliableKey]] is
     * set and the SparkContext has no checkpoint dir configured yet. */
   val DirKey = "graft.checkpoint.dir"
@@ -90,7 +80,9 @@ object Materialize {
   private val appliedDir =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[operators] def checkpointed(df: DataFrame): DataFrame =
+  /** Eagerly materialize a final result in the session's checkpoint mode
+    * (stats/partitioning preserved; storage freed by ContextCleaner GC). */
+  def cutFinal(df: DataFrame): DataFrame =
     if (reliable(df)) {
       val sc = df.sparkSession.sparkContext
       df.sparkSession.conf.getOption(DirKey).foreach { d =>
@@ -105,12 +97,6 @@ object Materialize {
           "distributed-fs path or call sc.setCheckpointDir first")
       df.checkpoint()
     } else df.localCheckpoint()
-
-  /** Eagerly materialize a final result in the session's checkpoint mode
-    * (stats/partitioning preserved; storage freed by ContextCleaner GC). */
-  def cutFinal(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption(CutFinalOffKey).exists(_.toBoolean)) df
-    else checkpointed(df)
 
   /** `df`'s rows persisted (MEMORY_AND_DISK, lineage kept) under a fresh
     * LogicalRDD leaf. Lazy: the first action on the frame computes and
@@ -129,7 +115,7 @@ object Materialize {
     * explicit storage-release handle (see object doc for the ordering
     * contract). */
   def cut(df: DataFrame): Cut = {
-    val ck = checkpointed(df)
+    val ck = cutFinal(df)
     // the actual persisted RDD[InternalRow] lives in the checkpoint
     // Dataset's LogicalRDD leaf (ck.rdd would be a DERIVED decode of it:
     // unpersisting that frees nothing, and re-wrapping it would pay an

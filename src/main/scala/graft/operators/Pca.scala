@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * The naive alternative (explode to (vec_id, i, x), self-join on vec_id,
   * groupBy (i, j)) shuffles n·d² rows — a 4 096× blow-up of the corpus at
-  * d = 64 that ScaleSoak measures against this one-pass shape; the oracle
+  * d = 64 (SCALE.md's "PCA covariance at 10x" section measured it against
+  * this one-pass shape, r13); the oracle
   * SQL deliberately replays THAT form because DuckDB has no mergeable
   * vector aggregate, which makes the oracle an independent derivation
   * rather than a re-execution.
@@ -121,9 +122,8 @@ object Pca {
   private def maxAbs(h: Array[Array[Double]]): Double =
     h.iterator.flatMap(_.iterator).map(math.abs).max
 
-  /** The one-pass statistics collect (also measured standalone by the
-    * ScaleSoak PCA leg): [count, Σxᵢ…, upper-tri Σxᵢxⱼ…]. */
-  private[operators] def collectStats(vecs: DataFrame, dim: Int): Seq[Double] = {
+  /** The one-pass statistics collect: [count, Σxᵢ…, upper-tri Σxᵢxⱼ…]. */
+  private def collectStats(vecs: DataFrame, dim: Int): Seq[Double] = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val stats = udaf(new SuffStats(dim))

@@ -96,9 +96,6 @@ object StreamCurate {
       .write.mode("overwrite")
       .parquet(new Path(root, s"d$batchId").toString)
 
-  def retractBatch(deletes: DataFrame, batchId: Long, root: java.io.File): Unit =
-    retractBatch(deletes, batchId, root.getPath)
-
   /** Accumulated state from batches strictly below `batchId`: the newest
     * snapshot filtered to `_batch_id < batchId` plus the uncompacted tail
     * dirs below it, MINUS rows shadowed by a later tombstone (sha has a

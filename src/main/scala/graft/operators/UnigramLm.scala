@@ -170,12 +170,7 @@ object UnigramLm {
         // intermediate rounds feed the next round's driver model; the
         // final round is returned materialized WITHOUT a second execution
         if (r < emRounds) { wMap = modelMap(next.collect()); bc.destroy() }
-        else {
-          out = Materialize.cutFinal(next)
-          // unpersist, not destroy: with the cutFinal A/B knob on, `out`
-          // is still lazy and re-reads the broadcast (re-sent on demand)
-          bc.unpersist(blocking = false)
-        }
+        else { out = Materialize.cutFinal(next); bc.destroy() }
       }
       out
     } finally words.unpersist(blocking = false)

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dev-tooling surface, without Spark: the shipped entry points stay
-  * the five mains, [[Dev]] refuses what it does not know, and
-  * regenerating one SCALE.md section leaves every other section
-  * byte-identical. */
+  * the five mains, [[Dev]] and the test-side [[Scale]] refuse what they do
+  * not know, regenerating one SCALE.md section leaves every other section
+  * byte-identical, and every SCALE.md section is either generated or
+  * declared frozen. */
 class DevSpec extends AnyFunSuite {
 
   test("src/main has exactly the five entry-point objects") {
@@ -47,21 +48,26 @@ class DevSpec extends AnyFunSuite {
     assert(mainFilesMatching("addSparkListener") === List("scala/graft/Measure.scala"))
   }
 
-  private def devExit(args: String*): (Int, String) = {
+  /** Runs `mainClass` in a fresh JVM: it must print its usage and exit nonzero. */
+  private def assertUsage(mainClass: String, args: Seq[String]): Unit = {
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val proc = new ProcessBuilder(
-        (Seq(java, "-cp", System.getProperty("java.class.path"), "graft.Dev") ++ args).asJava)
+        (Seq(java, "-cp", System.getProperty("java.class.path"), mainClass) ++ args).asJava)
       .redirectErrorStream(true).start()
     val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-    (proc.waitFor(), out)
+    assert(proc.waitFor() !== 0, s"$mainClass args $args")
+    assert(out.contains(s"usage: $mainClass"), s"$mainClass args $args printed: $out")
   }
 
   test("Dev prints its usage and exits nonzero on an unknown subcommand or section") {
-    for (args <- Seq(Seq("no-such-subcommand"), Seq("scale", "no-such-section"))) {
-      val (status, out) = devExit(args: _*)
-      assert(status !== 0, s"args $args")
-      assert(out.contains("usage: graft.Dev"), s"args $args printed: $out")
-    }
+    // `ab` and `scale` are retired Dev subcommands; the retired SCALE.md
+    // generators' names are unknown sections to the test-side Scale
+    for (args <- Seq(Seq("no-such-subcommand"), Seq("ab", "sfDir", "3", "q_stream_curate"),
+                     Seq("scale", "base")))
+      assertUsage("graft.Dev", args)
+    for (name <- Seq("no-such-section", "vec", "scrub-bpe", "rerank-fetch", "residual",
+                     "pca", "compact", "dv", "cut-ab"))
+      assertUsage("graft.Scale", Seq(name))
   }
 
   private val doc =
@@ -75,8 +81,8 @@ class DevSpec extends AnyFunSuite {
   test("regenerating the base report keeps every later section byte-identical") {
     val fresh = "# SCALE — soak\n\nCorpus: new.\n\n## Per-stage cost\n\nnew stages\n" +
       "\n## Reading the table\n\nnew reading\n"
-    assert(Dev.splice(doc, Dev.BaseHeader, fresh) === fresh + later)
-    assert(Dev.splice("", Dev.BaseHeader, fresh) === fresh)
+    assert(Scale.splice(doc, Scale.BaseHeader, fresh) === fresh + later)
+    assert(Scale.splice("", Scale.BaseHeader, fresh) === fresh)
   }
 
   test("the committed SCALE.md keeps its appended sections when the base is regenerated") {
@@ -92,7 +98,7 @@ class DevSpec extends AnyFunSuite {
       .map(h => s"\n## $h\n\nregenerated\n").mkString("# SCALE — regenerated\n", "", "")
     val firstAppended = committed.indexOf("\n## Vector scale 10x")
     assert(firstAppended > 0)
-    val spliced = Dev.splice(committed, Dev.BaseHeader, fresh)
+    val spliced = Scale.splice(committed, Scale.BaseHeader, fresh)
     assert(spliced === fresh + committed.substring(firstAppended))
     for (h <- Seq("Iteration durability (r16)", "Filtered ANN at production selectivity ~1% (r17)",
                   "Beam-width serving dial")) assert(spliced.contains(s"\n## $h"))
@@ -100,10 +106,49 @@ class DevSpec extends AnyFunSuite {
 
   test("a section is replaced in place, bounded at the next header, or appended") {
     val fresh = "\n## Vector scale 10x (r11): 3 vectors\n\nnew vec body\n"
-    assert(Dev.splice(doc, "\n## Vector scale 10x", fresh) ===
+    assert(Scale.splice(doc, "\n## Vector scale 10x", fresh) ===
       doc.substring(0, doc.indexOf("\n## Vector scale")) + fresh +
         doc.substring(doc.indexOf("\n## Hand-written")))
     val added = "\n## Deletion vectors at 2M rows (r17)\n\ndv body\n"
-    assert(Dev.splice(doc, "\n## Deletion vectors at 2M rows", added) === doc + added)
+    assert(Scale.splice(doc, "\n## Deletion vectors at 2M rows", added) === doc + added)
+  }
+
+  /** SCALE.md sections no generator produces, by header prefix: the
+    * retired generators' measurements and the hand-written write-ups. */
+  private val frozen = Seq("Vector scale 10x", "Scrub + BPE 10x text soak",
+    "Residual IVFADC regime", "IVFADC-R shortlist dial", "Re-rank fetch at 10x",
+    "PCA covariance at 10x", "Compaction at the small-files pathology",
+    "Zero-copy lineage cut", "Deletion vectors at 2M rows",
+    "Iteration durability (r16)", "Filtered ANN at production selectivity",
+    "Beam-width serving dial").map("## " + _)
+
+  /** The base report's own "## " lines, rendered from an all-zero run. */
+  private lazy val baseSections: Seq[String] = {
+    import graft.operators._
+    val zero = ScaleSoak.Report(ScaleSoak.Layout(), MinHashConfig(), EmbedLshConfig(),
+      IvfConfig(), Nil, Nil, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, false, 0,
+      0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, false, 0, Nil)
+    ScaleSoak.renderMarkdown(zero).linesIterator.filter(_.startsWith("## ")).toSeq
+  }
+
+  private lazy val committedHeaders: Seq[String] =
+    Files.readString(Paths.get("SCALE.md")).linesIterator.filter(_.startsWith("## ")).toSeq
+
+  test("every kept generator's header is in the committed SCALE.md") {
+    assert(Files.readString(Paths.get("SCALE.md")).startsWith(Scale.BaseHeader))
+    assert(baseSections.nonEmpty)
+    for (h <- baseSections) assert(committedHeaders.contains(h), h)
+    for ((name, sec) <- Scale.sections if sec.header != Scale.BaseHeader)
+      assert(committedHeaders.exists(_.startsWith(sec.header.trim)), s"$name: ${sec.header.trim}")
+  }
+
+  test("every SCALE.md section is produced by a kept generator or declared frozen") {
+    val generated = Scale.sections.values.map(_.header.trim).filter(_.startsWith("## "))
+    for (h <- committedHeaders)
+      assert(baseSections.contains(h) || (generated ++ frozen).exists(h.startsWith),
+        s"SCALE.md section with no generator and not declared frozen: $h")
+    // a frozen section is frozen only while nothing regenerates it
+    for (f <- frozen)
+      assert(committedHeaders.exists(_.startsWith(f)) && !generated.exists(f.startsWith), f)
   }
 }

@@ -15,7 +15,7 @@ import graft.Measure
   * wall time and bucket statistics measured by [[graft.Measure]] — the
   * numbers every prior round argued from plan shape, now observed. The
   * rendered table lives in SCALE.md (regenerate with
-  * `sbt "runMain graft.Dev scale base"`); ScaleSoakSpec asserts the
+  * `sbt "Test/runMain graft.Scale base"`); ScaleSoakSpec asserts the
   * invariants on the same run:
   *
   *  - measured LSH bucket occupancy inside the envelope
@@ -1062,316 +1062,6 @@ object ScaleSoak {
       pqQueries = pqQueries, pqPartnerHits = pqPartnerHits)
   }
 
-  /** The `l.nVecs` embedding corpus at `dir/vecs_<nVecs>`, written once
-    * ([[graft.BuildOnce]], marker `_VECOK_<nVecs>`) for the vector soaks. */
-  private def writeVecs(spark: SparkSession, dir: String, l: Layout): String = {
-    val vecsPath = s"$dir/vecs_${l.nVecs}"
-    graft.BuildOnce(new java.io.File(dir), s"_VECOK_${l.nVecs}") {
-      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
-    }
-    vecsPath
-  }
-
-  /** r10 verdict #5 — the vector-family evidence ONE ORDER OF MAGNITUDE
-    * above the size the geometry was validated on: 200k base vectors (10×
-    * the soak's 20k) + the same planted protocols (every `vecDupPeriod`-th
-    * vector a 2%-perturbed dup of its predecessor; a 2000-vector identical
-    * mega block), with geometry DERIVED by the same sizing math
-    * (EmbedLshConfig.derive / IvfConfig.forCorpus / the default PqConfig) —
-    * nothing re-tuned by hand for the new size. Measures planted recall,
-    * bucket/cell occupancy against the derivations' own predictions, and
-    * cap behavior; returns the markdown section `graft.Dev scale vec`
-    * splices into SCALE.md. */
-  def runVectorScale(spark: SparkSession, dir: String,
-                     l: Layout = Layout(nVecs = 200000)): String = {
-    import org.apache.spark.storage.StorageLevel
-    val vecsPath = writeVecs(spark, dir, l)
-    val allVecs = spark.read.parquet(vecsPath)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = allVecs.count()
-
-    val lshCfg = EmbedLshConfig.derive(l.totalVecs, dim = l.dim,
-      targetBucket = 64, planeAgreement = 0.95).copy(cosineConfirm = 0.9)
-    val ivfCfg = IvfConfig.forCorpus(allVecs, recallTarget = 0.8,
-      cellHitRate = 0.6, minCell = 30)
-
-    val stages = scala.collection.mutable.ArrayBuffer[StageMetrics]()
-
-    // LSH near-dup: derived geometry, planted recall, cap behavior
-    var lshPairs: DataFrame = null
-    val (nPairs, lshM) = measure(spark, "embed LSH near-dup pairs",
-      s"derived ${lshCfg.bands} bands x ${lshCfg.bits} bits on $n vecs") {
-      lshPairs = NearDup.embedCosinePairs(allVecs, lshCfg)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      lshPairs.count()
-    }
-    stages += lshM
-    val plantedFound = lshPairs.filter(
-      col("dup_id") === col("keep_id") + 1 &&
-        col("dup_id") % l.vecDupPeriod === 1 &&
-        col("dup_id") < l.nVecs).count()
-    lshPairs.unpersist()
-    val embStats = bucketStats("embed LSH",
-      Ann.lshBands(allVecs, lshCfg), lshCfg.maxBucket,
-      lshCfg.expectedOccupancy(n),
-      Ann.lshBands(allVecs.filter(col("vec_id") < l.vecMegaStart), lshCfg))
-
-    // trained IVF: derived cell count, occupancy vs n/k, planted recall
-    var model: DataFrame = null
-    val (_, kmM) = measure(spark, "k-means fit",
-      s"k=${ivfCfg.numCentroids} derived cells, 2 Lloyd iterations") {
-      model = Ann.kmeansFit(allVecs, k = ivfCfg.numCentroids, iters = 2)
-        .persist()
-      model.count()
-    }
-    stages += kmM
-    val occRow = Ann.semAssign(allVecs, Ann.collectCentroids(model))
-      .groupBy(col("cell")).count()
-      .agg(count(lit(1)), avg(col("count")), max(col("count"))).head()
-    val cents = model.groupBy(col("cent_id"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("c_val")))),
-        x => x.getField("c_val")).as("ce"))
-      .persist()
-    cents.count()
-    // 500 planted-dup queries (the r10 soak's protocol, same count)
-    val isQ = col("vec_id") % l.vecDupPeriod === 1 && col("vec_id") < 20000
-    var ivfHits = 0L
-    val (_, ivfM) = measure(spark, "trained IVF top-3, 500 planted queries",
-      s"nprobe=${ivfCfg.nprobe}/${ivfCfg.numCentroids}") {
-      ivfHits = Ann.ivfTopK(allVecs, isQ, k = 3, ivfCfg, cents)
-        .filter(col("cid") === col("qid") - 1).count()
-      ivfHits
-    }
-    stages += ivfM
-
-    // PQ + ADC: default 16x16 geometry, planted-partner recall over codes
-    val pqCfg = PqConfig()
-    var pqHits = 0L
-    val (_, pqM) = measure(spark, "PQ train+encode+ADC top-3, same queries",
-      s"${pqCfg.m}x${pqCfg.k} codebooks, codes-only scan") {
-      val cb = Pq.train(allVecs, pqCfg)
-      pqHits = Pq.adcTopK(allVecs, isQ, 3, pqCfg, cb)
-        .filter(col("vec_id") === col("qid") - 1).count()
-      pqHits
-    }
-    stages += pqM
-
-    // residual IVFADC in its intended regime: the derived cell count is
-    // ~sqrt(n)-tight here, unlike the catalog fixture's 16 cells
-    var ridHits = 0L
-    val (_, ridM) = measure(spark, "residual IVFADC top-3, same queries",
-      s"trained quantizer k=${ivfCfg.numCentroids}, per-cell tables") {
-      ridHits = Pq.ivfAdcResidualTopK(allVecs, isQ, k = 3,
-        nprobe = ivfCfg.nprobe, cents, pqCfg,
-        pqSeedFrom = ivfCfg.numCentroids)
-        .filter(col("vec_id") === col("qid") - 1).count()
-      ridHits
-    }
-    stages += ridM
-    cents.unpersist(); model.unpersist(); allVecs.unpersist()
-
-    val sb = new StringBuilder
-    sb ++= s"\n## Vector scale 10x (r11): derived geometry at $n vectors\n\n"
-    sb ++= s"Corpus: ${l.nVecs} base + ${l.vecMegaSize} identical mega-block " +
-      s"vectors, dim ${l.dim}; planted dup every ${l.vecDupPeriod}th vector " +
-      "(2% perturbation). Geometry DERIVED at this size, not hand-tuned: " +
-      s"LSH ${lshCfg.bands} bands x ${lshCfg.bits} bits (maxBucket " +
-      s"${lshCfg.maxBucket}), IVF k=${ivfCfg.numCentroids} " +
-      s"nprobe=${ivfCfg.nprobe}, PQ ${pqCfg.m}x${pqCfg.k}.\n\n"
-    sb ++= "| stage | out rows | s | shuffle R MB | shuffle W MB | note |\n"
-    sb ++= "| --- | ---: | ---: | ---: | ---: | --- |\n"
-    stages.foreach { m =>
-      sb ++= f"| ${m.stage} | ${m.outRows} | ${m.seconds}%.1f | " +
-        f"${m.shuffleReadMB}%.1f | ${m.shuffleWriteMB}%.1f | ${m.note} |%n"
-    }
-    sb ++= "\n| metric | value |\n| --- | --- |\n"
-    sb ++= s"| LSH planted-dup recall | $plantedFound / ${l.vecDupCount} " +
-      s"(confirmed pairs total: $nPairs) |\n"
-    sb ++= s"| trained-IVF partner-in-top-3 | $ivfHits / 500 |\n"
-    sb ++= s"| PQ ADC partner-in-top-3 | $pqHits / 500 |\n"
-    sb ++= s"| residual IVFADC partner-in-top-3 | $ridHits / 500 |\n"
-    sb ++= f"| LSH buckets occ (mean/max/predicted) | ${embStats.meanOcc}%.1f / " +
-      s"${embStats.maxOcc} / ${embStats.predictedOcc} |\n"
-    sb ++= s"| LSH buckets over cap (all / mega excluded) | ${embStats.capped} " +
-      s"/ ${embStats.cappedWithoutPlanted} |\n"
-    sb ++= f"| IVF cells (count / mean occ / max occ / expected n over k) | " +
-      f"${occRow.getLong(0)} / ${occRow.getDouble(1)}%.1f / " +
-      f"${occRow.getLong(2)} / ${n.toDouble / ivfCfg.numCentroids}%.1f |%n"
-    sb.toString
-  }
-
-  /** Residual-vs-raw PQ coding at a GIVEN coarse geometry (r11 verdict #3)
-    * — the PqSpec probe promoted to a measured SCALE.md artifact so the
-    * winning regime is demonstrated on the sf0.1-sized corpus, not only
-    * the sf0.001 spec fixture. Both codings rank the IDENTICAL candidate
-    * sets (same trained cells, same nprobe) against the same exact-L2
-    * top-3 gold; the only variable is what the 8 bytes encode (x vs
-    * x − centroid(cell)). Returns (residual/raw energy ratio, raw-coding
-    * agreement, residual agreement, gold rows). */
-  def residualRegimeLeg(vecs: DataFrame, cells: Int, nprobe: Int, nQ: Int,
-                        cfg: PqConfig,
-                        pqSeedFrom: Long = -1L): (Double, Long, Long, Long) = {
-    val seedFrom = if (pqSeedFrom >= 0) pqSeedFrom else cells.toLong
-    val isQ = col("vec_id") < nQ
-    val tcents = Ann.kmeansFit(vecs, k = cells, iters = 2)
-      .groupBy(col("cent_id"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("c_val")))),
-        x => x.getField("c_val")).as("ce")).persist()
-    tcents.count()
-    val (tAssigned, tProbes) = Pq.assignProbes(vecs, isQ, nprobe, tcents)
-    val energy = vecs.join(tAssigned, "vec_id")
-      .join(broadcast(tcents), col("cell") === col("cent_id"))
-      .select(Ann.vdot(col("e"), col("e")).as("raw2"),
-        Ann.vdot(zip_with(col("e"), col("ce"), (a, b) => a - b),
-          zip_with(col("e"), col("ce"), (a, b) => a - b)).as("res2"))
-      .agg(avg(col("raw2")).as("raw2"), avg(col("res2")).as("res2")).head()
-    val ratio = energy.getDouble(1) / energy.getDouble(0)
-    val cb = Pq.train(vecs, cfg)
-    val rawCodes = Pq.codesWide(vecs, cfg, cb).join(tAssigned, "vec_id")
-    val rawCand = rawCodes.join(broadcast(tProbes),
-        rawCodes("cell") === tProbes("qcell") &&
-          tProbes("qid") =!= rawCodes("vec_id"))
-      .select(col("qid"), col("vec_id"), col("codes"))
-    val rawTop = Pq.adcRank(rawCand, 3, Pq.dtState(vecs, isQ, cfg, cb))
-      .select(col("qid"), col("vec_id"))
-    val resTop = Pq.ivfAdcResidualTopK(vecs, isQ, k = 3, nprobe = nprobe,
-      tcents, cfg, pqSeedFrom = seedFrom).select(col("qid"), col("vec_id"))
-    // exact-L2 top-3 over the SAME candidate sets (the PqSpec gold)
-    val cand = tAssigned
-      .join(tProbes, tAssigned("cell") === tProbes("qcell") &&
-        tProbes("qid") =!= tAssigned("vec_id"))
-      .select(col("qid"), col("vec_id").as("cand_id"))
-    val ex = Pq.exploded(vecs, cfg)
-    val qex = ex.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
-    // round-6 BEFORE the rank (r12 ADVICE): raw double sums depend on
-    // aggregation order, and a near-tie gold member flipping with it would
-    // make the SCALE.md agreement counts non-reproducible in the last
-    // unit — same floor(x·1e6+0.5)/1e6 discipline as Pq.rerankExact and
-    // runRerankDial's gold
-    val d = qex.join(ex.withColumnRenamed("vec_id", "cand_id"), Seq("m", "si"))
-      .groupBy(col("qid"), col("cand_id"))
-      .agg((floor(sum((col("qx") - col("x")) * (col("qx") - col("x")))
-        * 1e6 + 0.5) / 1e6).as("d2"))
-    val gold = cand.join(d, Seq("qid", "cand_id"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-          .orderBy(col("d2"), col("cand_id"))))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("cand_id").as("vec_id")).persist()
-    val total = gold.count()
-    val aRaw = rawTop.join(gold, Seq("qid", "vec_id"), "left_semi").count()
-    val aRes = resTop.join(gold, Seq("qid", "vec_id"), "left_semi").count()
-    gold.unpersist(); tcents.unpersist()
-    (ratio, aRaw, aRes, total)
-  }
-
-  /** Scrub + BPE at the 10× doc scale (r11 verdict #6): the two r11 text
-    * heavyweights measured on the 100k-doc soak corpus the document soak
-    * predates them on. The corpus plants frequent passages by construction
-    * (every 3-doc family shares all tokens but one mutated position — df-3
-    * 8-gram passages; the 2500-doc identical mega family is a df-2500
-    * block), so the scrub legs are non-vacuous. Measures:
-    *  - the frequent-gram path WITHOUT vs WITH the CMS prefilter
-    *    ([[ScrubPassages.scrub]]): output equality (except both ways) and
-    *    the shuffle-byte difference — the scaladoc's 100 TB claim as a
-    *    number;
-    *  - one full BPE training round at this size: vocabulary-table rows
-    *    (the per-round working set), pair-stat rows, the argmax, and the
-    *    round wall time. */
-  def runScrubBpeSoak(spark: SparkSession, dir: String,
-                      l: Layout = Layout()): String = {
-    import org.apache.spark.storage.StorageLevel
-    val paths = writeCorpus(spark, dir, l)
-    val docsDf = spark.read.parquet(paths.docs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nDocs = docsDf.count()
-    val stages = scala.collection.mutable.ArrayBuffer[StageMetrics]()
-
-    var exact: DataFrame = null
-    val (_, exM) = measure(spark, "scrub exact (no prefilter)",
-      s"W=8 minDf=3 over $nDocs docs") {
-      exact = ScrubPassages.scrub(docsDf)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      exact.count()
-    }
-    stages += exM
-    var pre: DataFrame = null
-    val (_, preM) = measure(spark, "scrub with CMS prefilter",
-      "probe before the distinct df shuffle") {
-      pre = ScrubPassages.scrub(docsDf, prefilter = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pre.count()
-    }
-    stages += preM
-    val diffs = exact.except(pre).count() + pre.except(exact).count()
-    val removed = exact.agg(sum(col("n_removed"))).head().getLong(0)
-    val docsTouched = exact.filter(col("n_removed") > 0).count()
-    exact.unpersist(); pre.unpersist()
-
-    val syms = Bpe.symbolTable(docsDf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var vocabRows = 0L
-    val (_, vocM) = measure(spark, "BPE symbol table",
-      "word types x (chars + </w>) — the per-round working set") {
-      vocabRows = syms.count()
-      vocabRows
-    }
-    stages += vocM
-    var pairRows = 0L
-    var best: (String, String, Long) = ("", "", 0L)
-    val (_, rndM) = measure(spark, "BPE round 1 (stats + argmax + apply)",
-      "pair counts over the vocab, 1-row argmax collect, typed merge pass cut") {
-      val pc = Bpe.pairCounts(syms).persist(StorageLevel.MEMORY_AND_DISK)
-      pairRows = pc.count()
-      val b = pc.orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .collect()(0)
-      best = (b.getString(0), b.getString(1), b.getLong(2))
-      val next = Materialize.cut(Bpe.mergePass(syms, Seq(best._1 -> best._2)))
-      val applied = next.df.count()
-      next.release()
-      pc.unpersist()
-      applied
-    }
-    stages += rndM
-    syms.unpersist(); docsDf.unpersist()
-
-    val sb = new StringBuilder
-    sb ++= s"\n## Scrub + BPE 10x text soak (r12): $nDocs-doc corpus\n\n"
-    sb ++= "Soak layout (planted df-3 passage families every 100 docs, a " +
-      "2500-doc identical mega family). The CMS prefilter must change " +
-      s"bytes, not results: except-diff rows both ways = **$diffs** " +
-      "(ScrubPrefilterSpec pins the same equality on the fixtures). " +
-      f"Measured at local[${spark.sparkContext.defaultParallelism}]: the " +
-      f"prefilter cuts shuffle " +
-      f"${exM.shuffleWriteMB}%.0f → ${preM.shuffleWriteMB}%.0f MB " +
-      f"(${exM.shuffleWriteMB / math.max(1e-9, preM.shuffleWriteMB)}%.1fx) " +
-      f"and moves wall time ${exM.seconds}%.0f → ${preM.seconds}%.0f s. " +
-      "Local shuffles go through memory/SSD, so saved bytes buy little " +
-      "here, while the CMS build treeAggregate-merges a 64 MB sketch per " +
-      "task (at local[32] that build dominated: 14 → 213 s in r12). The " +
-      "trade is designed for the " +
-      "regime the HeavyHitters scaladoc names: NETWORK-bound shuffles and " +
-      "a sketch persisted once per ingest batch (passes 0+1 amortized), " +
-      "where the byte cut is the bottleneck cut. BPE's per-round cost at " +
-      "this size is the vocabulary table, not the corpus — the corpus is " +
-      "touched once by the word-frequency aggregate inside the " +
-      "symbol-table row.\n\n"
-    sb ++= "| stage | out rows | s | shuffle R MB | shuffle W MB | note |\n"
-    sb ++= "| --- | ---: | ---: | ---: | ---: | --- |\n"
-    stages.foreach { m =>
-      sb ++= f"| ${m.stage} | ${m.outRows} | ${m.seconds}%.1f | " +
-        f"${m.shuffleReadMB}%.1f | ${m.shuffleWriteMB}%.1f | ${m.note} |%n"
-    }
-    sb ++= "\n| metric | value |\n| --- | --- |\n"
-    sb ++= s"| scrub outputs identical (except both ways) | $diffs diff rows |\n"
-    sb ++= s"| tokens removed / docs touched | $removed / $docsTouched |\n"
-    sb ++= s"| BPE vocabulary rows | $vocabRows |\n"
-    sb ++= s"| BPE round-1 pair-table rows | $pairRows |\n"
-    sb ++= s"| BPE round-1 argmax | (${best._1}, ${best._2}) x ${best._3} |\n"
-    sb.toString
-  }
-
   /** BATCHED BPE at tokenizer-training scale (r14 verdict #2): ≥256
     * effective merges over a WIDE synthetic vocabulary (the fixtures'
     * 31 word types exhaust after a handful of merges — a tokenizer-
@@ -1463,196 +1153,6 @@ object ScaleSoak {
     sb.toString
   }
 
-  /** The IVFADC-R shortlist dial for SCALE.md (r11 verdict #2): exact-top-3
-    * recall of the ADC shortlist vs its exact re-rank at shortlist sizes
-    * 10 and 50, on the given fixture corpus. Re-rank recovers exactly the
-    * gold members the shortlist contains (PqSpec pins the equality); the
-    * dial buys recall at the cost of fetching `shortlist` raw vectors per
-    * query. */
-  def runRerankDial(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.storage.StorageLevel
-    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = vecs.count()
-    val cfg = PqConfig()
-    val isQ = col("vec_id") < 10
-    val cb = Pq.train(vecs, cfg)
-    val ex = Pq.exploded(vecs, cfg)
-    val qex = ex.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
-    val gold = qex.join(ex.withColumnRenamed("vec_id", "cand"), Seq("m", "si"))
-      .groupBy(col("qid"), col("cand"))
-      .agg((floor(sum((col("qx") - col("x")) * (col("qx") - col("x"))) * 1e6
-        + 0.5) / 1e6).as("d2"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-          .orderBy(col("d2"), col("cand"))))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("cand").as("vec_id")).persist()
-    gold.count()
-    def hits(df: DataFrame): Long =
-      df.select(col("qid"), col("vec_id"))
-        .join(gold, Seq("qid", "vec_id"), "left_semi").count()
-    val adc3 = hits(Pq.adcTopK(vecs, isQ, 3, cfg, cb))
-    val legs = Seq(10, 50).map { s =>
-      val ((short, rr), m) = Measure.during(spark)((hits(Pq.adcTopK(vecs, isQ, s, cfg, cb)),
-        hits(Pq.adcRerankTopK(vecs, isQ, k = 3, shortlist = s, cfg, cb))))
-      (s, short, rr, m.wallS)
-    }
-    gold.unpersist(); vecs.unpersist()
-    val sb = new StringBuilder
-    sb ++= s"\n## IVFADC-R shortlist dial (r12): ADC shortlist vs exact re-rank at $n vectors ($sfDir)\n\n"
-    sb ++= s"Gold = exact-L2 top-3 per query (10 queries, self included — the " +
-      s"adcTopK convention); raw ADC top-3 recall is $adc3 / 30. Re-rank " +
-      "recovers exactly the gold members the shortlist holds (PqSpec pins " +
-      "the equality), so the shortlist size is the recall dial and its cost " +
-      "is the per-query raw-vector fetch.\n\n"
-    sb ++= "| shortlist | gold in shortlist | re-ranked top-3 recall | raw vectors fetched/query | wall s |\n"
-    sb ++= "| ---: | ---: | ---: | ---: | ---: |\n"
-    legs.foreach { case (s, short, rr, secs) =>
-      sb ++= f"| $s | $short / 30 | $rr / 30 | $s | $secs%.1f |%n"
-    }
-    sb.toString
-  }
-
-  /** The re-rank raw-vector FETCH at the 10× vector scale (r12 verdict
-    * #6): the one IVFADC-R shape without a measured row. Pq.rerankExact
-    * fetches the shortlist's raw vectors via `exploded ⋈
-    * broadcast(shortlist)` — a map-side semi-join on the corpus scan; the
-    * deliberately-wrong counterpart (the 37 s explode-join's analog for
-    * re-rank) shuffles the n·m exploded corpus on vec_id to meet the
-    * shortlist — a corpus-sized exchange whose bytes do NOT shrink as the
-    * shortlist does. Both legs run the identical downstream exact-distance
-    * aggregate + window on the SAME deterministic synthetic shortlist
-    * (fetch cost is independent of WHICH ids are fetched; synthesizing it
-    * isolates the fetch from ADC ranking), and their top-3 counts are
-    * asserted equal. Measured at S = 10 / 50 / 200 per query. */
-  def runRerankFetchSoak(spark: SparkSession, dir: String,
-                         l: Layout = Layout(nVecs = 200000)): String = {
-    import org.apache.spark.storage.StorageLevel
-    import spark.implicits._
-    val vecsPath = writeVecs(spark, dir, l)
-    val vecs = spark.read.parquet(vecsPath)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = vecs.count()
-    val cfg = PqConfig()
-    val nQ = 10
-    val ex = Pq.exploded(vecs, cfg)
-    val qex = ex.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
-    def rerankTop3(cand: DataFrame): Long =
-      cand.join(broadcast(qex), Seq("qid", "m", "si"))
-        .groupBy(col("qid"), col("vec_id"))
-        .agg((floor(sum((col("qx") - col("x")) * (col("qx") - col("x")))
-          * 1e6 + 0.5) / 1e6).as("d2"))
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-            .orderBy(col("d2"), col("vec_id"))))
-        .filter(col("rank") <= 3).count()
-    val legs = Seq(10, 50, 200).map { s =>
-      val sl = (0 until nQ).flatMap(q => (0 until s).map(i =>
-          (q.toLong, (q * 7919L + i * 104729L) % n)))
-        .toDF("qid", "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
-      sl.count()
-      val (r1, m1) = measure(spark, s"fetch S=$s broadcast",
-        "exploded JOIN broadcast(shortlist) — the Pq.rerankExact shape") {
-        rerankTop3(ex.join(broadcast(sl), Seq("vec_id")))
-      }
-      val (r2, m2) = measure(spark, s"fetch S=$s shuffled",
-        "exploded shuffled on vec_id to meet the shortlist — wrong shape") {
-        rerankTop3(ex.join(sl.hint("shuffle_hash"), Seq("vec_id")))
-      }
-      require(r1 == r2, s"fetch variants diverged at S=$s: $r1 vs $r2")
-      sl.unpersist(blocking = false)
-      (s, m1, m2)
-    }
-    vecs.unpersist(blocking = false)
-    val sb = new StringBuilder
-    sb ++= s"\n## Re-rank fetch at 10x (r13): broadcast semi-join vs corpus shuffle at $n vectors\n\n"
-    sb ++= s"The IVFADC-R re-rank stage fetches S raw vectors per query " +
-      s"(${nQ} queries, ${cfg.m}x${cfg.subDim}-coord explode). The broadcast " +
-      "fetch's shuffle traffic is the post-fetch aggregate only " +
-      "(O(n_q*S*dim)); the shuffled fetch pays a corpus-sized exchange " +
-      "(n*dim exploded rows) REGARDLESS of S — the dial the production " +
-      "shape exists to avoid. Identical synthetic shortlists, identical " +
-      "downstream re-rank, equal top-3 counts asserted per leg.\n\n"
-    sb ++= "| S | leg | s | shuffle R MB | shuffle W MB |\n"
-    sb ++= "| ---: | --- | ---: | ---: | ---: |\n"
-    legs.foreach { case (s, m1, m2) =>
-      sb ++= f"| $s | broadcast | ${m1.seconds}%.1f | ${m1.shuffleReadMB}%.1f | ${m1.shuffleWriteMB}%.1f |%n"
-      sb ++= f"| $s | shuffled | ${m2.seconds}%.1f | ${m2.shuffleReadMB}%.1f | ${m2.shuffleWriteMB}%.1f |%n"
-    }
-    sb.toString
-  }
-
-  /** B99 covariance-statistics soak at the 10× vector scale: the one-pass
-    * mergeable-buffer aggregate [[Pca.collectStats]] vs the n·d² exploded
-    * self-join (the shape the ORACLE replays, and the shape a naive
-    * "PCA in SQL" implementation would ship). Both legs produce the same
-    * second moments (asserted within one round-6 quantum); the point is
-    * the cost asymmetry — the one-pass buffer's shuffle is
-    * partitions × ~17 KB, the join's grows with n·d². */
-  def runPcaSoak(spark: SparkSession, dir: String,
-                 l: Layout = Layout(nVecs = 200000)): String = {
-    import org.apache.spark.storage.StorageLevel
-    val vecsPath = writeVecs(spark, dir, l)
-    val dim = l.dim
-    val vecs = spark.read.parquet(vecsPath)
-      .select(col("vec_id"), col("e"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = vecs.count()
-
-    var st: Seq[Double] = Seq.empty
-    val (_, m1) = measure(spark, "one-pass buffer",
-      "single partial+final Aggregator, d(d+1)/2+d+1 doubles per partition") {
-      st = Pca.collectStats(vecs, dim)
-      st.length.toLong
-    }
-
-    var joined: Map[(Int, Int), Double] = Map.empty
-    val (_, m2) = measure(spark, "explode self-join",
-      "exploded (vec_id,i,x) joined to itself on vec_id, groupBy (i,j) — n·d² rows") {
-      val ex = vecs.select(col("vec_id"), posexplode(col("e")))
-        .select(col("vec_id"), col("pos").as("i"), col("col").as("x"))
-      val rows = ex.as("a")
-        .join(ex.as("b"), col("a.vec_id") === col("b.vec_id") &&
-          col("b.i") >= col("a.i"))
-        .groupBy(col("a.i").as("i"), col("b.i").as("j"))
-        .agg(sum(col("a.x") * col("b.x")).as("sij"))
-        .collect()
-      joined = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-      rows.length.toLong
-    }
-
-    // same moments, different plans: agree within one round-6 quantum
-    var t = 1 + dim
-    var worst = 0.0
-    for (i <- 0 until dim; j <- i until dim) {
-      worst = math.max(worst, math.abs(st(t) - joined((i, j))))
-      t += 1
-    }
-    require(worst < 1e-6,
-      f"moment derivations diverged beyond a quantum: $worst%.3g")
-    vecs.unpersist(blocking = false)
-
-    val sb = new StringBuilder
-    sb ++= s"\n## PCA covariance at 10x (r13): one-pass buffer vs n·d² self-join at $n vectors\n"
-    sb ++= s"\nThe B99 one-pass covariance buffer vs the n·d² exploded " +
-      s"self-join at $n vectors × dim $dim (upper-triangle moments both " +
-      f"ways, max |Δ| = $worst%.2g < one round-6 quantum):\n\n"
-    sb ++= "| leg | s | shuffle R MB | shuffle W MB |\n"
-    sb ++= "| --- | ---: | ---: | ---: |\n"
-    for (m <- Seq(m1, m2))
-      sb ++= f"| ${m.stage} | ${m.seconds}%.1f | ${m.shuffleReadMB}%.1f | ${m.shuffleWriteMB}%.1f |%n"
-    sb ++= "\nThe buffer's shuffle is partitions × ~17 KB regardless of " +
-      "corpus size (the sub-MB row above); the join's traffic is the " +
-      "exploded corpus and scales with n·d — at 100 TB the join shape is " +
-      "a non-starter and the oracle-only derivation stays oracle-only.\n"
-    sb.toString
-  }
-
   /** Graph-ANN LIFECYCLE at 10× for SCALE.md (B95 build / B119 insert /
     * B120 serve / B122 delete): build the index ONCE over the soak
     * corpus, then measure that every maintenance/serving operation is
@@ -1666,7 +1166,11 @@ object ScaleSoak {
   def runKnnLifecycleSoak(spark: SparkSession, dir: String,
                           l: Layout = Layout(nVecs = 20000)): String = {
     import org.apache.spark.storage.StorageLevel
-    val vecsPath = writeVecs(spark, dir, l)
+    // the embedding corpus, written once per size (marker `_VECOK_<nVecs>`)
+    val vecsPath = s"$dir/vecs_${l.nVecs}"
+    graft.BuildOnce(new java.io.File(dir), s"_VECOK_${l.nVecs}") {
+      embeddings(spark, l).write.mode("overwrite").parquet(vecsPath)
+    }
     val cfg = EmbedLshConfig(bands = 8, bits = 9,
       prime = EmbedLshConfig.primeAtLeast(72), dim = l.dim,
       maxBucket = 1000, cosineConfirm = 0.45)
@@ -1723,69 +1227,6 @@ object ScaleSoak {
     sb.toString
   }
 
-  /** The residual-regime section for SCALE.md: the catalog geometry
-    * (16 cells — the parity regime the hash-checked entry pins) vs the
-    * ~√n tight-quantizer geometry (the regime Jégou 2011 §IV is FOR), on
-    * the given fixture corpus. */
-  def runResidualRegime(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.storage.StorageLevel
-    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = vecs.count()
-    val cfg = PqConfig()
-    val nQ = 50
-    val legs = Seq((16, 2), (64, 8), (256, 32)).map { case (cells, nprobe) =>
-      val ((ratio, aRaw, aRes, total), m) =
-        Measure.during(spark)(residualRegimeLeg(vecs, cells, nprobe, nQ, cfg))
-      (cells, nprobe, ratio, aRaw, aRes, total, m.wallS)
-    }
-    // seed-sensitivity probe at the MID regime (r12 finding): the 64-cell
-    // residual agreement swings with the PQ codebook seed position while
-    // raw coding (always seeded from 0) is fixed — the mid-regime signal
-    // is seed-noise-dominated, so a single seed's win or loss there means
-    // nothing; the decisive-regime conclusion must clear the whole range
-    val seedProbe = Seq(300L, 700L, 1100L, 1500L).map { s =>
-      val (_, _, aRes, _) = residualRegimeLeg(vecs, cells = 64, nprobe = 8,
-        nQ, cfg, pqSeedFrom = s)
-      (s, aRes)
-    }
-    vecs.unpersist()
-    val sb = new StringBuilder
-    sb ++= s"\n## Residual IVFADC regime (r12): raw vs residual coding at $n vectors ($sfDir)\n\n"
-    sb ++= "Same trained cells, same nprobe (scan fraction fixed at 1/8 " +
-      "beyond the catalog's 16-cell geometry), same exact-L2 top-3 gold per " +
-      "geometry — the only variable is what the 8 PQ bytes encode (x vs " +
-      "x − centroid(cell)). Measured finding: the residual advantage tracks " +
-      "the ENERGY RATIO, not the cell count per se — where the quantizer " +
-      "leaves ≥ ~85% of the energy in the residuals the two codings trade " +
-      "places inside the noise band of 150 comparisons, and the decisive win " +
-      "appears once the quantizer absorbs ~30% (256 cells here; PqSpec's " +
-      "sf0.001 64-cell win sits at the comparable cells/n ratio on the 10× " +
-      "smaller fixture). The √n rule of thumb is therefore a floor, not the " +
-      "operating point, on tightly-clustered corpora like this one " +
-      "(Jégou 2011 §IV).\n\n"
-    sb ++= "| cells | nprobe | residual/raw energy | raw agree | residual agree | gold rows | wall s |\n"
-    sb ++= "| ---: | ---: | ---: | ---: | ---: | ---: | ---: |\n"
-    legs.foreach { case (c, p, r, aRaw, aRes, total, secs) =>
-      sb ++= f"| $c | $p | $r%.2fx | $aRaw / $total | $aRes / $total | $total | $secs%.1f |%n"
-    }
-    val mid = legs(1)
-    // the default leg's seed is the entry rule seedFrom = cells
-    val allMid = (mid._1.toLong -> mid._5) +: seedProbe.map(p => p._1 -> p._2)
-    sb ++= "\nMid-regime seed sensitivity (64 cells): residual agreement by " +
-      "PQ codebook seed position — raw coding is seeded from 0 in every " +
-      "case, so its " + s"${mid._4}/${mid._6} is fixed. " +
-      allMid.map { case (s, a) => s"seed $s → $a/${mid._6}" }
-        .mkString("", "; ", ". ") +
-      "The mid-regime outcome is SEED-NOISE-DOMINATED (the swing spans " +
-      "both sides of raw), which is why the single default-seed row above " +
-      "must not be read as \"residual loses at 64 cells\"; the decisive " +
-      "256-cell win clears the entire observed seed range.\n"
-    sb.toString
-  }
-
   def renderMarkdown(r: Report): String = {
     val sb = new StringBuilder
     sb ++= "# SCALE — measured soak of the dedup/ANN/CC path\n\n"
@@ -1798,7 +1239,7 @@ object ScaleSoak {
       s"**${r.layout.totalVecs} embeddings** (${r.layout.vecDupCount} planted " +
       s"dup pairs, one ${r.layout.vecMegaSize}-vector identical block) — " +
       "~10x the sf0.1 fixtures, deterministic (pure md5 arithmetic).\n" +
-      "Regenerate: `sbt \"runMain graft.Dev scale base\"`. Invariants are\n" +
+      "Regenerate: `sbt \"Test/runMain graft.Scale base\"`. Invariants are\n" +
       "asserted by `ScaleSoakSpec` (tagged `graft.Slow`).\n\n"
     sb ++= s"Derived configs: minhash ${r.minhashCfg.numHashes} hashes x " +
       s"${r.minhashCfg.bands} bands (confirm ${r.minhashCfg.jaccardConfirm}); " +
@@ -1949,12 +1390,6 @@ object ScaleSoak {
     sb.toString
   }
 
-  /** The B114 compaction soak: a streaming-sink-shaped 2048-file table
-    * (the small-files pathology) vs its compacted rewrite — SAME bytes,
-    * SAME rows, different layout — full-scan wall measured on both. Each
-    * scan runs once warm (OS page cache parity) before the measured run,
-    * so the delta is per-file open + footer-parse + task-scheduling cost,
-    * which is exactly what compaction exists to delete. */
   /** STREAMING-CDC fold at scale (r16; SURVEY.md §2 B134): the
     * [[StreamCdc]] economics claim — per-batch cost is O(batch + keys),
     * reading only the latest predecessor version, never the changelog
@@ -2078,223 +1513,6 @@ object ScaleSoak {
     require(v3Dirs <= 2, s"narrow batch wrote $v3Dirs bucket dirs, expected <= 2")
     require(vBytes(3) * 5 < vBytes(2),
       s"narrow batch wrote ${vBytes(3)} B vs full fold ${vBytes(2)} B — pruning ineffective")
-    sb.toString
-  }
-
-  /** Same-JVM A/B of the r17 zero-copy [[Materialize.cut]] re-wrap vs the
-    * legacy `createDataFrame(ck.rdd, ck.schema)` form (r16 verdict #5):
-    * the legacy wrap derives an external-Row RDD from the checkpointed
-    * InternalRow RDD, so EVERY downstream read of EVERY round re-decodes
-    * and re-encodes each row; the shim wrap reuses the internal RDD
-    * directly. Both arms run the identical round body (cut → projection
-    * over a 64-slot array + string column → count) in the same session,
-    * interleaved A/B/A/B so JIT/page-cache drift lands on both — the
-    * isolated difference is the wrap. The end-of-round BPE soak wall is
-    * NOT a valid A/B for this (box speed moved 2× between rounds:
-    * r14 calibration 25.0 s vs 52.7 s for identical code). */
-  def runCutAbSoak(spark: SparkSession, nRows: Long = 400000L,
-                   rounds: Int = 12): String = {
-    def base = spark.range(nRows).select(col("id"),
-      transform(sequence(lit(0), lit(63)),
-        i => (col("id") % 97 + i).cast("double")).as("e"),
-      md5(col("id").cast("string")).as("payload"))
-    def roundBody(df: DataFrame): DataFrame =
-      df.select(col("id"), transform(col("e"), x => x * 1.0000001d).as("e"),
-        col("payload"))
-    def arm(zeroCopy: Boolean): Double = {
-      var cur = base
-      var prev: Option[Materialize.Cut] = None
-      var prevLegacy: Option[org.apache.spark.sql.DataFrame] = None
-      val (_, m) = Measure.during(spark)((1 to rounds).foreach { _ =>
-        if (zeroCopy) {
-          val c = Materialize.cut(roundBody(cur))
-          require(c.df.count() == nRows, "zero-copy arm lost rows")
-          prev.foreach(_.release())
-          prev = Some(c); cur = c.df
-        } else {
-          val ck = roundBody(cur).localCheckpoint()
-          val wrapped = spark.createDataFrame(ck.rdd, ck.schema)
-          require(wrapped.count() == nRows, "legacy arm lost rows")
-          prevLegacy.foreach(_.unpersist(blocking = false))
-          prevLegacy = Some(ck); cur = wrapped
-        }
-      })
-      prev.foreach(_.release()); prevLegacy.foreach(_.unpersist(blocking = false))
-      m.wallS
-    }
-    arm(zeroCopy = true) // JIT warm, discarded
-    val pairs = (1 to 3).map(_ => (arm(zeroCopy = false), arm(zeroCopy = true)))
-    val legacy = pairs.map(_._1).min
-    val zero = pairs.map(_._2).min
-    val sb = new StringBuilder
-    sb ++= f"\n$nRows%,d rows × 64-dim array + string, $rounds cut-rounds per arm, " +
-      "3 interleaved A/B pairs, min-of-runs:\n\n"
-    sb ++= "| arm | wall s (min) | per-round s |\n| --- | ---: | ---: |\n"
-    sb ++= f"| legacy `createDataFrame(ck.rdd, schema)` | $legacy%.1f | ${legacy / rounds}%.2f |\n"
-    sb ++= f"| zero-copy LogicalRDD re-wrap (r17) | $zero%.1f | ${zero / rounds}%.2f |\n"
-    sb ++= f"\nPer-round delta ${(legacy - zero) / rounds}%.2f s " +
-      f"(${legacy / math.max(zero, 1e-9)}%.2fx): the decode/encode round-trip " +
-      "the shim deletes. At the 32k-merge BPE regime the cut runs thousands " +
-      "of times — this constant is why the shim exists.\n"
-    require(zero <= legacy * 1.1,
-      f"zero-copy wrap measured SLOWER than legacy ($zero%.1f vs $legacy%.1f s)")
-    sb.toString
-  }
-
-  /** B137 deletion-vector soak: a 2M-row / 64-file range-clustered table,
-    * a 2000-row CLUSTERED delete (one tenant's contiguous id block — the
-    * GDPR shape) and a 2000-row SCATTERED delete (ids ≡ 0 mod 1000 — the
-    * adversarial spread), measuring what the merge-on-read economics
-    * actually buy: mark cost + DV size vs table size, the merge-on-read
-    * scan overhead, materialize write ∝ delete-carrying files, and the
-    * copy-on-write full rewrite it replaces. Appends a SCALE.md section. */
-  def runDvSoak(spark: SparkSession, dir: String,
-                nRows: Long = 2000000L, nFiles: Int = 64,
-                delBlock: Long = 2000L): String = {
-    val tablePath = s"$dir/dv_table"
-    spark.range(nRows)
-      .select(col("id"), md5(col("id").cast("string")).as("payload"))
-      .repartitionByRange(nFiles, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode("overwrite").parquet(tablePath)
-    val (_, tableBytes) = Compact.layout(spark, tablePath)
-
-    def dvBytes(path: String): Long = {
-      val f = new java.io.File(path, "_dv")
-      if (!f.exists()) 0L
-      else f.listFiles().filter(_.isFile).map(_.length()).sum
-    }
-    def scanCount(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(count(lit(1))).head().getLong(0)
-
-    // clustered delete: one contiguous id block (tenant erasure)
-    val delLo = nRows / 2
-    val clustered = spark.range(delLo, delLo + delBlock).select(col("id"))
-    var mkSt: DeleteVectors.MarkStats = null
-    val (_, mMark) = measure(spark, "mark 2000 clustered ids",
-      "one scan ⋈ broadcast keys, metadata-only write") {
-      mkSt = DeleteVectors.mark(spark, tablePath, clustered, "id")
-      mkSt.rowsMarked
-    }
-    scanCount(spark.read.parquet(tablePath)) // warm
-    val (nPlain, mPlain) = measure(spark, "plain full scan", "no DV applied") {
-      scanCount(spark.read.parquet(tablePath))
-    }
-    val (nMor, mMor) = measure(spark, "merge-on-read full scan",
-      "broadcast anti-join against the DV") {
-      scanCount(DeleteVectors.read(spark, tablePath, "id"))
-    }
-    val matPath = s"$dir/dv_mat"
-    var matSt: DeleteVectors.MaterializeStats = null
-    val (_, mMat) = measure(spark, "materialize (clustered delete)",
-      "rewrite touched files, FS-copy the rest") {
-      matSt = DeleteVectors.materialize(spark, tablePath, matPath, "id")
-      matSt.filesRewritten.toLong
-    }
-    val (nMat, _) = measure(spark, "materialized scan", "") {
-      scanCount(spark.read.parquet(matPath))
-    }
-    // the copy-on-write alternative: full filtered rewrite of the table
-    val cowPath = s"$dir/dv_cow"
-    val (_, mCow) = measure(spark, "copy-on-write full rewrite",
-      "what the same delete costs without a DV") {
-      spark.read.parquet(tablePath)
-        .filter(!col("id").between(delLo, delLo + delBlock - 1))
-        .repartition(nFiles)
-        .write.mode("overwrite").parquet(cowPath)
-      nFiles.toLong
-    }
-    val clusteredDvKb = dvBytes(tablePath) / 1024.0
-    val clusteredTouched = matSt.filesRewritten
-
-    // scattered delete on a FRESH copy: same count, maximal file spread
-    val tablePath2 = s"$dir/dv_table_scatter"
-    spark.read.parquet(tablePath).write.mode("overwrite").parquet(tablePath2)
-    val scattered = spark.range(delBlock).select((col("id") * (nRows / delBlock)).as("id"))
-    DeleteVectors.mark(spark, tablePath2, scattered, "id")
-    val matPath2 = s"$dir/dv_mat_scatter"
-    var matSt2: DeleteVectors.MaterializeStats = null
-    val (_, mMat2) = measure(spark, "materialize (scattered delete)",
-      "same 2000 rows spread over every file") {
-      matSt2 = DeleteVectors.materialize(spark, tablePath2, matPath2, "id")
-      matSt2.filesRewritten.toLong
-    }
-
-    require(nPlain == nRows && nMor == nRows - delBlock && nMat == nMor,
-      s"row counts diverged: plain=$nPlain mor=$nMor mat=$nMat")
-
-    val sb = new StringBuilder
-    sb ++= s"\n## Deletion vectors at 2M rows (r17): merge-on-read vs copy-on-write\n"
-    sb ++= f"\nA $nRows%,d-row / ${tableBytes / 1048576.0}%.0f MB table in $nFiles range-clustered files; " +
-      f"a $delBlock%,d-row contiguous delete (the tenant-erasure shape) marked as a " +
-      f"$clusteredDvKb%.0f KB deletion vector — ${clusteredDvKb * 1024 / tableBytes * 100}%.3f%% of the table, data files untouched:\n\n"
-    sb ++= "| leg | s | shuffle R MB | shuffle W MB |\n"
-    sb ++= "| --- | ---: | ---: | ---: |\n"
-    for (m <- Seq(mMark, mPlain, mMor, mMat, mCow, mMat2))
-      sb ++= f"| ${m.stage} | ${m.seconds}%.1f | ${m.shuffleReadMB}%.1f | ${m.shuffleWriteMB}%.1f |%n"
-    sb ++= f"\nThe clustered delete touches $clusteredTouched/$nFiles files, so materialize " +
-      f"rewrites ${matSt.filesRewritten} and byte-copies ${matSt.filesCopied} — " +
-      f"${mMat.shuffleWriteMB}%.1f MB through the engine vs the copy-on-write rewrite's " +
-      f"${mCow.shuffleWriteMB}%.1f MB (walls converge at this warm-cache toy size; the " +
-      "byte ratio is the claim, and on an object store the copies are server-side); " +
-      "merge-on-read serves the delete immediately at a " +
-      f"${(mMor.seconds / math.max(mPlain.seconds, 1e-9) - 1) * 100}%.0f%% full-scan overhead " +
-      "(a broadcast anti-join — map-side at any scale, and selective scans " +
-      "pay it only on the files they touch). " +
-      f"The honest bound: the SCATTERED delete ($delBlock%,d ids spread uniformly over the " +
-      f"id range) touches ${matSt2.filesRewritten}/$nFiles files and its materialize " +
-      f"degrades toward the full rewrite (${mMat2.seconds}%.1f s) — touched = " +
-      "min(delete spread, files), the same bound a table format's file-level MERGE has; " +
-      "the DV's win is that the DEFERRAL is free either way (mark is metadata-sized), so " +
-      "the rewrite runs on maintenance cadence instead of inside the delete request.\n"
-    sb.toString
-  }
-
-  def runCompactSoak(spark: SparkSession, dir: String,
-                     nRows: Long = 2000000L, nFrag: Int = 2048): String = {
-    val fragPath = s"$dir/compact_frag_$nFrag"
-    graft.BuildOnce(new java.io.File(dir), s"_FRAGOK_$nFrag") {
-      spark.range(nRows)
-        .select(col("id"), md5(col("id").cast("string")).as("payload"))
-        .repartition(nFrag)
-        .write.mode("overwrite").parquet(fragPath)
-    }
-    val compPath = s"$dir/compact_out_$nFrag"
-    val (nBefore, bytes) = Compact.layout(spark, fragPath)
-    var stats: Compact.Stats = null
-    val (_, mRw) = measure(spark, "compaction rewrite",
-      "read 2048 files, repartition to ceil(bytes/32MB), write") {
-      stats = Compact.compact(spark, fragPath, compPath, 32L * 1024 * 1024)
-      stats.filesAfter.toLong
-    }
-    def scanAgg(path: String): Long =
-      spark.read.parquet(path)
-        .agg(count(lit(1)).as("n"), sum(length(col("payload"))).as("b"))
-        .head().getLong(0)
-    scanAgg(fragPath) // warm
-    val (r1, mFrag) = measure(spark, s"full scan, $nBefore files",
-      "per-file open + footer parse + one task per file") { scanAgg(fragPath) }
-    scanAgg(compPath) // warm
-    val (r2, mComp) = measure(spark, s"full scan, ${stats.filesAfter} files",
-      "same bytes, planned layout") { scanAgg(compPath) }
-    require(r1 == nRows && r2 == nRows,
-      s"row counts diverged across layouts: $r1 vs $r2 (want $nRows)")
-
-    val sb = new StringBuilder
-    sb ++= s"\n## Compaction at the small-files pathology (r13): $nBefore files vs ${stats.filesAfter}\n"
-    sb ++= f"\nThe B114 rewrite on a $nRows%,d-row / ${bytes / 1048576.0}%.0f MB table " +
-      s"fragmented into $nBefore files (a streaming sink's droppings), " +
-      s"compacted to ${stats.filesAfter} files at a 32 MB target; " +
-      "identical full-scan aggregate on both layouts:\n\n"
-    sb ++= "| leg | s | shuffle R MB | shuffle W MB |\n"
-    sb ++= "| --- | ---: | ---: | ---: |\n"
-    for (m <- Seq(mRw, mFrag, mComp))
-      sb ++= f"| ${m.stage} | ${m.seconds}%.1f | ${m.shuffleReadMB}%.1f | ${m.shuffleWriteMB}%.1f |%n"
-    sb ++= f"\nSame bytes, same rows — the scan-time ratio (${mFrag.seconds / math.max(mComp.seconds, 1e-9)}%.1fx here) " +
-      "is pure per-file overhead; on an object store each open is also a " +
-      "round-trip, so the 100 TB gap is wider than this local-FS floor. " +
-      "The rewrite pays one read+shuffle+write of the data — amortized " +
-      "after a handful of scans at this ratio.\n"
     sb.toString
   }
 }
