@@ -119,7 +119,8 @@ case class VecL2(left: Expression, right: Expression) extends BinaryExpression {
   * (x[s·subDim+si] − cb[s][c][si])²)`, smallest centroid id winning ties
   * (strict `<` scanning c ascending).
   *
-  * This is the kernel form of [[graft.operators.Pq.assign]]'s
+  * This is the kernel form of the relational `assign` that
+  * `graft.operators.PqSpec` keeps as its reference, an
   * explode ⋈ broadcast-codebook → two shuffled aggregations pipeline: the
   * relational form shuffles n·m rows per pass (and at local scale pays ~6
   * sequential stages per encode); this expression is a zero-shuffle
@@ -129,8 +130,8 @@ case class VecL2(left: Expression, right: Expression) extends BinaryExpression {
   * gi-ascending), which is exactly this kernel's inner loop order; the
   * rounding is Pq.round6's `floor(d·1e6 + 0.5)/1e6` verbatim; and
   * `min(struct(d, cent_id))` = smallest d then smallest id = first-wins
-  * strict `<` ascending. PqSpec pins kernel codes ≡ the relational
-  * [[graft.operators.Pq.assign]] on the fixture corpus.
+  * strict `<` ascending. PqSpec pins kernel codes ≡ its relational
+  * `assign` on the fixture corpus.
   *
   * Coordinates past the vector's length contribute no term (the relational
   * inner join simply had no row there); element type is nullable to match

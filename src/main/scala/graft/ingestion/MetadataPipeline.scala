@@ -1,12 +1,18 @@
 package graft.ingestion
 
 import java.sql.Timestamp
+import java.util.concurrent.{ExecutionException, Executors}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, GraftScanFiles, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.udfs
 import graft.operators.Materialize
@@ -19,28 +25,41 @@ import model._
   * Stage map (reference MetadataIngestionServiceImpl.java:95–123):
   *  - A1/A2  binaryFile scan + ISBN-from-filename (ref executer :56–62),
   *    checksum-validated (isbn13_valid) — non-ISBN ZIPs dead-letter instead
-  *    of crashing;
-  *  - A9–A11 the three idempotency gates (ref :181–210) as existence flags:
-  *    one left join per state table against its DISTINCT keys (a key
-  *    repeated in history never duplicates a polled ZIP); the first gate
-  *    that matches wins, as in the reference's if-chain. Gates run BEFORE
-  *    any extraction — nothing is exploded for a known ISBN (ref :99);
-  *  - intra-batch dedup: a `row_number` per ISBN over the ZIPs that passed
-  *    the gates (DUPLICATE_IN_BATCH);
-  *  - A3–A8, A13 [[zipFate]], the per-ZIP kernel, on the survivors only:
+  *    of crashing. The poll's paths come from the frame's own scan
+  *    (`GraftScanFiles`: no job, no second listing), and each path's
+  *    zip_name and ISBN are derived on the driver ([[zipNameOf]],
+  *    [[isbnOf]]) exactly as the SQL `trim(element_at(split(path, '/'),
+  *    -1))` and `regexp_extract` would;
+  *  - A9–A11 the three idempotency gates (ref :181–210), decided on the
+  *    driver ([[verdicts]]): one keys-only lookup of the zones filtered by
+  *    the poll's keys (`isin`; no job when every zone is absent), then the
+  *    reference's if-chain per ZIP — the first gate that matches wins. A
+  *    key repeated in history never duplicates a polled ZIP. Gates run
+  *    BEFORE any extraction — nothing is exploded for a known ISBN (ref
+  *    :99);
+  *  - intra-batch dedup, on the driver too: per ISBN, the first ZIP by
+  *    (zip_name, path) among those that passed the gates is kept, the rest
+  *    are DUPLICATE_IN_BATCH;
+  *  - A3–A8, A13 [[zipFate]], the per-ZIP kernel, on the survivors only,
+  *    in the scan stage: one typed map over (path, content) looks each path
+  *    up in the broadcast verdicts — no join, window or shuffle — and runs
   *    explode ([[ZipExplode.explodeOne]]), parse (`udfs.parseProperties`),
   *    book check (A6/A7), genre check (A8) and the all_metadata map, all
-  *    from the ZIP's own row — no record-level join or aggregate;
+  *    from the ZIP's own row;
   *  - A12/A14/A15 sinks: raw zone, workflow table, dead letter — each a
   *    filter/projection of the one fates frame ([[process]]).
   *
   * Sink path ([[ingestPoll]]): the fates frame is materialized ONCE with
-  * `Materialize.cut` and all three appends read that cut, so a poll scans
-  * each ZIP once. Not `persist()`: the raw append's `recacheByPath`
-  * refreshes any CACHED plan reading the raw zone, so a persisted fates
-  * frame would be recomputed against the just-written raw zone and gate
-  * every fresh ZIP ALREADY_UPLOADED before the workflow append. A cut is a
-  * fresh RDD leaf with no file index to refresh.
+  * `Materialize.cut` and all three appends read that cut, coalesced to
+  * about one advisory partition of polled bytes, so a poll scans each ZIP
+  * once and writes one file per sink for a small poll. The dead-letter
+  * append runs beside the raw → workflow chain; dead letters never gate,
+  * so a crash still leaves the gates only raw, or raw + workflow. Not
+  * `persist()`: the raw append's `recacheByPath` refreshes any CACHED plan
+  * reading the raw zone, so a persisted fates frame would be recomputed
+  * against the just-written raw zone and gate every fresh ZIP
+  * ALREADY_UPLOADED before the workflow append. A cut is a fresh RDD leaf
+  * with no file index to refresh.
   *
   * Transactionality (A19): the reference runs each ZIP in REQUIRES_NEW and
   * rolls back the upload when extraction/validation throws — so only fully
@@ -50,10 +69,14 @@ import model._
   * re-attempted next run, matching the reference's retry-every-poll
   * behavior.
   *
-  * Scale posture (100 TB): the gates are shuffle joins keyed on
-  * zip_name/isbn (state tables are large history at scale — no broadcast);
-  * the kernel is a typed map in the stage after the gates (no shuffle of
-  * records); per-poll counts are `Dataset.observe` metrics on the pass.
+  * Scale posture (100 TB): a poll's keys are few, so the gates never
+  * shuffle: the lookup pushes the poll's keys into the zone scans and
+  * returns only matching keys, and the verdict map is as large as the
+  * file listing the driver already holds. What still grows with history
+  * is the zone listing and scan itself (one file per zone per poll; ROADMAP
+  * item 2's gate index and compaction). The kernel is a typed map in the
+  * scan stage (no shuffle of records); per-poll counts are
+  * `Dataset.observe` metrics on the pass.
   */
 object MetadataPipeline {
 
@@ -112,8 +135,10 @@ object MetadataPipeline {
     StructField("length", LongType),
     StructField("content", BinaryType)))
 
+  /** A local relation, so a plan over absent zones folds to nothing and
+    * runs no job. */
   def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   private def zone(spark: SparkSession, dir: String, name: String,
                    schema: StructType): DataFrame = {
@@ -167,56 +192,124 @@ object MetadataPipeline {
     }
   }
 
-  /** One [[ZipFate]] row per polled ZIP: the gates as flags, the in-batch
-    * rank over the ZIPs that passed them, then [[zipFate]] on the
-    * survivors. */
-  private def fates(spark: SparkSession, zips: DataFrame, state: PipelineState,
-                    cfg: IngestionConfig): DataFrame = {
-    import spark.implicits._
-    // A2: filename key; trim ≙ ref :96; checksum ≙ the executer's ISBN
-    // contract (MetadataIngestionExecuter.java:56–62). This one zip_name
-    // keys the ZIP in every sink.
-    val named = zips.select(col("path"), col("content"),
-        trim(element_at(split(col("path"), "/"), -1)).as("zip_name"))
-      .withColumn("isbn", regexp_extract(col("zip_name"), "(97[89][0-9]{10})", 1))
-    def seen(keys: DataFrame, key: String, flag: String) =
-      keys.select(col(key)).distinct().withColumn(flag, lit(true))
-    val flagged = named
-      .join(seen(state.raw, "zip_name", "in_raw"), Seq("zip_name"), "left")
-      .join(seen(state.workflow, "isbn", "in_wf"), Seq("isbn"), "left")
-      .join(seen(state.published, "isbn", "in_pub"), Seq("isbn"), "left")
-      .withColumn("code",
-        when(!udfs.isbn13_valid(col("isbn")), ErrorCode.MissingIsbn)
-          .when(col("in_raw"), SkipGate.AlreadyUploaded)
-          .when(col("in_wf"), SkipGate.WorkflowExists)
-          .when(col("in_pub"), SkipGate.IsbnFolderExists))
+  /** A polled ZIP's keys and its verdict before extraction: `code` is
+    * MISSING_ISBN, a gate label, or null for a ZIP [[zipFate]] decides.
+    * `parts` is empty for a path the scan reads once, else the ascending
+    * scan partitions that read it. */
+  private[ingestion] final case class Verdict(zipName: String, isbn: String, code: String,
+                                              parts: Seq[Int] = Nil)
+
+  /** A2: the filename key, as `trim(element_at(split(path, '/'), -1))`
+    * computes it — Spark's `trim` strips U+0020 only (trim ≙ ref :96). */
+  private[ingestion] def zipNameOf(path: String): String = {
+    val name = path.substring(path.lastIndexOf('/') + 1)
+    var (from, until) = (0, name.length)
+    while (from < until && name.charAt(from) == ' ') from += 1
+    while (until > from && name.charAt(until - 1) == ' ') until -= 1
+    name.substring(from, until)
+  }
+
+  private val IsbnPattern = "(97[89][0-9]{10})".r
+
+  /** A2: the ISBN in a zip_name, as `regexp_extract(zip_name,
+    * '(97[89][0-9]{10})', 1)` computes it ("" when there is none). */
+  private[ingestion] def isbnOf(zipName: String): String =
+    IsbnPattern.findFirstIn(zipName).getOrElse("")
+
+  /** The keys each zone already holds among `zipNames` (raw) and `isbns`
+    * (workflow, published): one keys-only lookup, the poll's keys pushed
+    * into the scans. Absent zones are empty local relations, so a poll
+    * against no history runs no job. */
+  private def seenKeys(state: PipelineState, zipNames: Seq[String],
+                       isbns: Seq[String]): Map[String, Set[String]] = {
+    def keys(zone: String, df: DataFrame, key: String, of: Seq[String]) =
+      df.where(col(key).isin(of: _*)).select(lit(zone), col(key))
+    val found =
+      if (isbns.isEmpty) Array.empty[Row]
+      else keys(Zone.Raw, state.raw, "zip_name", zipNames)
+        .union(keys(Zone.Workflow, state.workflow, "isbn", isbns))
+        .union(keys(Zone.Published, state.published, "isbn", isbns))
+        .collect()
+    found.groupBy(_.getString(0)).map { case (z, rows) => z -> rows.map(_.getString(1)).toSet }
+      .withDefaultValue(Set.empty)
+  }
+
+  /** A2, A9–A11 and the in-batch dedup for one poll's scanned files, on
+    * the driver: one [[Verdict]] per path. */
+  private def verdicts(state: PipelineState, files: Seq[GraftScanFiles.ScannedFile])
+      : Map[String, Verdict] = {
+    val readIn = files.groupBy(_.path).map { case (p, fs) => p -> fs.map(_.partition) }
+    val keyed = files.map(_.path).distinct.map { p => val z = zipNameOf(p); (p, z, isbnOf(z)) }
+    // checksum ≙ the executer's ISBN contract (MetadataIngestionExecuter.java:56–62)
+    val valid = keyed.filter(k => udfs.isbn13Valid(k._3))
+    val seen = seenKeys(state, valid.map(_._2).distinct, valid.map(_._3).distinct)
+    val gated = keyed.map { case (p, z, isbn) =>
+      val code =
+        if (!udfs.isbn13Valid(isbn)) ErrorCode.MissingIsbn
+        else if (seen(Zone.Raw)(z)) SkipGate.AlreadyUploaded
+        else if (seen(Zone.Workflow)(isbn)) SkipGate.WorkflowExists
+        else if (seen(Zone.Published)(isbn)) SkipGate.IsbnFolderExists
+        else null
+      p -> Verdict(z, isbn, code)
+    }
     // Intra-batch idempotency: the gates only consult PRIOR state, so two
     // ZIPs carrying the same ISBN in one poll would both pass and emit two
     // workflow rows — the reference's sequential per-ZIP processing gates
     // the second via WORKFLOW_EXISTS (ref :190–198). Keep the first by
-    // zip_name; losers are tagged DUPLICATE_IN_BATCH (not WORKFLOW_EXISTS:
-    // no workflow row exists yet, and the winner may still dead-letter —
-    // see SkipGate) and are not uploaded, so they are re-polled next run
-    // and gated against the then-real state — converging with the
-    // reference even when the winner fails validation this batch. The
-    // (isbn, code) partition holding code = null is exactly the ZIPs
-    // that passed the gates.
-    val rank = row_number().over(
-      Window.partitionBy(col("isbn"), col("code")).orderBy(col("zip_name")))
-    val gated = flagged.withColumn("code",
-      when(col("code").isNull && rank > 1, SkipGate.DuplicateInBatch)
-        .otherwise(col("code")))
+    // (zip_name, path), in Spark's UTF-8 byte order; losers are tagged
+    // DUPLICATE_IN_BATCH (not WORKFLOW_EXISTS: no workflow row exists yet,
+    // and the winner may still dead-letter — see SkipGate) and are not
+    // uploaded, so they are re-polled next run and gated against the
+    // then-real state — converging with the reference even when the
+    // winner fails validation this batch.
+    val byBytes = Ordering.by((s: String) => UTF8String.fromString(s))
+    val losers = gated.filter(_._2.code == null).groupBy(_._2.isbn).values
+      .flatMap(_.sortBy { case (p, v) => (v.zipName, p) }(Ordering.Tuple2(byBytes, byBytes)).tail)
+      .map(_._1).toSet
+    gated.map { case (p, v) =>
+      val parts = readIn(p)
+      p -> v.copy(code = if (losers(p)) SkipGate.DuplicateInBatch else v.code,
+        parts = if (parts.size > 1) parts.distinct.sorted else Nil)
+    }.toMap
+  }
+
+  /** One [[ZipFate]] row per polled ZIP: a typed map over (path, content)
+    * in the scan stage that looks the path up in the broadcast verdicts
+    * and runs [[zipFate]] on the survivors. A path the scan reads more than
+    * once (Spark's file stream source re-reads its whole directory for a
+    * micro-batch holding a file named with `#`) is one ZIP: its first read
+    * — the lowest scan partition, first in it — takes the verdict and the
+    * other reads are DUPLICATE_IN_BATCH. A path without a verdict, or read
+    * outside the partitions the driver saw, fails the task: the verdicts
+    * were decided over a different scan. */
+  private def fates(spark: SparkSession, zips: DataFrame,
+                    decided: Broadcast[Map[String, Verdict]],
+                    cfg: IngestionConfig): DataFrame = {
+    import spark.implicits._
     val genres = cfg.genres.toSet
-    gated.select("path", "content", "zip_name", "isbn", "code")
-      .as[(String, Array[Byte], String, String, String)]
-      .map {
-        case (path, content, zipName, isbn, null) =>
-          zipFate(path, content, zipName, isbn, genres)
-        case (_, _, zipName, isbn, ErrorCode.MissingIsbn) =>
-          ZipFate(zipName, isbn, Fate.Dead, ErrorCode.MissingIsbn,
-            s"no valid ISBN-13 in ZIP filename $zipName", null, null, null)
-        case (_, _, zipName, isbn, gate) =>
-          ZipFate(zipName, isbn, Fate.Skip, gate, null, null, null, null)
+    zips.select("path", "content").as[(String, Array[Byte])]
+      .mapPartitions { rows =>
+        val part = TaskContext.getPartitionId()
+        val reread = mutable.Set[String]()
+        rows.map { case (path, content) =>
+          val v = decided.value.getOrElse(path,
+            throw new IllegalStateException(s"polled path without a verdict: $path"))
+          val first = v.parts.isEmpty || {
+            if (!v.parts.contains(part)) throw new IllegalStateException(
+              s"polled path read outside its scan partitions ${v.parts}: $path")
+            part == v.parts.head && reread.add(path)
+          }
+          v.code match {
+            case _ if !first =>
+              ZipFate(v.zipName, v.isbn, Fate.Skip, SkipGate.DuplicateInBatch,
+                null, null, null, null)
+            case null => zipFate(path, content, v.zipName, v.isbn, genres)
+            case ErrorCode.MissingIsbn =>
+              ZipFate(v.zipName, v.isbn, Fate.Dead, ErrorCode.MissingIsbn,
+                s"no valid ISBN-13 in ZIP filename ${v.zipName}", null, null, null)
+            case gate => ZipFate(v.zipName, v.isbn, Fate.Skip, gate, null, null, null, null)
+          }
+        }
       }
       .toDF()
   }
@@ -256,12 +349,16 @@ object MetadataPipeline {
   }
 
   /** The pure transform: one poll's ZIPs + current state → sink deltas.
-    * `ingestTs` is injectable (the reference stamps `new Date()` at
-    * ref :222; tests and the oracle pin it). Lazy: each output re-runs
-    * the pass when evaluated. */
+    * `zips` is a `binaryFile` scan ([[readZips]], or a stream's micro-batch
+    * frame). `ingestTs` is injectable (the reference stamps `new Date()` at
+    * ref :222; tests and the oracle pin it). The gates are decided when
+    * this is called; the outputs are lazy, and each re-runs the kernel
+    * when evaluated. */
   def process(spark: SparkSession, zips: DataFrame, state: PipelineState,
-              cfg: IngestionConfig, ingestTs: Timestamp): PipelineOutput =
-    outputOf(fates(spark, zips, state, cfg), cfg, ingestTs)
+              cfg: IngestionConfig, ingestTs: Timestamp): PipelineOutput = {
+    val decided = spark.sparkContext.broadcast(verdicts(state, GraftScanFiles.of(zips)))
+    outputOf(fates(spark, zips, decided, cfg), cfg, ingestTs)
+  }
 
   /** One batch pass (A20 ≙ the JMX manual trigger / CLI one-shot): read
     * state, process, append sinks. Dead letters are appended idempotently
@@ -272,36 +369,70 @@ object MetadataPipeline {
                ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput =
     ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
 
-  /** The sink path both modes share: read gate state, then list the poll
-    * (`zips` is by-name and bound once, after the state is read), compute
-    * its fates in one pass, cut them once and append raw, workflow and the
-    * dead letters not already recorded for the same (zip_name,
-    * error_code) from the cut. The returned output is the lazy
-    * [[process]] over the same poll and state (the cut's blocks are
-    * released before it returns), with the counts observed on the pass. */
+  /** The sink path both modes share: read gate state, then take the poll's
+    * files from its scan (`zips` is by-name and bound once, after the state
+    * is read), decide their verdicts, compute the fates in one pass, cut
+    * them once and append from the cut: raw then workflow on this thread,
+    * and beside them the dead letters not already recorded for the same
+    * (zip_name, error_code). The returned output is lazy over the same
+    * verdicts (the cut's blocks are released before it returns), with the
+    * counts observed on the pass. */
   private def ingestPoll(spark: SparkSession, cfg: IngestionConfig,
                          ingestTs: Timestamp)(zips: => DataFrame): PipelineOutput = {
     val state = readState(spark, cfg.warehouseDir)
     val polled = zips
+    val files = GraftScanFiles.of(polled)
+    val decided = spark.sparkContext.broadcast(verdicts(state, files))
     val fate = col("fate")
-    val observed = fates(spark, polled, state, cfg).observe(PollMetrics,
+    val observed = fates(spark, polled, decided, cfg).observe(PollMetrics,
       count(when(fate === Fate.Ok, 1)).as(Counts.Workflow),
       count(when(fate === Fate.Dead, 1)).as(Counts.DeadLetter) +:
         Counts.Gates.map(g => count(when(col("code") === g, 1)).as(g)): _*)
     val cut = Materialize.cut(observed)
     try {
-      val now = outputOf(cut.df, cfg, ingestTs)
+      val sinkParts = math.max(1, math.ceil(files.map(_.length).sum.toDouble /
+        GraftScanFiles.advisoryPartitionBytes(spark)).toInt)
+      val now = outputOf(cut.df.coalesce(sinkParts), cfg, ingestTs)
       val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
-      append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
-      append(now.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
-        s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
-      append(now.deadLetter.join(priorDl.select("zip_name", "error_code"),
+      alongside(spark)(append(now.deadLetter.join(priorDl.select("zip_name", "error_code"),
           Seq("zip_name", "error_code"), "left_anti"),
-        s"${cfg.warehouseDir}/${Zone.DeadLetter}")
-    } finally cut.release()
+        s"${cfg.warehouseDir}/${Zone.DeadLetter}")) {
+        append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
+        append(now.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
+          s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
+      }
+    } finally {
+      cut.release()
+      // the returned outputs run the map again: free the executors' copies
+      // only, the driver keeps the value
+      decided.unpersist()
+    }
     val row = observed.queryExecution.observedMetrics(PollMetrics)
-    process(spark, polled, state, cfg, ingestTs)
+    outputOf(fates(spark, polled, decided, cfg), cfg, ingestTs)
       .copy(counts = row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap)
+  }
+
+  /** Runs the dead-letter appends beside a poll's raw → workflow chain. */
+  private lazy val sideWriter = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-poll-side-writer")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Runs `side` on another thread, with this thread's Spark session and
+    * job properties, while `main` runs here, and returns only when both
+    * have finished. `main`'s error is rethrown with `side`'s suppressed;
+    * otherwise `side`'s error is rethrown. */
+  private[ingestion] def alongside[T](spark: SparkSession)(side: => Unit)(main: => T): T = {
+    val pending = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], sideWriter)(side)
+    def joined(): Option[Throwable] =
+      try { pending.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+    val result =
+      try main
+      catch { case e: Throwable => joined().foreach(e.addSuppressed); throw e }
+    joined().foreach(e => throw e)
+    result
   }
 
   /** B5: append parquet write, optionally partitioned ({year} layout ≙

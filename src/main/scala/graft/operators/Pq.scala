@@ -27,8 +27,8 @@ final case class PqConfig(m: Int = 16, k: Int = 16, dim: Int = 64, iters: Int = 
   * any raw vector.
   *
   * Engine shape (r17 optimization — the relational explode ⋈ codebook
-  * pipelines were collapsed into codegen kernels; the pre-r17 forms are kept
-  * as [[exploded]]/[[assign]] for PqSpec's independent cross-check):
+  * pipelines were collapsed into codegen kernels; the pre-r17 forms live in
+  * PqSpec as its independent cross-check):
   *  - training = `iters` Lloyd rounds, all subspaces at once: per round ONE
   *    corpus projection through [[graft.functions.VecPqCodes]] (the codebook
   *    rides along as a primitive `double[][][]` codegen reference object —
@@ -76,29 +76,6 @@ object Pq {
     while (i < n) { s += a(i) * b(i); i += 1 }
     s
   }
-
-  /** (vec_id, e: array<double>) → exploded (vec_id, m, si, x). Kept as the
-    * relational reference form PqSpec cross-checks the kernels against. */
-  private[operators] def exploded(vecs: DataFrame, cfg: PqConfig): DataFrame =
-    vecs.select(col("vec_id"), posexplode(col("e")).as(Seq("gi", "x")))
-      .select(col("vec_id"),
-        expr(s"gi div ${cfg.subDim}").cast("long").as("m"),
-        expr(s"gi % ${cfg.subDim}").cast("long").as("si"), col("x"))
-
-  /** argmin-L2 codes per (vector, subspace) against `cents(m, cent_id, si,
-    * c)`. Deterministic: d is round-6 and the struct-min tie-breaks on
-    * cent_id ascending. The RELATIONAL reference implementation — the
-    * production paths run [[graft.functions.VecPqCodes]], and PqSpec pins
-    * kernel ≡ this on the fixture corpus. */
-  private[operators] def assign(ex: DataFrame, cents: DataFrame): DataFrame =
-    ex.join(broadcast(cents), Seq("m", "si"))
-      .groupBy(col("vec_id"), col("m"), col("cent_id"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d"))
-      .select(col("vec_id"), col("m"),
-        struct(round6(col("d")).as("d"), col("cent_id").as("cid")).as("dc"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(col("dc")).as("best"))
-      .select(col("vec_id"), col("m"), col("best.cid").as("code"))
 
   /** Collect a codebook frame (m, cent_id, si, c) into the `[m][cent][si]`
     * driver matrix the kernels bake in. Fail-loud on gaps: every

@@ -65,27 +65,11 @@ object UnigramLm {
       .filter(length(col("word")) >= 1 && length(col("word")) <= maxWordLen)
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
 
-  /** All (word, f, pos, piece) substring occurrences with
-    * 1 ≤ len(piece) ≤ maxPieceLen — SQL substring semantics (code
-    * points), so the DuckDB oracle segments identically. pos is 0-based.
-    * Kept as the RELATIONAL cross-check baseline (UnigramLmSpec pins the
-    * r18 typed pieces against it); the hot path uses [[cpPieces]] — the
-    * HOF transform-under-explode here is CodegenFallback and executed
-    * once per consumer (the LangId gramsOf lesson). */
-  def occurrences(words: DataFrame, maxPieceLen: Int): DataFrame =
-    words.select(col("word"), col("f"),
-        explode(expr(
-          s"""flatten(transform(sequence(0, length(word) - 1), p ->
-             |  transform(sequence(1, least($maxPieceLen, length(word) - p)), l ->
-             |    struct(p AS pos, substring(word, p + 1, l) AS piece))))"""
-            .stripMargin)).as("o"))
-      .select(col("word"), col("f"), col("o.pos").as("pos"),
-        col("o.piece").as("piece"))
-
   /** Code-point-faithful (pos, piece) substrings of one word — exactly
     * `substring(word, p+1, l)` over code points (the zh fixture exercises
     * multibyte), emitted pos-ascending then length-ascending like the
-    * relational [[occurrences]] explode. */
+    * relational `occurrences` explode UnigramLmSpec keeps as its
+    * cross-check. */
   private[operators] def cpPieces(word: String, maxPieceLen: Int)
       : IndexedSeq[(Int, String)] = {
     if (word == null) return IndexedSeq.empty
@@ -119,8 +103,8 @@ object UnigramLm {
     * the occurrence fan-out (ProfQ: ~50 jobs of KB-sized stages for
     * q_text_tokens_viterbi); positions with Σw = 0 cannot occur (single
     * chars clamp ≥ 1 and cover every position) but are skipped exactly
-    * like the relational NULL-share sum. The relational [[occurrences]]
-    * stays as UnigramLmSpec's cross-check baseline. */
+    * like the relational NULL-share sum. The relational `occurrences`
+    * explode lives in UnigramLmSpec as its cross-check baseline. */
   def train(docs: DataFrame, maxPieceLen: Int, minCount: Long,
             emRounds: Int, maxWordLen: Int = 30): DataFrame = {
     require(maxPieceLen >= 1, s"maxPieceLen ($maxPieceLen) must be >= 1")

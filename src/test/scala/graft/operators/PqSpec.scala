@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
@@ -20,10 +20,35 @@ class PqSpec extends SparkSpecBase {
 
   private lazy val cb = Pq.train(vecs, cfg).cache()
 
+  private def round6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
+
+  /** (vec_id, e: array<double>) → exploded (vec_id, m, si, x): the pre-r17
+    * relational form, the reference the kernels are cross-checked against. */
+  private def exploded(vecs: DataFrame, cfg: PqConfig): DataFrame =
+    vecs.select(col("vec_id"), posexplode(col("e")).as(Seq("gi", "x")))
+      .select(col("vec_id"),
+        expr(s"gi div ${cfg.subDim}").cast("long").as("m"),
+        expr(s"gi % ${cfg.subDim}").cast("long").as("si"), col("x"))
+
+  /** The relational Pq.assign: argmin-L2 codes per (vector, subspace)
+    * against `cents(m, cent_id, si, c)`, an explode ⋈ broadcast codebook
+    * and two aggregates. Deterministic: d is round-6 and the struct-min
+    * tie-breaks on cent_id ascending. Production runs
+    * [[graft.functions.VecPqCodes]]; the tests below pin kernel ≡ this. */
+  private def assign(ex: DataFrame, cents: DataFrame): DataFrame =
+    ex.join(broadcast(cents), Seq("m", "si"))
+      .groupBy(col("vec_id"), col("m"), col("cent_id"))
+      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d"))
+      .select(col("vec_id"), col("m"),
+        struct(round6(col("d")).as("d"), col("cent_id").as("cid")).as("dc"))
+      .groupBy(col("vec_id"), col("m"))
+      .agg(min(col("dc")).as("best"))
+      .select(col("vec_id"), col("m"), col("best.cid").as("code"))
+
   /** Mean squared quantization error of `codes` under codebook `cents`. */
   private def mse(cents: DataFrame): Double = {
-    val ex = Pq.exploded(vecs, cfg)
-    val codes = Pq.assign(ex, cents)
+    val ex = exploded(vecs, cfg)
+    val codes = assign(ex, cents)
     codes.join(ex, Seq("vec_id", "m"))
       .join(broadcast(cents.withColumnRenamed("cent_id", "code")),
         Seq("m", "si", "code"))
@@ -41,7 +66,7 @@ class PqSpec extends SparkSpecBase {
   }
 
   test("training reduces quantization error (measured)") {
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val seed = ex.filter(col("vec_id") < cfg.k)
       .select(col("m"), col("vec_id").as("cent_id"), col("si"), col("x").as("c"))
     val e0 = mse(seed)
@@ -63,7 +88,7 @@ class PqSpec extends SparkSpecBase {
     // explode ⋈ broadcast-codebook ⋈ two-aggregate pipeline. Exact row
     // equality, both directions.
     val kernel = Pq.encode(vecs, cfg, cb)
-    val relational = Pq.assign(Pq.exploded(vecs, cfg), cb)
+    val relational = assign(exploded(vecs, cfg), cb)
     assert(kernel.except(relational).isEmpty &&
       relational.except(kernel).isEmpty,
       "vec_pq_codes diverged from the relational assign")
@@ -82,7 +107,7 @@ class PqSpec extends SparkSpecBase {
     val adc50 = Pq.adcTopK(vecs, col("vec_id") < 10, 50, cfg, cb)
       .select(col("qid"), col("vec_id"))
     // exact L2 top-3 per query over the full corpus
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qex = ex.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     val d = qex.join(ex.withColumnRenamed("vec_id", "cand"), Seq("m", "si"))
@@ -114,7 +139,7 @@ class PqSpec extends SparkSpecBase {
     // construction, pinned as equality below. The shortlist size is the
     // recall-vs-fetch-cost dial, measured at 10 and 50.
     val isQ = col("vec_id") < 10
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qex = ex.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     val gold = qex.join(ex.withColumnRenamed("vec_id", "cand"), Seq("m", "si"))
@@ -162,7 +187,7 @@ class PqSpec extends SparkSpecBase {
       .join(probes, assigned("cell") === probes("qcell") &&
         probes("qid") =!= assigned("vec_id"))
       .select(col("qid"), col("vec_id").as("cand_id"))
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qx = ex.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     val dAll = qx.join(ex.withColumnRenamed("vec_id", "cand_id"), Seq("m", "si"))
@@ -208,7 +233,7 @@ class PqSpec extends SparkSpecBase {
       .join(probes, assigned("cell") === probes("qcell") &&
         probes("qid") =!= assigned("vec_id"))
       .select(col("qid"), col("vec_id").as("cand_id"))
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qx = ex.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     val dAll = qx.join(ex.withColumnRenamed("vec_id", "cand_id"), Seq("m", "si"))
@@ -272,7 +297,7 @@ class PqSpec extends SparkSpecBase {
       .join(probes, assigned("cell") === probes("qcell") &&
         probes("qid") =!= assigned("vec_id"))
       .select(col("qid"), col("vec_id").as("cand_id"))
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qex = ex.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     val d = qex.join(ex.withColumnRenamed("vec_id", "cand_id"), Seq("m", "si"))
@@ -447,7 +472,7 @@ class PqSpec extends SparkSpecBase {
       .select(col("vec_id").as("cent_id"), col("e").as("ce"))
     val index = Pq.encodeInto(vecs, cfg, cb, coarse)
     val queries = vecs.filter(col("vec_id") < 10)
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qex = ex.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     def measure(mod: Int, floorAtNprobe2: Double): Unit = {
@@ -515,7 +540,7 @@ class PqSpec extends SparkSpecBase {
       .select(col("vec_id").as("cent_id"), col("e").as("ce"))
     val index = Pq.encodeInto(vecs, cfg, cb, coarse)
     val queries = vecs.filter(col("vec_id") < 10)
-    val ex = Pq.exploded(vecs, cfg)
+    val ex = exploded(vecs, cfg)
     val qex = ex.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("m"), col("si"), col("x").as("qx"))
     val allowed = vecs.filter(col("vec_id") % 97 === 0).select(col("vec_id"))

@@ -27,7 +27,21 @@ import org.apache.spark.sql.functions._
   *    renormalized (DIV 1e6, chars ≥ 1): a = 6, ab = 1, b = 4
   */
 class UnigramLmSpec extends SparkSpecBase {
-  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.{DataFrame, Row}
+
+  /** All (word, f, pos, piece) substring occurrences with
+    * 1 ≤ len(piece) ≤ maxPieceLen, SQL substring semantics (code points)
+    * as the DuckDB oracle segments; pos is 0-based. The relational
+    * baseline the typed `UnigramLm.cpPieces` replaced on the hot path. */
+  private def occurrences(words: DataFrame, maxPieceLen: Int): DataFrame =
+    words.select(col("word"), col("f"),
+        explode(expr(
+          s"""flatten(transform(sequence(0, length(word) - 1), p ->
+             |  transform(sequence(1, least($maxPieceLen, length(word) - p)), l ->
+             |    struct(p AS pos, substring(word, p + 1, l) AS piece))))"""
+            .stripMargin)).as("o"))
+      .select(col("word"), col("f"), col("o.pos").as("pos"),
+        col("o.piece").as("piece"))
 
   private def plantedDocs = {
     val s = spark
@@ -113,7 +127,7 @@ class UnigramLmSpec extends SparkSpecBase {
     // now 1e6x tighter than the pre-renormalization bound; (2) every
     // character of the corpus survives training (coverage).
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val occ = UnigramLm.occurrences(UnigramLm.wordFreq(docs, 30), 4)
+    val occ = occurrences(UnigramLm.wordFreq(docs, 30), 4)
     val totalMass = occ.agg(sum(col("f"))).collect()(0).getLong(0)
     val trained = UnigramLm.train(docs, maxPieceLen = 4, minCount = 500L,
       emRounds = 2)
