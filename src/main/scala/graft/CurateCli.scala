@@ -52,7 +52,9 @@ import graft.operators.{ExactDedup, MinHashConfig, NearDup, TextCuration}
   */
 object CurateCli {
 
-  final case class Config(
+  /** The recipe's fixed settings; `_graft_run.json` fingerprints them by
+    * this value's hash. */
+  private final case class Config(
       minhash: MinHashConfig = MinHashConfig(numHashes = 12, bands = 6,
         maxBucket = 1000, jaccardConfirm = 0.8),
       contMaxDf: Int = 1000, contMinPpm: Long = 900000L,
@@ -60,6 +62,8 @@ object CurateCli {
       boilerMaxPpm: Long = 500000L,
       samplePpmPerChar: Long = 2500L,
       packGroups: Int = 8, packBudget: Long = 512L)
+
+  private val cfg = Config()
 
   /** Stage checkpoint: build → parquet → read back (lineage cut). A
     * completed stage (its `_SUCCESS` exists) is NOT rebuilt — restart
@@ -83,8 +87,7 @@ object CurateCli {
   /** The full recipe; returns per-stage surviving-row counts (stage name
     * → rows), in pipeline order under keys that sort in pipeline order. */
   def run(spark: SparkSession, docsParquet: String, outDir: String,
-          priorOutDir: Option[String] = None,
-          cfg: Config = Config()): Seq[(String, Long)] = {
+          priorOutDir: Option[String] = None): Seq[(String, Long)] = {
     val out = new File(outDir)
     out.mkdirs()
     // stage checkpoints are keyed by outDir alone, so re-running against

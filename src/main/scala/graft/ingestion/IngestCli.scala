@@ -30,9 +30,8 @@ object IngestCli {
         val n = MetadataPipeline.runBatch(spark, cfg).counts
         val C = MetadataPipeline.Counts
         println(s"[ingest] workflow rows appended: ${n(C.Workflow)}")
-        // the poll's dead letters, not the rows appended: a dead letter
-        // already in the zone is found again but not re-appended
-        println(s"[ingest] dead letters found in this poll: ${n(C.DeadLetter)}")
+        println(s"[ingest] dead-letter rows appended: ${n(C.DeadLetterAppended)} " +
+          s"(dead letters in this poll: ${n(C.DeadLetter)})")
         println(s"[ingest] skipped by gates: ${C.Gates.map(n).sum} " +
           C.Gates.map(g => s"$g=${n(g)}").mkString("(", ", ", ")"))
     }

@@ -1,13 +1,15 @@
 package graft.ingestion
 
+import java.io.FileNotFoundException
 import java.sql.Timestamp
 import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, GraftScanFiles, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftScanFiles, Row, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -36,7 +38,8 @@ import model._
   *    reference's if-chain per ZIP — the first gate that matches wins. A
   *    key repeated in history never duplicates a polled ZIP. Gates run
   *    BEFORE any extraction — nothing is exploded for a known ISBN (ref
-  *    :99);
+  *    :99). The same lookup returns the dead letters already recorded
+  *    under the poll's zip_names (see "Sink path");
   *  - intra-batch dedup, on the driver too: per ISBN, the first ZIP by
   *    (zip_name, path) among those that passed the gates is kept, the rest
   *    are DUPLICATE_IN_BATCH;
@@ -52,9 +55,15 @@ import model._
   * Sink path ([[ingestPoll]]): the fates frame is materialized ONCE with
   * `Materialize.cut` and all three appends read that cut, coalesced to
   * about one advisory partition of polled bytes, so a poll scans each ZIP
-  * once and writes one file per sink for a small poll. The dead-letter
-  * append runs beside the raw → workflow chain; dead letters never gate,
-  * so a crash still leaves the gates only raw, or raw + workflow. Not
+  * once and writes one file per sink for a small poll. A failed ZIP is
+  * retried on every poll (see "Transactionality"), so a poll meets its old
+  * dead letters as it meets its old uploads: the gates' keys lookup also
+  * returns the (zip_name, error_code) pairs the dead-letter zone holds for
+  * the poll's zip_names, and only dead letters outside that set are
+  * appended (and counted as appended). No other read of that zone runs.
+  * The dead-letter append runs beside the raw → workflow chain; dead
+  * letters never gate, so a crash still leaves the gates only raw, or
+  * raw + workflow. Not
   * `persist()`: the raw append's `recacheByPath` refreshes any CACHED plan
   * reading the raw zone, so a persisted fates frame would be recomputed
   * against the just-written raw zone and gate every fresh ZIP
@@ -69,12 +78,13 @@ import model._
   * re-attempted next run, matching the reference's retry-every-poll
   * behavior.
   *
-  * Scale posture (100 TB): a poll's keys are few, so the gates never
-  * shuffle: the lookup pushes the poll's keys into the zone scans and
-  * returns only matching keys, and the verdict map is as large as the
-  * file listing the driver already holds. What still grows with history
-  * is the zone listing and scan itself (one file per zone per poll; ROADMAP
-  * item 2's gate index and compaction). The kernel is a typed map in the
+  * Scale posture (100 TB): a poll's keys are few, so neither the gates nor
+  * the dead-letter check shuffle: the one lookup pushes the poll's keys
+  * into the scans of the four zones and returns only matching keys, and
+  * the verdict map and recorded dead-letter set are as large as the file
+  * listing the driver already holds. What still grows with history is the
+  * zone listing and scan itself (one file per zone per poll; ROADMAP item
+  * 2's gate index and compaction). The kernel is a typed map in the
   * scan stage (no shuffle of records); per-poll counts are
   * `Dataset.observe` metrics on the pass.
   */
@@ -92,10 +102,12 @@ object MetadataPipeline {
       skipped: DataFrame, counts: Map[String, Long] = Map.empty)
 
   /** Keys of [[PipelineOutput.counts]]: ok fates (= workflow rows
-    * appended), dead letters of the poll, and skips per gate label. */
+    * appended), dead letters of the poll, the dead-letter rows appended
+    * (the ones not recorded yet), and skips per gate label. */
   object Counts {
     val Workflow = "workflow"
     val DeadLetter = "dead_letter"
+    val DeadLetterAppended = "dead_letter_appended"
     val Gates: Seq[String] = Seq(SkipGate.AlreadyUploaded, SkipGate.WorkflowExists,
       SkipGate.IsbnFolderExists, SkipGate.DuplicateInBatch)
   }
@@ -140,11 +152,20 @@ object MetadataPipeline {
   def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
+  /** Whether `path` is a directory of the file system its scheme names
+    * (`file:`, `hdfs:`, `s3a:`, or the default one for a bare path). A
+    * zone is the directory its appends write and the polled input is a
+    * directory, so nothing there, or a plain file, holds no rows. */
+  private def isDir(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isDirectory
+    catch { case _: FileNotFoundException => false }
+  }
+
   private def zone(spark: SparkSession, dir: String, name: String,
                    schema: StructType): DataFrame = {
     val path = s"$dir/$name"
-    if (new java.io.File(path).exists())
-      spark.read.schema(schema).parquet(path)
+    if (isDir(spark, path)) spark.read.schema(schema).parquet(path)
     else emptyDf(spark, schema)
   }
 
@@ -158,7 +179,7 @@ object MetadataPipeline {
   /** A1/B4: batch scan of the polled directory. A missing directory is an
     * empty poll (the reference's executer finds no files), not an error. */
   def readZips(spark: SparkSession, inputDir: String): DataFrame =
-    if (!new java.io.File(inputDir).exists()) emptyDf(spark, binaryFileSchema)
+    if (!isDir(spark, inputDir)) emptyDf(spark, binaryFileSchema)
     else spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.zip")
       .load(inputDir)
@@ -216,39 +237,42 @@ object MetadataPipeline {
   private[ingestion] def isbnOf(zipName: String): String =
     IsbnPattern.findFirstIn(zipName).getOrElse("")
 
-  /** The keys each zone already holds among `zipNames` (raw) and `isbns`
-    * (workflow, published): one keys-only lookup, the poll's keys pushed
-    * into the scans. Absent zones are empty local relations, so a poll
-    * against no history runs no job. */
-  private def seenKeys(state: PipelineState, zipNames: Seq[String],
-                       isbns: Seq[String]): Map[String, Set[String]] = {
-    def keys(zone: String, df: DataFrame, key: String, of: Seq[String]) =
-      df.where(col(key).isin(of: _*)).select(lit(zone), col(key))
-    val found =
-      if (isbns.isEmpty) Array.empty[Row]
-      else keys(Zone.Raw, state.raw, "zip_name", zipNames)
-        .union(keys(Zone.Workflow, state.workflow, "isbn", isbns))
-        .union(keys(Zone.Published, state.published, "isbn", isbns))
-        .collect()
-    found.groupBy(_.getString(0)).map { case (z, rows) => z -> rows.map(_.getString(1)).toSet }
-      .withDefaultValue(Set.empty)
+  /** The (zone, key, error_code) triples the zones already hold among
+    * `zipNames` (raw, and the dead letters with their error_code) and
+    * `isbns` (workflow, published; error_code null): one keys-only lookup,
+    * the poll's keys pushed into the scans. Absent zones are empty local
+    * relations, so a poll against no history runs no job. */
+  private def seenKeys(state: PipelineState, deadLetters: DataFrame, zipNames: Seq[String],
+                       isbns: Seq[String]): Set[(String, String, String)] = {
+    def keys(zone: String, df: DataFrame, key: String, of: Seq[String],
+             code: Column = lit(null).cast(StringType)) =
+      df.where(col(key).isin(of: _*)).select(lit(zone), col(key), code)
+    if (zipNames.isEmpty) Set.empty
+    else keys(Zone.Raw, state.raw, "zip_name", zipNames)
+      .union(keys(Zone.Workflow, state.workflow, "isbn", isbns))
+      .union(keys(Zone.Published, state.published, "isbn", isbns))
+      .union(keys(Zone.DeadLetter, deadLetters, "zip_name", zipNames, col("error_code")))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
   }
 
   /** A2, A9–A11 and the in-batch dedup for one poll's scanned files, on
-    * the driver: one [[Verdict]] per path. */
-  private def verdicts(state: PipelineState, files: Seq[GraftScanFiles.ScannedFile])
-      : Map[String, Verdict] = {
+    * the driver: one [[Verdict]] per path, and the (zip_name, error_code)
+    * pairs `deadLetters` already holds among the poll's zip_names. */
+  private def verdicts(state: PipelineState, deadLetters: DataFrame,
+                       files: Seq[GraftScanFiles.ScannedFile])
+      : (Map[String, Verdict], Set[(String, String)]) = {
     val readIn = files.groupBy(_.path).map { case (p, fs) => p -> fs.map(_.partition) }
     val keyed = files.map(_.path).distinct.map { p => val z = zipNameOf(p); (p, z, isbnOf(z)) }
     // checksum ≙ the executer's ISBN contract (MetadataIngestionExecuter.java:56–62)
     val valid = keyed.filter(k => udfs.isbn13Valid(k._3))
-    val seen = seenKeys(state, valid.map(_._2).distinct, valid.map(_._3).distinct)
+    val seen = seenKeys(state, deadLetters, keyed.map(_._2).distinct, valid.map(_._3).distinct)
+    def holds(zone: String, key: String) = seen((zone, key, null))
     val gated = keyed.map { case (p, z, isbn) =>
       val code =
         if (!udfs.isbn13Valid(isbn)) ErrorCode.MissingIsbn
-        else if (seen(Zone.Raw)(z)) SkipGate.AlreadyUploaded
-        else if (seen(Zone.Workflow)(isbn)) SkipGate.WorkflowExists
-        else if (seen(Zone.Published)(isbn)) SkipGate.IsbnFolderExists
+        else if (holds(Zone.Raw, z)) SkipGate.AlreadyUploaded
+        else if (holds(Zone.Workflow, isbn)) SkipGate.WorkflowExists
+        else if (holds(Zone.Published, isbn)) SkipGate.IsbnFolderExists
         else null
       p -> Verdict(z, isbn, code)
     }
@@ -266,22 +290,32 @@ object MetadataPipeline {
     val losers = gated.filter(_._2.code == null).groupBy(_._2.isbn).values
       .flatMap(_.sortBy { case (p, v) => (v.zipName, p) }(Ordering.Tuple2(byBytes, byBytes)).tail)
       .map(_._1).toSet
-    gated.map { case (p, v) =>
+    val decided = gated.map { case (p, v) =>
       val parts = readIn(p)
       p -> v.copy(code = if (losers(p)) SkipGate.DuplicateInBatch else v.code,
         parts = if (parts.size > 1) parts.distinct.sorted else Nil)
     }.toMap
+    (decided, seen.collect { case (Zone.DeadLetter, z, c) => (z, c) })
   }
+
+  /** Whether a dead letter, keyed by its `zip_name` and the error code in
+    * `code`, is not among the `recorded` (zip_name, error_code) pairs. */
+  private def unrecorded(recorded: Set[(String, String)], code: Column): Column =
+    if (recorded.isEmpty) lit(true)
+    else !struct(col("zip_name"), code)
+      .isin(recorded.toSeq.map { case (z, c) => struct(lit(z), lit(c)) }: _*)
 
   /** One [[ZipFate]] row per polled ZIP: a typed map over (path, content)
     * in the scan stage that looks the path up in the broadcast verdicts
     * and runs [[zipFate]] on the survivors. A path the scan reads more than
-    * once (Spark's file stream source re-reads its whole directory for a
-    * micro-batch holding a file named with `#`) is one ZIP: its first read
-    * — the lowest scan partition, first in it — takes the verdict and the
-    * other reads are DUPLICATE_IN_BATCH. A path without a verdict, or read
-    * outside the partitions the driver saw, fails the task: the verdicts
-    * were decided over a different scan. */
+    * once is one ZIP: its first read — the lowest scan partition, first in
+    * it — takes the verdict and the other reads are DUPLICATE_IN_BATCH.
+    * Spark's file stream source does that: in a micro-batch of more than
+    * one file where some file name holds a glob metacharacter (`[`, `?`,
+    * `{`), it reads each of the batch's other files twice (never a file
+    * outside the batch). A path without a verdict, or read outside the
+    * partitions the driver saw, fails the task: the verdicts were decided
+    * over a different scan. */
   private def fates(spark: SparkSession, zips: DataFrame,
                     decided: Broadcast[Map[String, Verdict]],
                     cfg: IngestionConfig): DataFrame = {
@@ -356,13 +390,14 @@ object MetadataPipeline {
     * when evaluated. */
   def process(spark: SparkSession, zips: DataFrame, state: PipelineState,
               cfg: IngestionConfig, ingestTs: Timestamp): PipelineOutput = {
-    val decided = spark.sparkContext.broadcast(verdicts(state, GraftScanFiles.of(zips)))
-    outputOf(fates(spark, zips, decided, cfg), cfg, ingestTs)
+    val (decided, _) =
+      verdicts(state, emptyDf(spark, deadLetterSchema), GraftScanFiles.of(zips))
+    outputOf(fates(spark, zips, spark.sparkContext.broadcast(decided), cfg), cfg, ingestTs)
   }
 
   /** One batch pass (A20 ≙ the JMX manual trigger / CLI one-shot): read
-    * state, process, append sinks. Dead letters are appended idempotently
-    * (anti-join on (zip_name, error_code) vs the existing table) so a
+    * state, process, append sinks. Only dead letters whose (zip_name,
+    * error_code) the dead-letter zone does not hold yet are appended, so a
     * re-run of the same input is a no-op across ALL sinks — the A9–A11
     * invariant run(run(x)) == run(x). */
   def runBatch(spark: SparkSession, cfg: IngestionConfig,
@@ -371,31 +406,33 @@ object MetadataPipeline {
 
   /** The sink path both modes share: read gate state, then take the poll's
     * files from its scan (`zips` is by-name and bound once, after the state
-    * is read), decide their verdicts, compute the fates in one pass, cut
-    * them once and append from the cut: raw then workflow on this thread,
-    * and beside them the dead letters not already recorded for the same
-    * (zip_name, error_code). The returned output is lazy over the same
-    * verdicts (the cut's blocks are released before it returns), with the
-    * counts observed on the pass. */
+    * is read), decide their verdicts and look up the dead letters already
+    * recorded under the poll's zip_names (one lookup), compute the fates in
+    * one pass, cut them once and append from the cut: raw then workflow on
+    * this thread, and beside them the dead letters not recorded yet. The
+    * returned output is lazy over the same verdicts (the cut's blocks are
+    * released before it returns), with the counts observed on the pass. */
   private def ingestPoll(spark: SparkSession, cfg: IngestionConfig,
                          ingestTs: Timestamp)(zips: => DataFrame): PipelineOutput = {
     val state = readState(spark, cfg.warehouseDir)
+    val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
     val polled = zips
     val files = GraftScanFiles.of(polled)
-    val decided = spark.sparkContext.broadcast(verdicts(state, files))
+    val (verdict, recorded) = verdicts(state, priorDl, files)
+    val decided = spark.sparkContext.broadcast(verdict)
     val fate = col("fate")
+    val dead = fate === Fate.Dead
     val observed = fates(spark, polled, decided, cfg).observe(PollMetrics,
       count(when(fate === Fate.Ok, 1)).as(Counts.Workflow),
-      count(when(fate === Fate.Dead, 1)).as(Counts.DeadLetter) +:
+      Seq(count(when(dead, 1)).as(Counts.DeadLetter),
+        count(when(dead && unrecorded(recorded, col("code")), 1)).as(Counts.DeadLetterAppended)) ++
         Counts.Gates.map(g => count(when(col("code") === g, 1)).as(g)): _*)
     val cut = Materialize.cut(observed)
     try {
       val sinkParts = math.max(1, math.ceil(files.map(_.length).sum.toDouble /
         GraftScanFiles.advisoryPartitionBytes(spark)).toInt)
       val now = outputOf(cut.df.coalesce(sinkParts), cfg, ingestTs)
-      val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
-      alongside(spark)(append(now.deadLetter.join(priorDl.select("zip_name", "error_code"),
-          Seq("zip_name", "error_code"), "left_anti"),
+      alongside(spark)(append(now.deadLetter.where(unrecorded(recorded, col("error_code"))),
         s"${cfg.warehouseDir}/${Zone.DeadLetter}")) {
         append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
         append(now.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),

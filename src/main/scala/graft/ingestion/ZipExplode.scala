@@ -34,10 +34,11 @@ object ZipExplode {
   }
 
   /** Pure per-ZIP explode — also the JVM-oracle reimplementation used by the
-    * property tests (SURVEY.md §5.2-2). */
+    * property tests (SURVEY.md §5.2-2). Rows are keyed by the pipeline's
+    * A2 keys ([[MetadataPipeline.zipNameOf]], [[MetadataPipeline.isbnOf]]). */
   def explodeOne(path: String, content: Array[Byte]): Seq[ZipEntryRow] = {
-    val zipName = FilenameUtils.getName(path)
-    val isbn = extractIsbn(zipName).getOrElse("")
+    val zipName = MetadataPipeline.zipNameOf(path)
+    val isbn = MetadataPipeline.isbnOf(zipName)
     def row(entry: String, key: String, bytes: Array[Byte], err: Option[String]) =
       ZipEntryRow(path, zipName, isbn, entry, key, bytes, err)
     try {
@@ -59,10 +60,4 @@ object ZipExplode {
         Seq(row("", "", Array.emptyByteArray, Some(ErrorCode.ExtractZip)))
     }
   }
-
-  /** A2: ISBN-13 from the ZIP filename (reference delegates to the utils
-    * library; contract at MetadataIngestionExecuter.java:56–62). Tolerates
-    * surrounding junk and whitespace (ref :96 uses trim()). */
-  def extractIsbn(zipName: String): Option[String] =
-    "(97[89][0-9]{10})".r.findFirstIn(zipName.trim)
 }

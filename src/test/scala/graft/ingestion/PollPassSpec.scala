@@ -64,9 +64,10 @@ class PollPassSpec extends SparkSpecBase {
     val in = books(scratch("hist-poll"), 300, 64)
     val (out, m) =
       Measure.during(spark)(MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2))
-    // the keys-only gate lookup, the cut, the three appends and the
-    // dead-letter anti-join's read of the prior dead letters
-    assert(m.jobs <= 6, s"a 64-ZIP poll against history ran ${m.jobs} jobs, bound 6")
+    // the one keys-only lookup (the three gates and the recorded dead
+    // letters), the cut and the three appends; a second read of the
+    // dead-letter zone (an anti-join at the sink) fails it
+    assert(m.jobs <= 5, s"a 64-ZIP poll against history ran ${m.jobs} jobs, bound 5")
     assert(out.counts(MetadataPipeline.Counts.Workflow) === 64)
     assert(isbns(wh, Zone.Workflow).size === 364)
   }
@@ -138,8 +139,8 @@ class PollPassSpec extends SparkSpecBase {
     val clean = scratch("dlfail-clean")
     MetadataPipeline.runBatch(spark, IngestionConfig(in, clean), ts1)
     val wh = scratch("dlfail-wh")
-    // a plain file where the dead-letter table goes: its read and its
-    // append both fail
+    // a plain file where the dead-letter table goes: it holds no recorded
+    // dead letters, and the append into it fails
     put(wh, Zone.DeadLetter, "not a parquet table".getBytes("UTF-8"))
     intercept[Exception](MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1))
     assert(isbns(wh, Zone.Workflow) === isbns(clean, Zone.Workflow))
@@ -205,6 +206,7 @@ class PollPassSpec extends SparkSpecBase {
     assert(out.counts(C.Workflow) === out.newWorkflow.count())
     assert(out.counts(C.DeadLetter) === 5)
     assert(out.counts(C.DeadLetter) === out.deadLetter.count())
+    assert(out.counts(C.DeadLetterAppended) === 5)
     val byGate = out.skipped.groupBy("gate").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     C.Gates.foreach(g => assert(out.counts(g) === byGate.getOrElse(g, 0L), g))
@@ -216,7 +218,43 @@ class PollPassSpec extends SparkSpecBase {
     // (what the count reports), but appends none of them again
     val again = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2)
     assert(again.counts(C.DeadLetter) === 5)
+    assert(again.counts(C.DeadLetterAppended) === 0)
     assert(spark.read.parquet(s"$wh/${Zone.DeadLetter}").count() === 5)
+  }
+
+  test("a ZIP whose error code changes between polls appends one dead letter per code") {
+    val in = scratch("recode-in")
+    val wh = scratch("recode-wh")
+    val cfg = IngestionConfig(in, wh)
+    val b = Fixtures.books.find(_.isbn == Fixtures.IsbnFresh1).get
+    val name = Fixtures.zipName(b)
+    def dl = spark.read.parquet(s"$wh/${Zone.DeadLetter}").collect()
+      .map(r => (r.getAs[String]("zip_name"), r.getAs[String]("error_code"))).toSeq.sorted
+    put(in, name, Array[Byte](1, 2, 3)) // not a ZIP
+    MetadataPipeline.runBatch(spark, cfg, ts1)
+    assert(dl === Seq((name, ErrorCode.ExtractZip)))
+    put(in, name, Fixtures.zipOf(b.copy(genre = "Cooking")))
+    MetadataPipeline.runBatch(spark, cfg, ts2)
+    val both = Seq((name, ErrorCode.ExtractZip), (name, ErrorCode.InvalidGenre)).sorted
+    assert(dl === both)
+    // the same code again: the pair is recorded, nothing is appended
+    MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert(dl === both)
+  }
+
+  test("file:// warehouse and input URIs: a re-run gates every uploaded ZIP, appends nothing") {
+    val in = "file://" + Fixtures.writeCorpus(scratch("uri-in"))
+    val wh = "file://" + scratch("uri-wh")
+    val cfg = IngestionConfig(in, wh)
+    val C = MetadataPipeline.Counts
+    def rows(z: String) = spark.read.parquet(s"$wh/$z").count()
+    val first = MetadataPipeline.runBatch(spark, cfg, ts1)
+    assert(first.counts(C.Workflow) === 6)
+    assert(first.counts(C.DeadLetter) === 5)
+    val again = MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert(again.counts(C.Workflow) === 0)
+    assert(again.counts(SkipGate.AlreadyUploaded) === 6)
+    assert((rows(Zone.Workflow), rows(Zone.Raw), rows(Zone.DeadLetter)) === ((6L, 6L, 5L)))
   }
 
   test("a key repeated in history gates a polled ZIP once, never duplicates it") {

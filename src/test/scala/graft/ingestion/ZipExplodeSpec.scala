@@ -19,6 +19,11 @@ class ZipExplodeSpec extends SparkSpecBase {
     assert(rows.forall(_.zip_name == Fixtures.zipName(book)))
     val bookRow = rows.find(_.record_key == book.isbn).get
     assert(graft.functions.udfs.parseProperties(bookRow.bytes) === Fixtures.bookProps(book))
+    // keyed as the pipeline keys a ZIP: spaces trimmed, a backslash kept
+    val odd = ZipExplode.explodeOne(s"/in/  old\\${Fixtures.zipName(book)} ",
+      Fixtures.zipOf(book))
+    assert(odd.map(r => (r.zip_name, r.isbn)).distinct ===
+      Seq((s"old\\${Fixtures.zipName(book)}", book.isbn)))
   }
 
   test("corrupt or empty archives produce a single EXTRACT_ZIP error row") {
@@ -28,11 +33,11 @@ class ZipExplodeSpec extends SparkSpecBase {
     assert(empty.map(_.error) === Seq(Some(ErrorCode.ExtractZip)))
   }
 
-  test("extractIsbn finds the 978/979 run and tolerates junk") {
-    assert(ZipExplode.extractIsbn("book-9780306406157.zip").contains("9780306406157"))
-    assert(ZipExplode.extractIsbn("  9790000000000-x.zip ").contains("9790000000000"))
-    assert(ZipExplode.extractIsbn("nothing-here.zip").isEmpty)
-    assert(ZipExplode.extractIsbn("97803064061.zip").isEmpty) // too short
+  test("isbnOf finds the 978/979 run and tolerates junk") {
+    assert(MetadataPipeline.isbnOf("book-9780306406157.zip") === "9780306406157")
+    assert(MetadataPipeline.isbnOf("  9790000000000-x.zip ") === "9790000000000")
+    assert(MetadataPipeline.isbnOf("nothing-here.zip") === "")
+    assert(MetadataPipeline.isbnOf("97803064061.zip") === "") // too short
   }
 
   test("the Spark flatMap path matches explodeOne") {

@@ -147,6 +147,16 @@ class CurateCliSpec extends SparkSpecBase {
     assert(e.getMessage.contains("different run"))
   }
 
+  test("an outDir fingerprinted before the settings became a fixed constant still resumes") {
+    val in = writeDocs(fixture().take(3), scratch("curate_fpold_in"))
+    val out = scratch("curate_fpold_out")
+    // the fingerprint an earlier build wrote for these settings: the
+    // settings' hash is unchanged, so this run is taken as the same run
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "_graft_run.json"),
+      s"""{"in":"$in","prior":"","cfg":-334353474}""" + "\n")
+    assert(CurateCli.run(spark, in, out).toMap.apply("01_exact") === 3L)
+  }
+
   test("release audit FAILS on doctored output — an audit that cannot fail is not an audit") {
     val s = spark
     import s.implicits._
