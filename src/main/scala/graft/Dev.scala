@@ -102,7 +102,8 @@ object Dev {
   }
 
   /** Three views of one measured run: the stage table (costliest 40 by
-    * task time), the per-micro-batch `durationMs` breakdown, and one row
+    * task time; its totals line counts jobs, stages and generated-code
+    * compiles), the per-micro-batch `durationMs` breakdown, and one row
     * per state operator per micro-batch (rows in state, updated, removed,
     * update, removal and commit ms). */
   private def report(m: Measured, wallS: Double): Unit = {
@@ -114,7 +115,7 @@ object Dev {
         f"${r.inputBytes}%10d ${r.tasks}%5d  ${r.name.take(60)}")
     }
     println(f"[prof] total taskMs=${m.taskMs} " +
-      f"jobWallMs=${m.jobWallMs} jobs=${m.jobs} stages=${m.stages.size}")
+      f"jobWallMs=${m.jobWallMs} jobs=${m.jobs} stages=${m.stages.size} compiles=${m.compiles}")
 
     val evs = m.progress
     if (evs.isEmpty) println("[prof] streaming: no micro-batches in this run")

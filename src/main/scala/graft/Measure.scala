@@ -3,16 +3,20 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.GraftBusFlush
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** What one measured unit of work did: its wall seconds, the Spark jobs
-  * it started (count and summed job wall), one row per stage it ran, and
-  * the streaming progress its queries reported (see [[Measure.StreamListener]]). */
+  * it started (count and summed job wall), one row per stage it ran, the
+  * streaming progress its queries reported (see [[Measure.StreamListener]])
+  * and the generated-code classes compiled meanwhile (JVM-wide: Spark's
+  * `CodegenMetrics` count every session's compiles). */
 final case class Measured(wallS: Double, jobs: Int, jobWallMs: Long,
                           stages: Seq[Measured.Stage],
-                          progress: Seq[StreamingQueryProgress]) {
+                          progress: Seq[StreamingQueryProgress],
+                          compiles: Long = 0L) {
   def taskMs: Long = stages.map(_.taskMs).sum
   def shuffleReadBytes: Long = stages.map(_.shuffleReadBytes).sum
   def shuffleWriteBytes: Long = stages.map(_.shuffleWriteBytes).sum
@@ -44,15 +48,19 @@ object Measure {
     val l = new Listener
     sc.addSparkListener(l)
     try {
+      val c0 = compiled
       val t0 = System.nanoTime()
       val out = body
       GraftBusFlush.flush(sc)
       val wallS = (System.nanoTime() - t0) / 1e9
       val evs = mutable.ArrayBuffer.empty[StreamingQueryProgress]
       progress.forEach(evs += _)
-      (out, l.result(wallS, evs.toSeq))
+      (out, l.result(wallS, evs.toSeq).copy(compiles = compiled - c0))
     } finally sc.removeSparkListener(l)
   }
+
+  /** Generated-code classes compiled in this JVM so far. */
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private final class Listener extends SparkListener {
     private final class Stage(val id: Int) {

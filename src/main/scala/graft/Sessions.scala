@@ -14,7 +14,12 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong` so parquet TIMESTAMP(NANOS) columns load as epoch-nano
   *    longs instead of throwing (Spark has no nanos timestamp); TsNorm then
   *    normalizes that long — or a TIMESTAMP / TIMESTAMP_NTZ column, the
-  *    other encodings fixtures arrive in — at the loader boundary.
+  *    other encodings fixtures arrive in — at the loader boundary;
+  *  - parallel file listing at one task per core (the shuffle-partition
+  *    count), NOT the 10,000 default: a listing of more than 32 paths —
+  *    each micro-batch of a file stream source past 32 files lists its
+  *    files again — runs as a Spark job, which otherwise gets one task per
+  *    path. It stays a distributed job on a cluster.
   */
 object Sessions {
   /** Effective local core count — `$SPARK_GRAFT_CPUS`, default the
@@ -35,6 +40,8 @@ object Sessions {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

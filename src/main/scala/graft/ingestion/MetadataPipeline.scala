@@ -63,12 +63,14 @@ import model._
   * appended (and counted as appended). No other read of that zone runs.
   * The dead-letter append runs beside the raw → workflow chain; dead
   * letters never gate, so a crash still leaves the gates only raw, or
-  * raw + workflow. Not
-  * `persist()`: the raw append's `recacheByPath` refreshes any CACHED plan
-  * reading the raw zone, so a persisted fates frame would be recomputed
-  * against the just-written raw zone and gate every fresh ZIP
-  * ALREADY_UPLOADED before the workflow append. A cut is a fresh RDD leaf
-  * with no file index to refresh.
+  * raw + workflow. A cut, not `persist()`: the cut runs the kernel as its
+  * own job at scan parallelism, before the writes coalesce their input to
+  * a few partitions (a persisted frame would run the kernel inside the
+  * first, coalesced write), and its blocks are freed in `finally` once
+  * the appends are done. The poll's ingest timestamp travels in the fates'
+  * rows, not as a literal in the sink projections: Spark inlines a
+  * timestamp literal into the generated Java, so a literal would make
+  * every poll compile its projections again.
   *
   * Transactionality (A19): the reference runs each ZIP in REQUIRES_NEW and
   * rolls back the upload when extraction/validation throws — so only fully
@@ -190,12 +192,13 @@ object MetadataPipeline {
     * for an unreadable archive or a malformed `.properties` entry (ref
     * :155–158; `Properties.load` throws on a bad `\uXXXX`), else
     * MISSING_BOOK_METADATA, else INVALID_GENRE — or ok with the book's
-    * props and all_metadata. Entries sharing a basename keep the last in
-    * archive order (the reference's `HashMap.put`, ref :146–150). */
+    * props and all_metadata, stamped `ingestTs`. Entries sharing a basename
+    * keep the last in archive order (the reference's `HashMap.put`, ref
+    * :146–150). */
   def zipFate(path: String, content: Array[Byte], zipName: String, isbn: String,
-              genres: Set[String]): ZipFate = {
+              genres: Set[String], ingestTs: Timestamp): ZipFate = {
     def dead(code: String, msg: String) =
-      ZipFate(zipName, isbn, Fate.Dead, code, msg + zipName, null, null, null)
+      ZipFate(zipName, isbn, Fate.Dead, code, msg + zipName, null, null, null, ingestTs)
     val entries = ZipExplode.explodeOne(path, content)
     val records =
       if (entries.exists(_.error.isDefined)) None
@@ -208,7 +211,8 @@ object MetadataPipeline {
         // a missing Genre key is null ≙ Properties.getProperty → invalid
         case Some(book) if !book.get(PropKey.Genre).exists(genres) =>
           dead(ErrorCode.InvalidGenre, "invalid genre in metadata ZIP ")
-        case Some(book) => ZipFate(zipName, isbn, Fate.Ok, null, null, content, book, all)
+        case Some(book) =>
+          ZipFate(zipName, isbn, Fate.Ok, null, null, content, book, all, ingestTs)
       }
     }
   }
@@ -315,10 +319,11 @@ object MetadataPipeline {
     * `{`), it reads each of the batch's other files twice (never a file
     * outside the batch). A path without a verdict, or read outside the
     * partitions the driver saw, fails the task: the verdicts were decided
-    * over a different scan. */
+    * over a different scan. Every row carries `ingestTs` as a value, so
+    * the plans over this frame hold no per-poll literal. */
   private def fates(spark: SparkSession, zips: DataFrame,
                     decided: Broadcast[Map[String, Verdict]],
-                    cfg: IngestionConfig): DataFrame = {
+                    cfg: IngestionConfig, ingestTs: Timestamp): DataFrame = {
     import spark.implicits._
     val genres = cfg.genres.toSet
     zips.select("path", "content").as[(String, Array[Byte])]
@@ -336,12 +341,13 @@ object MetadataPipeline {
           v.code match {
             case _ if !first =>
               ZipFate(v.zipName, v.isbn, Fate.Skip, SkipGate.DuplicateInBatch,
-                null, null, null, null)
-            case null => zipFate(path, content, v.zipName, v.isbn, genres)
+                null, null, null, null, ingestTs)
+            case null => zipFate(path, content, v.zipName, v.isbn, genres, ingestTs)
             case ErrorCode.MissingIsbn =>
               ZipFate(v.zipName, v.isbn, Fate.Dead, ErrorCode.MissingIsbn,
-                s"no valid ISBN-13 in ZIP filename ${v.zipName}", null, null, null)
-            case gate => ZipFate(v.zipName, v.isbn, Fate.Skip, gate, null, null, null, null)
+                s"no valid ISBN-13 in ZIP filename ${v.zipName}", null, null, null, ingestTs)
+            case gate =>
+              ZipFate(v.zipName, v.isbn, Fate.Skip, gate, null, null, null, null, ingestTs)
           }
         }
       }
@@ -349,8 +355,7 @@ object MetadataPipeline {
   }
 
   /** The four outputs as filters/projections of a fates frame. */
-  private def outputOf(fates: DataFrame, cfg: IngestionConfig,
-                       ingestTs: Timestamp): PipelineOutput = {
+  private def outputOf(fates: DataFrame, cfg: IngestionConfig): PipelineOutput = {
     val ok = fates.filter(col("fate") === Fate.Ok)
     // try_element_at ≙ Properties.getProperty null-on-missing (ref
     // :231–236): absent keys project as null instead of throwing under
@@ -358,7 +363,7 @@ object MetadataPipeline {
     def prop(key: String) = try_element_at(col("book"), lit(key))
     PipelineOutput(
       // A12 + A19: only fully successful ZIPs persist to the raw zone.
-      newRaw = ok.select(col("zip_name"), col("content"), lit(ingestTs).as("ingest_ts")),
+      newRaw = ok.select(col("zip_name"), col("content"), col("ingest_ts")),
       // A13: the typed projection of the 15 process variables (ref :222–245).
       newWorkflow = ok.select(
         col("isbn"),
@@ -368,7 +373,7 @@ object MetadataPipeline {
         prop(PropKey.Authors).as("book_authors"),
         prop(PropKey.NrOfChapters).as("nr_of_chapters"),
         prop(PropKey.NrOfPages).as("nr_of_pages"),
-        lit(ingestTs).as("publishing_date"),
+        col("ingest_ts").as("publishing_date"),
         lit(false).as("content_found"),
         lit(false).as("content_error_found"),
         lit(false).as("metadata_chapter_matching_ok"),
@@ -377,7 +382,7 @@ object MetadataPipeline {
         lit(cfg.wait2Check4ContentTimerDuration).as("wait_2_check_content_timer_duration"),
         col("all_metadata")),
       deadLetter = fates.filter(col("fate") === Fate.Dead).select(col("zip_name"),
-        col("code").as("error_code"), col("message"), lit(ingestTs).as("ts")),
+        col("code").as("error_code"), col("message"), col("ingest_ts").as("ts")),
       skipped = fates.filter(col("fate") === Fate.Skip)
         .select(col("zip_name"), col("isbn"), col("code").as("gate")))
   }
@@ -392,7 +397,7 @@ object MetadataPipeline {
               cfg: IngestionConfig, ingestTs: Timestamp): PipelineOutput = {
     val (decided, _) =
       verdicts(state, emptyDf(spark, deadLetterSchema), GraftScanFiles.of(zips))
-    outputOf(fates(spark, zips, spark.sparkContext.broadcast(decided), cfg), cfg, ingestTs)
+    outputOf(fates(spark, zips, spark.sparkContext.broadcast(decided), cfg, ingestTs), cfg)
   }
 
   /** One batch pass (A20 ≙ the JMX manual trigger / CLI one-shot): read
@@ -401,19 +406,22 @@ object MetadataPipeline {
     * re-run of the same input is a no-op across ALL sinks — the A9–A11
     * invariant run(run(x)) == run(x). */
   def runBatch(spark: SparkSession, cfg: IngestionConfig,
-               ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput =
-    ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
+               ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput = {
+    val (counts, fatesAgain) = ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
+    outputOf(fatesAgain(), cfg).copy(counts = counts)
+  }
 
   /** The sink path both modes share: read gate state, then take the poll's
     * files from its scan (`zips` is by-name and bound once, after the state
     * is read), decide their verdicts and look up the dead letters already
     * recorded under the poll's zip_names (one lookup), compute the fates in
     * one pass, cut them once and append from the cut: raw then workflow on
-    * this thread, and beside them the dead letters not recorded yet. The
-    * returned output is lazy over the same verdicts (the cut's blocks are
-    * released before it returns), with the counts observed on the pass. */
-  private def ingestPoll(spark: SparkSession, cfg: IngestionConfig,
-                         ingestTs: Timestamp)(zips: => DataFrame): PipelineOutput = {
+    * this thread, and beside them the dead letters not recorded yet.
+    * Returns the counts observed on the pass, and the fates frame again,
+    * built only when called (a micro-batch never calls it): lazy over the
+    * same verdicts, as the cut's blocks are released before this returns. */
+  private def ingestPoll(spark: SparkSession, cfg: IngestionConfig, ingestTs: Timestamp)(
+      zips: => DataFrame): (Map[String, Long], () => DataFrame) = {
     val state = readState(spark, cfg.warehouseDir)
     val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
     val polled = zips
@@ -422,7 +430,7 @@ object MetadataPipeline {
     val decided = spark.sparkContext.broadcast(verdict)
     val fate = col("fate")
     val dead = fate === Fate.Dead
-    val observed = fates(spark, polled, decided, cfg).observe(PollMetrics,
+    val observed = fates(spark, polled, decided, cfg, ingestTs).observe(PollMetrics,
       count(when(fate === Fate.Ok, 1)).as(Counts.Workflow),
       Seq(count(when(dead, 1)).as(Counts.DeadLetter),
         count(when(dead && unrecorded(recorded, col("code")), 1)).as(Counts.DeadLetterAppended)) ++
@@ -431,7 +439,7 @@ object MetadataPipeline {
     try {
       val sinkParts = math.max(1, math.ceil(files.map(_.length).sum.toDouble /
         GraftScanFiles.advisoryPartitionBytes(spark)).toInt)
-      val now = outputOf(cut.df.coalesce(sinkParts), cfg, ingestTs)
+      val now = outputOf(cut.df.coalesce(sinkParts), cfg)
       alongside(spark)(append(now.deadLetter.where(unrecorded(recorded, col("error_code"))),
         s"${cfg.warehouseDir}/${Zone.DeadLetter}")) {
         append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
@@ -440,13 +448,13 @@ object MetadataPipeline {
       }
     } finally {
       cut.release()
-      // the returned outputs run the map again: free the executors' copies
+      // the returned frame runs the map again: free the executors' copies
       // only, the driver keeps the value
       decided.unpersist()
     }
     val row = observed.queryExecution.observedMetrics(PollMetrics)
-    outputOf(fates(spark, polled, decided, cfg), cfg, ingestTs)
-      .copy(counts = row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap)
+    (row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap,
+      () => fates(spark, polled, decided, cfg, ingestTs))
   }
 
   /** Runs the dead-letter appends beside a poll's raw → workflow chain. */
@@ -486,7 +494,8 @@ object MetadataPipeline {
     * Trigger.AvailableNow (A20). Per micro-batch, `foreachBatch` re-reads
     * sink state and re-applies the gates before appending — the single
     * checkpointed query is the cluster lock (A17), and the in-batch
-    * re-check keeps restarts idempotent (A19).
+    * re-check keeps restarts idempotent (A19). A micro-batch builds no
+    * [[PipelineOutput]]: nothing reads it.
     *
     * Note: `workflow` state is read fresh inside every micro-batch, so an
     * ISBN ingested in batch N is gated out of batch N+1 without any

@@ -24,7 +24,8 @@ object model {
     * of [[Fate]]'s labels; `code` is the error code (Dead) or the gate
     * (Skip) and null when ok; `message` is set on dead letters only. Ok
     * rows carry the archive bytes for the raw zone, the book record's props
-    * and all_metadata (record_key → props); the other rows carry nulls. */
+    * and all_metadata (record_key → props); the other rows carry nulls.
+    * Every row carries the poll's ingest timestamp. */
   case class ZipFate(
       zip_name: String,
       isbn: String,
@@ -33,7 +34,8 @@ object model {
       message: String,
       content: Array[Byte],
       book: Map[String, String],
-      all_metadata: Map[String, Map[String, String]])
+      all_metadata: Map[String, Map[String, String]],
+      ingest_ts: java.sql.Timestamp)
 
   object Fate {
     val Ok = "OK"

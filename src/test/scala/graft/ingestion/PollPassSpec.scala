@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.{Measure, SparkSpecBase}
 import model._
@@ -70,6 +71,71 @@ class PollPassSpec extends SparkSpecBase {
     assert(m.jobs <= 5, s"a 64-ZIP poll against history ran ${m.jobs} jobs, bound 5")
     assert(out.counts(MetadataPipeline.Counts.Workflow) === 64)
     assert(isbns(wh, Zone.Workflow).size === 364)
+  }
+
+  // timestamps no other test uses: generated code compiled for a plan
+  // holding one of them as a literal cannot be cached from an earlier test
+  private def freshTs(minute: Int) = new Timestamp(1767398400000L + minute * 60000L)
+
+  test("a second runBatch with a new ingest timestamp compiles no generated code") {
+    val in = books(scratch("codegen-in"), 0, 16)
+    MetadataPipeline.runBatch(spark, IngestionConfig(in, scratch("codegen-wh1")), freshTs(1))
+    val (out, m) = Measure.during(spark)(
+      MetadataPipeline.runBatch(spark, IngestionConfig(in, scratch("codegen-wh2")), freshTs(2)))
+    assert(out.counts(MetadataPipeline.Counts.Workflow) === 16)
+    // the timestamp is a value in the fates' rows; as a plan literal it is
+    // inlined into the sink projections' Java, which then compiles again
+    assert(m.compiles === 0, s"the second poll compiled ${m.compiles} classes")
+  }
+
+  test("a 64-ZIP AvailableNow micro-batch runs no stage with more tasks than cores") {
+    val in = books(scratch("mb-in"), 0, 64)
+    val wh = scratch("mb-wh")
+    val (_, m) = Measure.during(spark)(MetadataPipeline.runStream(spark,
+      IngestionConfig(in, wh), ingestTs = Some(freshTs(3))).awaitTermination())
+    assert(isbns(wh, Zone.Workflow).size === 64)
+    val cores = spark.sparkContext.defaultParallelism
+    // the file stream source lists the batch's 64 files again in a Spark
+    // job; at the default listing parallelism that job has a task per file
+    val wide = m.stages.filter(_.tasks > cores)
+    assert(wide.isEmpty, s"stages with more than $cores tasks: $wide")
+  }
+
+  test("a second micro-batch against history, with a new ingest timestamp, compiles nothing") {
+    val in = scratch("mbc-in")
+    val wh = scratch("mbc-wh")
+    def land(wave: Int): Unit = books(in, 64 * wave, 64)
+    // one query throughout: Spark keys its generated-code cache by the
+    // thread's class loader, and a new streaming query compiles afresh.
+    // Each micro-batch stamps its own ingest timestamp. A wave lands just
+    // after a trigger that found nothing new, so the next trigger, a
+    // second away, sees the whole wave
+    val q = MetadataPipeline.runStream(spark, IngestionConfig(in, wh),
+      Trigger.ProcessingTime("1 second"))
+    try {
+      q.processAllAvailable()
+      land(0); q.processAllAvailable() // into an empty warehouse
+      land(1); q.processAllAvailable() // the first poll against history
+      val (_, m) = Measure.during(spark) { land(2); q.processAllAvailable() }
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq === Seq(64, 64, 64))
+      assert(isbns(wh, Zone.Workflow).size === 192)
+      assert(m.compiles === 0, s"the third micro-batch compiled ${m.compiles} classes")
+    } finally q.stop()
+  }
+
+  test("the poll's ingest timestamp is what raw, workflow and dead-letter zones hold") {
+    val in = Fixtures.writeCorpus(scratch("ts-in"))
+    val wh = scratch("ts-wh")
+    MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
+    def values(z: String, c: String): Seq[Any] =
+      spark.read.parquet(s"$wh/$z").select(c).collect().map(_.get(0)).toSeq
+    val raw = values(Zone.Raw, "ingest_ts")
+    val published = values(Zone.Workflow, "publishing_date")
+    val years = values(Zone.Workflow, "pub_year")
+    val dl = values(Zone.DeadLetter, "ts")
+    assert((raw.size, published.size, dl.size) === ((6, 6, 5)))
+    (raw ++ published ++ dl).foreach(t => assert(t === ts1))
+    assert(years.toSet === Set(2026))
   }
 
   test("property: the driver's zip_name and ISBN equal the SQL derivation on random names") {
