@@ -8,12 +8,11 @@ import org.apache.spark.sql.functions.udaf
   * fixed-width long vectors, the one genuinely custom aggregate the engine
   * needs.
   *
-  * Used by the LLM-dedup operators ([[graft.queries.LlmOps]]):
-  *  - element-wise MIN reduces per-shingle hash vectors into a MinHash
-  *    signature (one row per shingle carrying all k hashes — no k-way row
-  *    blowup before the aggregate);
-  *  - element-wise SUM reduces per-shingle ±1 bit votes into SimHash bit
-  *    weights (again one row per shingle, not one row per (shingle, bit)).
+  * Used by the LLM-dedup operators ([[graft.queries.LlmOps]]): element-wise
+  * MIN reduces per-shingle hash vectors into a MinHash signature (one row
+  * per shingle carrying all k hashes — no k-way row blowup before the
+  * aggregate). SimHash bit weights need no custom aggregate:
+  * `NearDup.simhashPairs` sums the ±1 bit votes with built-in `sum`s.
   *
   * Scale: a single partial+final hash aggregate keyed on doc_id — the map
   * side pre-reduces each partition to one k-long buffer per key, so the
@@ -46,11 +45,5 @@ object VecAgg {
   def minVec(spark: SparkSession, k: Int): UserDefinedFunction = {
     import spark.implicits._
     udaf(new ElementWise(k, Long.MaxValue, math.min))
-  }
-
-  /** `array<bigint>` column aggregate: element-wise sum. */
-  def sumVec(spark: SparkSession, k: Int): UserDefinedFunction = {
-    import spark.implicits._
-    udaf(new ElementWise(k, 0L, _ + _))
   }
 }

@@ -26,8 +26,9 @@ object IngestCli {
         MetadataPipeline.runStream(spark, cfg, Trigger.AvailableNow())
           .awaitTermination()
       case _ =>
-        // counts observed on the poll's one pass: printing them runs no job
-        val n = MetadataPipeline.runBatch(spark, cfg).counts
+        // the poll returns the counts its one pass observed: printing them
+        // runs no job
+        val n = MetadataPipeline.runBatch(spark, cfg)
         val C = MetadataPipeline.Counts
         println(s"[ingest] workflow rows appended: ${n(C.Workflow)}")
         println(s"[ingest] dead-letter rows appended: ${n(C.DeadLetterAppended)} " +

@@ -55,7 +55,9 @@ import model._
   * Sink path ([[ingestPoll]]): the fates frame is materialized ONCE with
   * `Materialize.cut` and all three appends read that cut, coalesced to
   * about one advisory partition of polled bytes, so a poll scans each ZIP
-  * once and writes one file per sink for a small poll. A failed ZIP is
+  * once and writes one file per sink for a small poll; a sink it commits
+  * nothing to gets no append and no file. The poll returns the counts
+  * observed on that pass, and nothing runs the kernel again. A failed ZIP is
   * retried on every poll (see "Transactionality"), so a poll meets its old
   * dead letters as it meets its old uploads: the gates' keys lookup also
   * returns the (zip_name, error_code) pairs the dead-letter zone holds for
@@ -95,16 +97,13 @@ object MetadataPipeline {
   /** Existing sink state consulted by the idempotency gates (A9–A11). */
   case class PipelineState(raw: DataFrame, workflow: DataFrame, published: DataFrame)
 
-  /** One batch's outputs. `skipped` is observability for the gates (the
-    * reference only logs these, ref :184–207). `counts` are the poll's
-    * counts observed on its one written pass, keyed by [[Counts]]; empty
-    * from [[process]], whose outputs are lazy. */
+  /** [[process]]'s lazy outputs. `skipped` is observability for the gates
+    * (the reference only logs these, ref :184–207). */
   case class PipelineOutput(
-      newRaw: DataFrame, newWorkflow: DataFrame, deadLetter: DataFrame,
-      skipped: DataFrame, counts: Map[String, Long] = Map.empty)
+      newRaw: DataFrame, newWorkflow: DataFrame, deadLetter: DataFrame, skipped: DataFrame)
 
-  /** Keys of [[PipelineOutput.counts]]: ok fates (= workflow rows
-    * appended), dead letters of the poll, the dead-letter rows appended
+  /** Keys of the counts a poll returns ([[runBatch]]): ok fates (= workflow
+    * rows appended), dead letters of the poll, the dead-letter rows appended
     * (the ones not recorded yet), and skips per gate label. */
   object Counts {
     val Workflow = "workflow"
@@ -404,24 +403,23 @@ object MetadataPipeline {
     * state, process, append sinks. Only dead letters whose (zip_name,
     * error_code) the dead-letter zone does not hold yet are appended, so a
     * re-run of the same input is a no-op across ALL sinks — the A9–A11
-    * invariant run(run(x)) == run(x). */
+    * invariant run(run(x)) == run(x). Returns the counts observed on the
+    * poll's one pass, keyed by [[Counts]]. */
   def runBatch(spark: SparkSession, cfg: IngestionConfig,
-               ingestTs: Timestamp = new Timestamp(System.currentTimeMillis())): PipelineOutput = {
-    val (counts, fatesAgain) = ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
-    outputOf(fatesAgain(), cfg).copy(counts = counts)
-  }
+               ingestTs: Timestamp = new Timestamp(System.currentTimeMillis()))
+      : Map[String, Long] =
+    ingestPoll(spark, cfg, ingestTs)(readZips(spark, cfg.inputDir))
 
   /** The sink path both modes share: read gate state, then take the poll's
     * files from its scan (`zips` is by-name and bound once, after the state
     * is read), decide their verdicts and look up the dead letters already
     * recorded under the poll's zip_names (one lookup), compute the fates in
     * one pass, cut them once and append from the cut: raw then workflow on
-    * this thread, and beside them the dead letters not recorded yet.
-    * Returns the counts observed on the pass, and the fates frame again,
-    * built only when called (a micro-batch never calls it): lazy over the
-    * same verdicts, as the cut's blocks are released before this returns. */
+    * this thread, and beside them the dead letters not recorded yet; a
+    * zero-row append would still write a file, so a sink whose count is 0
+    * gets none. Returns the counts observed on the pass. */
   private def ingestPoll(spark: SparkSession, cfg: IngestionConfig, ingestTs: Timestamp)(
-      zips: => DataFrame): (Map[String, Long], () => DataFrame) = {
+      zips: => DataFrame): Map[String, Long] = {
     val state = readState(spark, cfg.warehouseDir)
     val priorDl = zone(spark, cfg.warehouseDir, Zone.DeadLetter, deadLetterSchema)
     val polled = zips
@@ -437,24 +435,28 @@ object MetadataPipeline {
         Counts.Gates.map(g => count(when(col("code") === g, 1)).as(g)): _*)
     val cut = Materialize.cut(observed)
     try {
+      // the eager cut ran the pass, so its metrics are filled
+      val row = observed.queryExecution.observedMetrics(PollMetrics)
+      val counts = row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap
       val sinkParts = math.max(1, math.ceil(files.map(_.length).sum.toDouble /
         GraftScanFiles.advisoryPartitionBytes(spark)).toInt)
       val now = outputOf(cut.df.coalesce(sinkParts), cfg)
-      alongside(spark)(append(now.deadLetter.where(unrecorded(recorded, col("error_code"))),
-        s"${cfg.warehouseDir}/${Zone.DeadLetter}")) {
-        append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
-        append(now.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
-          s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
+      alongside(spark) {
+        if (counts(Counts.DeadLetterAppended) > 0)
+          append(now.deadLetter.where(unrecorded(recorded, col("error_code"))),
+            s"${cfg.warehouseDir}/${Zone.DeadLetter}")
+      } {
+        if (counts(Counts.Workflow) > 0) {
+          append(now.newRaw, s"${cfg.warehouseDir}/${Zone.Raw}")
+          append(now.newWorkflow.withColumn("pub_year", year(col("publishing_date"))),
+            s"${cfg.warehouseDir}/${Zone.Workflow}", partitionBy = Seq("pub_year"))
+        }
       }
+      counts
     } finally {
       cut.release()
-      // the returned frame runs the map again: free the executors' copies
-      // only, the driver keeps the value
-      decided.unpersist()
+      decided.destroy()
     }
-    val row = observed.queryExecution.observedMetrics(PollMetrics)
-    (row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap,
-      () => fates(spark, polled, decided, cfg, ingestTs))
   }
 
   /** Runs the dead-letter appends beside a poll's raw → workflow chain. */
@@ -494,8 +496,7 @@ object MetadataPipeline {
     * Trigger.AvailableNow (A20). Per micro-batch, `foreachBatch` re-reads
     * sink state and re-applies the gates before appending — the single
     * checkpointed query is the cluster lock (A17), and the in-batch
-    * re-check keeps restarts idempotent (A19). A micro-batch builds no
-    * [[PipelineOutput]]: nothing reads it.
+    * re-check keeps restarts idempotent (A19).
     *
     * Note: `workflow` state is read fresh inside every micro-batch, so an
     * ISBN ingested in batch N is gated out of batch N+1 without any

@@ -25,16 +25,4 @@ class VecAggSpec extends SparkSpecBase {
     assert(got.keySet === want.keySet)
     want.foreach { case (g, m) => assert(got(g) === m, s"group $g") }
   }
-
-  test("sumVec == element-wise sum per group") {
-    val s = spark
-    import s.implicits._
-    val got = data.toDF("g", "v")
-      .groupBy(col("g")).agg(VecAgg.sumVec(spark, k)(col("v")).as("m"))
-      .as[(Int, Seq[Long])].collect().toMap
-    val want = data.groupBy(_._1).map { case (g, rows) =>
-      g -> (0 until k).map(i => rows.map(_._2(i)).sum)
-    }
-    want.foreach { case (g, m) => assert(got(g) === m, s"group $g") }
-  }
 }

@@ -24,19 +24,22 @@ class PipelineScaleSpec extends SparkSpecBase {
     }
     val wh = scratch("scale-wh")
     val t0 = System.nanoTime()
-    val out = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts)
+    val n = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts)
     val wfRows = spark.read.parquet(s"$wh/${model.Zone.Workflow}").count()
     val secs = (System.nanoTime() - t0) / 1e9
-    assert(out.deadLetter.count() === 0)
+    val C = MetadataPipeline.Counts
+    assert(n(C.DeadLetter) === 0)
+    assert(n(C.Workflow) === 300)
     assert(wfRows === 300)
     assert(spark.read.parquet(s"$wh/${model.Zone.Raw}").count() === 300)
     // generous CI bound; an O(N^2) explode/join would blow way past this
     assert(secs < 120, s"pipeline took $secs s for 300 ZIPs")
 
     // re-run: all 300 gated out, nothing appended
-    val out2 = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts)
-    assert(out2.newWorkflow.count() === 0)
-    assert(out2.skipped.count() === 300)
+    val n2 = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts)
+    assert(n2(C.Workflow) === 0)
+    assert(C.Gates.map(n2).sum === 300)
+    assert(n2(model.SkipGate.AlreadyUploaded) === 300)
   }
 
   private def F300(i: Int): Fixtures.Book =

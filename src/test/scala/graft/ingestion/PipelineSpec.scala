@@ -39,6 +39,8 @@ class PipelineSpec extends SparkSpecBase {
 
   private def table(wh: String, z: String) = spark.read.parquet(s"$wh/$z")
 
+  private val C = MetadataPipeline.Counts
+
   test("batch run routes every fixture to the right sink, twice-idempotent") {
     val in = Fixtures.writeCorpus(scratch("pipe-in"))
     val wh = scratch("pipe-wh")
@@ -86,16 +88,20 @@ class PipelineSpec extends SparkSpecBase {
 
     // second run: nothing changes anywhere (gates + idempotent dead letter)
     val wfCount1 = wf.count()
-    val out2 = MetadataPipeline.runBatch(spark, cfg, ts2)
-    assert(out2.newWorkflow.count() === 0)
-    assert(out2.newRaw.count() === 0)
+    val n2 = MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert(n2(C.Workflow) === 0)
     assert(table(wh, Zone.Workflow).count() === wfCount1)
     assert(table(wh, Zone.Raw).count() === 4) // 3 + gate seed
     assert(table(wh, Zone.DeadLetter).count() === 5)
-    // and the second run reports the fresh ISBNs as skipped by the gates
-    val skipped2 = out2.skipped.select("isbn", "gate").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(skipped2.contains((Fixtures.IsbnFresh1, SkipGate.AlreadyUploaded)))
+    assert((n2(C.DeadLetter), n2(C.DeadLetterAppended)) === ((5L, 0L)))
+    // and the second run reports the fresh ISBNs as skipped by the gates:
+    // the raw zone holds the 3 fresh ZIPs and the gate-1 seed by name, and
+    // gate 1 skipped exactly those 4
+    assert(rawMap.keySet.contains(s"book-${Fixtures.IsbnFresh1}.zip"))
+    assert(n2(SkipGate.AlreadyUploaded) === 4)
+    assert(n2(SkipGate.WorkflowExists) === 1)
+    assert(n2(SkipGate.IsbnFolderExists) === 1)
+    assert(n2(SkipGate.DuplicateInBatch) === 0)
   }
 
   test("two ZIPs with the same ISBN in one poll emit exactly one workflow row") {
@@ -107,19 +113,20 @@ class PipelineSpec extends SparkSpecBase {
     val bytes = Fixtures.zipOf(b)
     Files.write(Paths.get(in, s"book-${b.isbn}.zip"), bytes)
     Files.write(Paths.get(in, s"book-${b.isbn}-copy.zip"), bytes)
-    val out = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
-    assert(out.newWorkflow.count() === 1)
-    assert(out.newRaw.count() === 1)
-    // winner = first by zip_name; loser surfaces as a DUPLICATE_IN_BATCH
-    // skip (not WORKFLOW_EXISTS — no workflow row existed when it lost)
+    val n = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
+    assert(n(C.Workflow) === 1)
+    // winner = first by zip_name, the only ZIP in the raw zone; the loser
+    // surfaces as a DUPLICATE_IN_BATCH skip (not WORKFLOW_EXISTS — no
+    // workflow row existed when it lost)
     val raw = table(wh, Zone.Raw).select("zip_name").collect().map(_.getString(0))
     assert(raw === Array(s"book-${b.isbn}-copy.zip"))
-    val sk = out.skipped.select("zip_name", "gate").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    assert(sk === Array((s"book-${b.isbn}.zip", SkipGate.DuplicateInBatch)))
-    // re-poll: the loser is now gated by the REAL workflow state
-    val out2 = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2)
-    assert(out2.newWorkflow.count() === 0)
+    assert(C.Gates.map(g => g -> n(g)).toMap ===
+      C.Gates.map(_ -> 0L).toMap.updated(SkipGate.DuplicateInBatch, 1L))
+    // re-poll: the winner is gated by the raw zone, the loser by the REAL
+    // workflow state
+    val n2 = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2)
+    assert(n2(C.Workflow) === 0)
+    assert((n2(SkipGate.AlreadyUploaded), n2(SkipGate.WorkflowExists)) === ((1L, 1L)))
     assert(table(wh, Zone.Workflow).count() === 1)
   }
 

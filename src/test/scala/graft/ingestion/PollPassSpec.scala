@@ -3,6 +3,8 @@ package graft.ingestion
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,6 +19,7 @@ class PollPassSpec extends SparkSpecBase {
 
   private val ts1 = new Timestamp(1767225600000L) // 2026-01-01T00:00:00Z
   private val ts2 = new Timestamp(1767312000000L)
+  private val C = MetadataPipeline.Counts
 
   private def props(kv: Map[String, String]): Array[Byte] =
     kv.toSeq.sorted.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("ISO-8859-1")
@@ -30,6 +33,10 @@ class PollPassSpec extends SparkSpecBase {
 
   private def names(wh: String, z: String): Seq[String] =
     spark.read.parquet(s"$wh/$z").select("zip_name").collect().map(_.getString(0)).toSeq.sorted
+
+  /** The fates a poll's counts add up to: one per polled ZIP. */
+  private def fates(n: Map[String, Long]): Long =
+    n(C.Workflow) + n(C.DeadLetter) + C.Gates.map(n).sum
 
   /** `n` fresh books with serials from `from`, one ZIP each, in `dir`. */
   private def books(dir: String, from: Int, n: Int): String = {
@@ -45,16 +52,16 @@ class PollPassSpec extends SparkSpecBase {
   test("one poll over 300 ZIPs into an empty warehouse runs a bounded number of jobs") {
     val in = books(scratch("pass-in"), 0, 300)
     val wh = scratch("pass-wh")
-    val (out, m) =
+    val (n, m) =
       Measure.during(spark)(MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1))
-    val n = m.jobs
     // the bound is what the one-pass poll measures here: the kernel's cut
-    // and the three appends, no gate lookup against absent zones. A gate
-    // join or window (the earlier shape ran 7) or per-sink re-runs of the
-    // poll (21) fail it
-    assert(n <= 4, s"runBatch over 300 ZIPs ran $n jobs, bound 4")
-    assert(out.counts(MetadataPipeline.Counts.Workflow) === 300)
-    assert(out.counts(MetadataPipeline.Counts.DeadLetter) === 0)
+    // and the raw and workflow appends; no gate lookup against absent
+    // zones, and no dead-letter append when there are no dead letters. A
+    // gate join or window (the earlier shape ran 7), per-sink re-runs of
+    // the poll (21) or an empty append fail it
+    assert(m.jobs <= 3, s"runBatch over 300 ZIPs ran ${m.jobs} jobs, bound 3")
+    assert(n(C.Workflow) === 300)
+    assert(n(C.DeadLetter) === 0)
     assert(isbns(wh, Zone.Workflow).size === 300)
     assert(names(wh, Zone.Raw).size === 300)
   }
@@ -63,13 +70,14 @@ class PollPassSpec extends SparkSpecBase {
     val wh = scratch("hist-wh")
     MetadataPipeline.runBatch(spark, IngestionConfig(books(scratch("hist-in"), 0, 300), wh), ts1)
     val in = books(scratch("hist-poll"), 300, 64)
-    val (out, m) =
+    val (n, m) =
       Measure.during(spark)(MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2))
     // the one keys-only lookup (the three gates and the recorded dead
-    // letters), the cut and the three appends; a second read of the
-    // dead-letter zone (an anti-join at the sink) fails it
-    assert(m.jobs <= 5, s"a 64-ZIP poll against history ran ${m.jobs} jobs, bound 5")
-    assert(out.counts(MetadataPipeline.Counts.Workflow) === 64)
+    // letters), the cut and the raw and workflow appends (no dead letters,
+    // so no dead-letter append); a second read of the dead-letter zone (an
+    // anti-join at the sink) fails it
+    assert(m.jobs <= 4, s"a 64-ZIP poll against history ran ${m.jobs} jobs, bound 4")
+    assert(n(C.Workflow) === 64)
     assert(isbns(wh, Zone.Workflow).size === 364)
   }
 
@@ -80,9 +88,9 @@ class PollPassSpec extends SparkSpecBase {
   test("a second runBatch with a new ingest timestamp compiles no generated code") {
     val in = books(scratch("codegen-in"), 0, 16)
     MetadataPipeline.runBatch(spark, IngestionConfig(in, scratch("codegen-wh1")), freshTs(1))
-    val (out, m) = Measure.during(spark)(
+    val (n, m) = Measure.during(spark)(
       MetadataPipeline.runBatch(spark, IngestionConfig(in, scratch("codegen-wh2")), freshTs(2)))
-    assert(out.counts(MetadataPipeline.Counts.Workflow) === 16)
+    assert(n(C.Workflow) === 16)
     // the timestamp is a value in the fates' rows; as a plan literal it is
     // inlined into the sink projections' Java, which then compiles again
     assert(m.compiles === 0, s"the second poll compiled ${m.compiles} classes")
@@ -182,8 +190,8 @@ class PollPassSpec extends SparkSpecBase {
     files.foreach { case (name, b) => put(in, name, Fixtures.zipOf(b)) }
     put(in, "[no isbn] 100%.zip", Fixtures.zipOf(bks.head))
     val whB = scratch("odd-wh-batch")
-    val out = MetadataPipeline.runBatch(spark, IngestionConfig(in, whB), ts1)
-    assert(out.counts(MetadataPipeline.Counts.Workflow) === odd.size)
+    val n = MetadataPipeline.runBatch(spark, IngestionConfig(in, whB), ts1)
+    assert(n(C.Workflow) === odd.size)
     assert(isbns(whB, Zone.Workflow) === bks.map(_.isbn).sorted)
     assert(names(whB, Zone.Raw) === files.map(f => MetadataPipeline.zipNameOf(f._1)).sorted)
     val dl = spark.read.parquet(s"$whB/${Zone.DeadLetter}").collect()
@@ -265,26 +273,31 @@ class PollPassSpec extends SparkSpecBase {
       .write.parquet(s"$wh/${Zone.Published}")
     put(in, s"book-${Fixtures.IsbnFresh1}-copy.zip",
       Fixtures.zipOf(Fixtures.books.find(_.isbn == Fixtures.IsbnFresh1).get))
-    val out = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
-    val C = MetadataPipeline.Counts
-    // gate 2 is unseeded here, so IsbnGate2 is fresh: 4 workflow rows
-    assert(out.counts(C.Workflow) === 4)
-    assert(out.counts(C.Workflow) === out.newWorkflow.count())
-    assert(out.counts(C.DeadLetter) === 5)
-    assert(out.counts(C.DeadLetter) === out.deadLetter.count())
-    assert(out.counts(C.DeadLetterAppended) === 5)
-    val byGate = out.skipped.groupBy("gate").count().collect()
+    val cfg = IngestionConfig(in, wh)
+    // the same poll as process's lazy frames over the pre-poll state,
+    // evaluated before the poll writes anything
+    val pre = MetadataPipeline.process(spark, MetadataPipeline.readZips(spark, in),
+      MetadataPipeline.readState(spark, wh), cfg, ts1)
+    val (wfRows, dlRows) = (pre.newWorkflow.count(), pre.deadLetter.count())
+    val byGate = pre.skipped.groupBy("gate").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    C.Gates.foreach(g => assert(out.counts(g) === byGate.getOrElse(g, 0L), g))
-    assert(out.counts(SkipGate.AlreadyUploaded) === 1)
-    assert(out.counts(SkipGate.IsbnFolderExists) === 1)
-    assert(out.counts(SkipGate.DuplicateInBatch) === 1)
+    val n = MetadataPipeline.runBatch(spark, cfg, ts1)
+    // gate 2 is unseeded here, so IsbnGate2 is fresh: 4 workflow rows
+    assert(n(C.Workflow) === 4)
+    assert(n(C.Workflow) === wfRows)
+    assert(n(C.DeadLetter) === 5)
+    assert(n(C.DeadLetter) === dlRows)
+    assert(n(C.DeadLetterAppended) === 5)
+    C.Gates.foreach(g => assert(n(g) === byGate.getOrElse(g, 0L), g))
+    assert(n(SkipGate.AlreadyUploaded) === 1)
+    assert(n(SkipGate.IsbnFolderExists) === 1)
+    assert(n(SkipGate.DuplicateInBatch) === 1)
     assert(isbns(wh, Zone.Workflow).size === 4)
     // a second poll over the same files finds the same 5 dead letters
     // (what the count reports), but appends none of them again
-    val again = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts2)
-    assert(again.counts(C.DeadLetter) === 5)
-    assert(again.counts(C.DeadLetterAppended) === 0)
+    val again = MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert(again(C.DeadLetter) === 5)
+    assert(again(C.DeadLetterAppended) === 0)
     assert(spark.read.parquet(s"$wh/${Zone.DeadLetter}").count() === 5)
   }
 
@@ -312,15 +325,35 @@ class PollPassSpec extends SparkSpecBase {
     val in = "file://" + Fixtures.writeCorpus(scratch("uri-in"))
     val wh = "file://" + scratch("uri-wh")
     val cfg = IngestionConfig(in, wh)
-    val C = MetadataPipeline.Counts
     def rows(z: String) = spark.read.parquet(s"$wh/$z").count()
     val first = MetadataPipeline.runBatch(spark, cfg, ts1)
-    assert(first.counts(C.Workflow) === 6)
-    assert(first.counts(C.DeadLetter) === 5)
+    assert(first(C.Workflow) === 6)
+    assert(first(C.DeadLetter) === 5)
     val again = MetadataPipeline.runBatch(spark, cfg, ts2)
-    assert(again.counts(C.Workflow) === 0)
-    assert(again.counts(SkipGate.AlreadyUploaded) === 6)
+    assert(again(C.Workflow) === 0)
+    assert(again(SkipGate.AlreadyUploaded) === 6)
     assert((rows(Zone.Workflow), rows(Zone.Raw), rows(Zone.DeadLetter)) === ((6L, 6L, 5L)))
+  }
+
+  test("a re-poll of an unchanged input writes no file to any zone") {
+    val in = Fixtures.writeCorpus(scratch("repoll-in"))
+    val wh = scratch("repoll-wh")
+    val cfg = IngestionConfig(in, wh)
+    def files(): Seq[String] = {
+      val walk = Files.walk(Paths.get(wh))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(Paths.get(wh).relativize(_).toString).toSeq.sorted
+      finally walk.close()
+    }
+    val first = MetadataPipeline.runBatch(spark, cfg, ts1)
+    assert((first(C.Workflow), first(C.DeadLetterAppended)) === ((6L, 5L)))
+    val written = files()
+    Seq(Zone.Raw, Zone.Workflow, Zone.DeadLetter).foreach(z =>
+      assert(written.exists(_.startsWith(s"$z/")), z))
+    // nothing to commit: every ok ZIP is gated, every dead letter recorded
+    val again = MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert((again(C.Workflow), again(C.DeadLetterAppended)) === ((0L, 0L)))
+    assert(files() === written)
   }
 
   test("a key repeated in history gates a polled ZIP once, never duplicates it") {
@@ -335,11 +368,10 @@ class PollPassSpec extends SparkSpecBase {
       .toDF("zip_name", "content", "ingest_ts").write.parquet(s"$wh/${Zone.Raw}")
     Seq((b.isbn, 2024), (b.isbn, 2025)).toDF("isbn", "year")
       .write.parquet(s"$wh/${Zone.Published}")
-    val out = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
-    val sk = out.skipped.select("zip_name", "gate").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(sk === Seq((Fixtures.zipName(b), SkipGate.AlreadyUploaded)))
-    assert(out.counts(SkipGate.AlreadyUploaded) === 1)
+    val n = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
+    // the one polled ZIP has one fate, gate 1's
+    assert(fates(n) === 1)
+    assert(n(SkipGate.AlreadyUploaded) === 1)
   }
 
   test("two entries with one basename keep the last; the poll's other books survive") {
@@ -363,8 +395,8 @@ class PollPassSpec extends SparkSpecBase {
     assert(meta.keySet === Set(dup.isbn, "chapter01"))
     assert(meta("chapter01") === Map("ChapterTitle" -> "Archived"))
     // re-poll: both are now known, nothing is lost or re-appended
-    val out2 = MetadataPipeline.runBatch(spark, cfg, ts2)
-    assert(out2.counts(SkipGate.AlreadyUploaded) === 2)
+    val n2 = MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert(n2(SkipGate.AlreadyUploaded) === 2)
     assert(isbns(wh, Zone.Workflow) === Seq(good.isbn, dup.isbn).sorted)
   }
 
@@ -377,7 +409,7 @@ class PollPassSpec extends SparkSpecBase {
     put(in, Fixtures.zipName(bad), Fixtures.zipBytes(Seq(
       s"${bad.isbn}.txt" -> props(Fixtures.bookProps(bad)),
       "chapter01.txt" -> "ChapterTitle=Bad \\u12G4 escape\n".getBytes("ISO-8859-1"))))
-    val out = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
+    val n = MetadataPipeline.runBatch(spark, IngestionConfig(in, wh), ts1)
     assert(isbns(wh, Zone.Workflow) === Seq(good.isbn))
     assert(names(wh, Zone.Raw) === Seq(Fixtures.zipName(good)))
     val dl = spark.read.parquet(s"$wh/${Zone.DeadLetter}").collect()
@@ -385,7 +417,7 @@ class PollPassSpec extends SparkSpecBase {
         r.getAs[String]("message"))).toSeq
     assert(dl === Seq((Fixtures.zipName(bad), ErrorCode.ExtractZip,
       s"error extracting metadata ZIP ${Fixtures.zipName(bad)}")))
-    assert(out.counts(MetadataPipeline.Counts.DeadLetter) === 1)
+    assert(n(C.DeadLetter) === 1)
   }
 
   test("a file name with leading whitespace keys raw and workflow by one zip_name") {
@@ -398,9 +430,8 @@ class PollPassSpec extends SparkSpecBase {
     assert(isbns(wh, Zone.Workflow) === Seq(b.isbn))
     assert(names(wh, Zone.Raw) === Seq(Fixtures.zipName(b)))
     // re-poll: gate 1 (the raw zone) is the one that matches
-    val out2 = MetadataPipeline.runBatch(spark, cfg, ts2)
-    val sk = out2.skipped.select("zip_name", "gate").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(sk === Seq((Fixtures.zipName(b), SkipGate.AlreadyUploaded)))
+    val n2 = MetadataPipeline.runBatch(spark, cfg, ts2)
+    assert(fates(n2) === 1)
+    assert(n2(SkipGate.AlreadyUploaded) === 1)
   }
 }
